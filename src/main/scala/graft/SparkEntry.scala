@@ -4386,7 +4386,8 @@ object SparkEntry {
     * pin instead of silently voiding the exactness contract and making
     * the gate failure look like an operator bug.
     *
-    * CALIBRATION-ONLY configuration (registered in [[calibrationOnly]]):
+    * CALIBRATION-ONLY configuration (registered in
+    * `tools/calibration_only.json`):
     * the `accuracy > n` pin makes the GK sketch hold every value, so the
     * sketch tier deliberately costs MORE than the exact sort at scale
     * (28.8x at 100x, r11 sweep) — that is the pin working, not a
@@ -5047,7 +5048,8 @@ object SparkEntry {
   /** Co-purchase edges via grouped pair expansion: one aggregate
     * collects each order's (deduped, sorted) part set and pairs expand
     * narrowly in-array — measurably faster than the self-join spelling
-    * (EdgeBuildProbe: 1.14 vs 1.33 s at sf0.1, same 1.196M edges)
+    * (r10 same-JVM A/B, recorded in PLANS.md: 1.14 vs 1.33 s at sf0.1,
+    * same 1.196M edges)
     * because it replaces the SMJ sorts with one hash aggregate. The
     * per-order array is bounded by order size (single-digit for this
     * corpus shape); pair fan-out is the same k^2 either spelling pays.
@@ -5629,63 +5631,6 @@ object SparkEntry {
   // ===================================================================
   // Registry
   // ===================================================================
-
-  /** Queries whose registered configuration deliberately pins a
-    * calibration constant that does NOT scale (so the cheap DuckDB mirror
-    * stays evaluable / provably exact), each with the production-sized
-    * twin a 100 TB caller uses instead. Scale sweeps read the mirror file
-    * `tools/calibration_only.json` (spec-synced with this map) to
-    * adjudicate super-linear ratios on these rows as by-design: the
-    * GRADED scale numbers are the twins'. */
-  val calibrationOnly: Map[String, String] = Map(
-    "ann_ivf_topk" ->
-      ("fixed 16-centroid pin: probed lists grow linearly with the " +
-        "corpus by construction; production twin ann_ivf_scaled_topk"),
-    "ann_ivf_kmeans_topk" ->
-      ("fixed 16-centroid pin (see ann_ivf_topk); production twin " +
-        "ann_ivf_kmeans_scaled_topk"),
-    "q_value_histogram_approx" ->
-      ("GK exactness pin accuracy > n makes the sketch hold every value " +
-        "so the oracle can demand exact agreement; production twin " +
-        "q_value_histogram_bounded (fixed accuracy=1000 under the rank-" +
-        "contract gate)"),
-    "embedding_neardup_exact" ->
-      ("deliberate all-pairs brute-force recall arm, quadratic by " +
-        "contract and guarded by maxBroadcastRows; production twin " +
-        "embedding_neardup_lsh"))
-
-  /** Queries whose WORK GROWS FASTER THAN ROW COUNT by contract when the
-    * corpus is copy-amplified — the sweep's per-row ratio overstates them
-    * even though per-UNIT cost (per edge, per distinct value) holds or
-    * improves at scale. Each entry records the measured per-unit
-    * evidence; the `per-unit metric:` prefix is the machine-readable
-    * marker (CalibrationRegistrySpec enforces it). Scale sweeps read the
-    * mirror `tools/data_proportional.json` (spec-synced with this map),
-    * so the merger classifies super-20x ratios on these rows as
-    * data-proportional-by-contract instead of leaving them unannotated.
-    * Unlike [[calibrationOnly]] rows these ARE the production
-    * configurations — there is no twin, the workload itself is
-    * super-linear in copies (a 100x-copied purchase log really has 100x
-    * the co-purchase edges). */
-  val dataProportional: Map[String, String] = Map(
-    "q_part_pagerank" ->
-      ("per-unit metric: per-edge-iteration wall IMPROVES 3.9x at 100x " +
-        "(359M directed edge-iterations in 180.4s, BENCH_SCALE100_r13); " +
-        "distinct co-purchase edges measured to grow exactly 100x " +
-        "(1.196M -> 119.6M, stride-disjoint copies), so Theta(m*iters) " +
-        "work is 100x by contract"),
-    "q_part_triangles" ->
-      ("per-unit metric: per-wedge wall IMPROVES 2.5x at 100x " +
-        "(BENCH_SCALE100_r13); same measured 100x edge growth as " +
-        "q_part_pagerank, wedge count grows with m under the " +
-        "degree-ordered orientation"),
-    "q_profile_lineitem" ->
-      ("per-unit metric: per-distinct-value wall IMPROVES 3.8x at 100x " +
-        "(BENCH_SCALE100_r13); the exact n_distinct profile pushes " +
-        "6 columns x n rows through one distinct() exchange, " +
-        "data-proportional by contract; the bounded sketch tier " +
-        "(q_distinct_sketch_merged, 4.2x at 100x) is the fixed-cost " +
-        "alternative"))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q1_pricing" -> (q1Pricing _),

@@ -124,14 +124,11 @@ object PageRank {
       .select(col("node"), expr(rankExpr).as("rank_micros"))
     // node-sized materialization cuts the iters-deep lineage and lets the
     // persisted edge/node caches release deterministically
-    if (graft.util.PlanCapture.enabled) ranks
-    else {
-      val out = ranks.localCheckpoint(true)
-      e.unpersist()
-      withDeg.unpersist()
-      nodes.unpersist()
-      out
-    }
+    val out = ranks.localCheckpoint(true)
+    e.unpersist()
+    withDeg.unpersist()
+    nodes.unpersist()
+    out
   }
 
   /** Undirected convenience: symmetrize `u—v` pairs then rank.

@@ -74,7 +74,8 @@ object Triangles {
     *               reuses, so it costs one pipeline run, not two. (The r8
     *               spelling instead persisted the normalized edge
     *               relation `e` and counted that; a same-JVM interleaved
-    *               A/B — TriAB — attributed a ~20% wall regression to
+    *               A/B (r9, recorded in PLANS.md "Round-9 q_part_triangles
+    *               attribution") attributed a ~20% wall regression to
     *               exactly that cache: building the columnar InMemoryRelation
     *               for the full edge set costs more than the ReusedExchange
     *               sharing it replaced. `e` stays UNpersisted; its distinct
@@ -116,10 +117,11 @@ object Triangles {
     // orient each edge from the (degree, id)-smaller endpoint to the
     // larger; persisted — it feeds the two wedge arms, the closing join,
     // and the bloom sketch (recomputing runs the degree joins four times).
-    // Measured rejection (r17, TriHintAB: same-JVM interleaved A/B at the
-    // 100x copy): `shuffle_hash` hints on the degree sides — "stream the
-    // edge mass unsorted past a node-sized hash build" — regressed the
-    // whole operator 152 -> 196-316 s. The sort-merge default stays.
+    // Measured rejection (r17, same-JVM interleaved A/B at the 100x copy,
+    // recorded in OPTIMIZATION_r17.md): `shuffle_hash` hints on the degree
+    // sides — "stream the edge mass unsorted past a node-sized hash
+    // build" — regressed the whole operator 152 -> 196-316 s. The
+    // sort-merge default stays.
     val oriented = e
       .join(deg.withColumnRenamed("node", "u").withColumnRenamed("deg", "du"), "u")
       .join(deg.withColumnRenamed("node", "v").withColumnRenamed("deg", "dv"), "v")
@@ -234,12 +236,9 @@ object Triangles {
     // it eagerly (cutting lineage) so the big persisted intermediate and
     // the sketch broadcast can be released deterministically instead of
     // leaking across invocations
-    if (graft.util.PlanCapture.enabled) result
-    else {
-      val out = result.localCheckpoint(true)
-      oriented.unpersist()
-      prunedWedges._2.foreach(_.destroy())
-      out
-    }
+    val out = result.localCheckpoint(true)
+    oriented.unpersist()
+    prunedWedges._2.foreach(_.destroy())
+    out
   }
 }

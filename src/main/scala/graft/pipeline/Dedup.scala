@@ -283,7 +283,7 @@ object Dedup {
     // then `spark.catalog.clearCache()` between pipeline stages, as Bench
     // does per query; otherwise LRU eviction reclaims it).
     val hdf = hashedShingleDf(graft.util.Par.widen(docs), w).persist()
-    if (!graft.util.PlanCapture.enabled) hdf.count()
+    hdf.count()
     val ex = hdf.select(col("doc_id"), explode(col("hs")).as("s"))
     val rare = ex.groupBy("s").agg(count(lit(1)).as("df")).where(col("df") <= maxDf)
     val rareEx = ex.join(rare.select("s"), "s")

@@ -112,12 +112,9 @@ object Search {
     // |queries| * k rows: materialize eagerly (cutting lineage) so the
     // pruned postings cache is released deterministically instead of
     // leaking across invocations
-    if (graft.util.PlanCapture.enabled) topk
-    else {
-      val out = topk.localCheckpoint(true)
-      qp.unpersist()
-      out
-    }
+    val out = topk.localCheckpoint(true)
+    qp.unpersist()
+    out
   }
 
   /** Corpus token count as a scan-aggregate column: sums size(tokens) over
@@ -432,12 +429,9 @@ object Search {
     val stats = spark.read.parquet(s"$cur/stats")
     val ranked = rankTopK(queryTerms, qp, dft, stats, k, k1Micros, bMicros,
       excludeSelf = true)
-    if (graft.util.PlanCapture.enabled) ranked
-    else {
-      val out = ranked.localCheckpoint(true)
-      queryTerms.unpersist()
-      out
-    }
+    val out = ranked.localCheckpoint(true)
+    queryTerms.unpersist()
+    out
   }
 
   /** "More like this": for each query document (rows matching `isQuery`),

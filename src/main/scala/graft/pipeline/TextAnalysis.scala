@@ -259,7 +259,9 @@ object TextAnalysis {
     * driver state, no broadcast of data-sized relations (the model is
     * vocab²-bounded, usually ≪ corpus; AQE picks the join strategy).
     * Exact integer arithmetic end-to-end, so the DuckDB oracle matches
-    * bit-for-bit. Docs with <2 tokens score (0, 0). */
+    * bit-for-bit. Docs with <2 tokens score (0, 0). A NULL `doc_id` is
+    * allowed: the doc's bigrams still count toward the model, and the doc
+    * itself comes out as a (NULL, 0, 0) row (it matches no scored key). */
   def lmScore(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -290,15 +292,16 @@ object TextAnalysis {
     // to hash60(concat_ws(" ", w1, w2)) / hash60(w1)
     // (TextAnalysisSpec pins the declarative twin; the oracle re-derives
     // the same md5-based model end to end).
-    val occRaw = toks.where(n >= 2)
+    val occ = toks.where(n >= 2)
       .select(col("doc_id"), col("toks"))
-      .as[(Long, Seq[String])]
+      // boxed id: a NULL doc_id decodes to null instead of throwing
+      .as[(java.lang.Long, Seq[String])]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (id, ts) =>
           val a = ts.toArray
           val m = a.length - 1
-          val out = new Array[(Long, Long, Long)](m)
+          val out = new Array[(java.lang.Long, Long, Long)](m)
           var prevH = Dedup.md5Top60(md, a(0))
           val sb = new java.lang.StringBuilder
           var i = 0
@@ -312,10 +315,7 @@ object TextAnalysis {
           out
         }
       }.toDF("doc_id", "hb", "h1")
-    // plan-dump mode downgrades to a lazy persist so the dumped plan shows
-    // the shared build as ONE InMemoryRelation instead of an ExistingRDD
-    val occ = if (graft.util.PlanCapture.enabled) occRaw.persist()
-              else occRaw.localCheckpoint(true)
+      .localCheckpoint(true)
     val m12 = occ.groupBy("hb").agg(count(lit(1)).as("c12"))
     val m1 = occ.groupBy("h1").agg(count(lit(1)).as("c1"))
     val scored = occ.join(m12, "hb").join(m1, "h1")

@@ -154,13 +154,10 @@ object ClusterSmoke {
           s"local-cluster worker capacity $cap MB ($master) — the master " +
           "would never allocate executors and the run hangs at warmup")
     }
-    val b = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    // both arms run 32 task threads (local[32], or 2 workers x 16 cores);
+    // `master` replaces the preset's local master
+    val b = LocalSession(32).master(master)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
     // worker JVMs are launched from SPARK_HOME and know nothing about this
     // repo — hand executors the compiled graft classes explicitly. Executor
     // heap defaults to Spark's 1g (plenty at sf0.01); larger-scale runs set

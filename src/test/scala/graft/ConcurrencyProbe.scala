@@ -2,8 +2,6 @@ package graft
 
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: multi-tenant throughput. A 100 TB warehouse never runs one
   * query at a time; the engine must interleave independent jobs, not
   * serialize them on driver-side planning or a saturated default pool.
@@ -20,12 +18,8 @@ import org.apache.spark.sql.SparkSession
 object ConcurrencyProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession(32)
+      .config("spark.scheduler.mode", "FAIR").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect()
 

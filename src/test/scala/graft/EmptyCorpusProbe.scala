@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: registry-wide empty-corpus robustness. Zero-row inputs are
   * the canonical production edge — a fresh table, a partition that
   * filtered to nothing, a backfill gap. Operators must degrade to empty
@@ -25,12 +23,8 @@ object EmptyCorpusProbe {
     val keep = if (args.nonEmpty) args(0).toInt else 0
     val srcDir = "/root/testdata/sf0.001"
     val dir = s"/tmp/graft_sf_empty$keep"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession(8)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // negative keep = |keep| rows with every NON-KEY column nulled (the

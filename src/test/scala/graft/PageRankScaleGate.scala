@@ -64,11 +64,7 @@ object PageRankScaleGate {
   def main(args: Array[String]): Unit = {
     val dir1 = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dir2 = if (args.length > 1) args(1) else "/tmp/graft_sf1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect()
     val a = measure(spark, dir1)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Registry-wide physical-plan audit: one line per registered query with
   * the plan features that matter at 100 TB —
   *
@@ -22,11 +20,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def count(plan: String, pat: String): Int = pat.r.findAllIn(plan).size

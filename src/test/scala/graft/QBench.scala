@@ -1,7 +1,6 @@
 package graft
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query micro-bench used by the scale sweeps (merge_scale_sweep.py
   * parses the `[qbench]` lines into BENCH_SCALE). Besides wall time it
@@ -13,11 +12,7 @@ import org.apache.spark.sql.SparkSession
 object QBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val spillMem = new AtomicLong; val spillDisk = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {

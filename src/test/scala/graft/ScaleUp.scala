@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Synthesizes an N-times-amplified copy of a driver sf directory, for
@@ -30,11 +30,7 @@ object ScaleUp {
     // already reach copies x the original stride)
     val K = if (args.length > 3) args(3).toLong else 10000000L
 
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = LocalSession(8)
       // events carries TIMESTAMP(NANOS); read as raw long nanos (the same
       // setting every consumer uses) and write plain BIGINT nanos
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -2,7 +2,6 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage profile of one registered query: wall-ordered stage table
   * with task time, shuffle read/write bytes, input bytes, records —
@@ -13,11 +12,7 @@ object StageProbe {
     require(args.nonEmpty, "StageProbe <query> [query...]")
     val runs = sys.env.getOrElse("GRAFT_PROBE_RUNS", "2").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.range(1000000).selectExpr("sum(hash(id))").collect()

@@ -12,14 +12,7 @@ import org.apache.spark.sql.SparkSession
   * unaffected. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4,2]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val s = LocalSession(4, maxFailures = 2).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -72,6 +72,25 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(got(4L) == (0L, 0L))
   }
 
+  test("lmScore: a NULL doc_id feeds the model and scores (NULL, 0, 0)") {
+    val df = Seq[(java.lang.Long, String)](
+      (1L, "the cat sat"), (null, "the cat ran"), (3L, "the dog"))
+      .toDF("doc_id", "text")
+    val rows = TextAnalysis.lmScore(df).collect()
+    assert(rows.length == 3)
+    val nullRow = rows.filter(_.isNullAt(0))
+    assert(nullRow.length == 1)
+    assert(nullRow.head.getLong(1) == 0L && nullRow.head.getLong(2) == 0L)
+    val got = rows.filterNot(_.isNullAt(0))
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    // the null doc's bigrams count: c("the cat")=2 c("cat sat")=1
+    // c("the dog")=1; c1("the")=3 c1("cat")=2
+    // doc1: (1e6*2 div 3 + 1e6*1 div 2) div 2 = (666666 + 500000) div 2
+    assert(got(1L) == (2L, (666666L + 500000L) / 2L))
+    // doc3: 1e6*1 div 3
+    assert(got(3L) == (1L, 333333L))
+  }
+
   test("lmScore: self-repetitive text maxes the conditional probability") {
     val df = docs((1L, "a a a", "en"), (2L, "a b c", "en"))
     val got = TextAnalysis.lmScore(df).collect()

@@ -13,16 +13,21 @@ import os
 import re
 import sys
 
-# Registered calibration-only pins (spec-synced mirror of
-# SparkEntry.calibrationOnly): super-linear ratios on these rows are
-# by-design, the graded scale numbers are their production twins'.
+# Registered calibration-only pins: queries whose registered configuration
+# deliberately pins a calibration constant that does NOT scale (so the
+# DuckDB mirror stays evaluable / provably exact), each naming the
+# production twin a 100 TB caller uses instead. Super-linear ratios on these
+# rows are by-design; the graded scale numbers are their twins'.
+# CalibrationRegistrySpec checks every name and twin is a registered query.
 CALIB = json.load(open(os.path.join(os.path.dirname(__file__),
                                     "calibration_only.json")))
 
-# Registered data-proportional contracts (spec-synced mirror of
-# SparkEntry.dataProportional): copy-amplification grows these queries'
-# WORK super-linearly in rows (measured per-unit evidence in each entry),
-# so a >20x wall ratio is the workload, not a scale defect.
+# Registered data-proportional contracts: copy-amplification grows these
+# queries' WORK super-linearly in rows (measured per-unit evidence in each
+# entry, behind the `per-unit metric:` marker), so a >20x wall ratio is the
+# workload, not a scale defect. These ARE the production configurations —
+# there is no twin. CalibrationRegistrySpec checks every name is a
+# registered query, carries the marker and is not also calibration-only.
 DATA_PROP = json.load(open(os.path.join(os.path.dirname(__file__),
                                         "data_proportional.json")))
 
