@@ -47,14 +47,30 @@ object PageRank {
     * per executor, well under the working memory the shuffles it
     * replaces would use; above it the shuffled plan (edge cache
     * clustered by `src`, contribs exchanged to it) is the scale-safe
-    * shape. */
+    * shape. The ceiling is for [[BroadcastIters]] iterations: see
+    * [[broadcastPlan]]. */
   val BroadcastMaxNodes = 4000000L
 
-  /** @param broadcastMaxNodes node-count ceiling for the broadcast plan
-    *        ([[BroadcastMaxNodes]]); 0 forces the shuffled plan (test
-    *        hook — PageRankSpec pins both plans bit-identical) */
+  /** The iteration count [[BroadcastMaxNodes]] is sized for — the `ranks`
+    * default. */
+  val BroadcastIters = 3
+
+  /** The broadcast-plan gate. Every iteration ships one more node-sized
+    * broadcast that stays in the lineage until the final ranks
+    * materialize, so the budget is node-iterations: `nNodes * iters`
+    * against the ceiling at [[BroadcastIters]]. At the default iteration
+    * count this is exactly `nNodes <= broadcastMaxNodes`; more iterations
+    * lower the node ceiling in proportion. */
+  def broadcastPlan(nNodes: Long, iters: Int,
+                    broadcastMaxNodes: Long = BroadcastMaxNodes): Boolean =
+    BigInt(nNodes) * iters <= BigInt(broadcastMaxNodes) * BroadcastIters
+
+  /** @param broadcastMaxNodes node-count ceiling for the broadcast plan at
+    *        [[BroadcastIters]] iterations ([[BroadcastMaxNodes]]); 0 forces
+    *        the shuffled plan (test hook — PageRankSpec pins both plans
+    *        bit-identical) */
   def ranks(edges: DataFrame, srcCol: String, dstCol: String,
-            iters: Int = 3, dampMicros: Long = 850000L,
+            iters: Int = BroadcastIters, dampMicros: Long = 850000L,
             broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     require(dampMicros >= 0 && dampMicros <= 1000000L,
@@ -74,7 +90,7 @@ object PageRank {
     // materializes the node-set cache the FINAL join reuses, so it costs
     // one scheduling round, not an extra pipeline run
     val nNodes = nodes.count()
-    val useBc = nNodes <= broadcastMaxNodes
+    val useBc = broadcastPlan(nNodes, iters, broadcastMaxNodes)
     val deg0 = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val deg = if (useBc) broadcast(deg0) else deg0
     // (src, dst, outdeg): the relation every iteration joins against.

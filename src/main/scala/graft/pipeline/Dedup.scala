@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 /** Deduplication operators: exact (fingerprint groupBy), n-gram Jaccard
   * (rare-shingle candidate generation), MinHash+LSH (banded), and SimHash.
@@ -1126,6 +1127,10 @@ object Dedup {
     result
   }
 
+  /** Pair-count ceiling for the [[resolveClusters]] driver path: 2^20
+    * pairs are 16 MB packed on the driver (see the scaladoc there). */
+  val DriverMaxEdges: Long = 1L << 20
+
   /** Near-dup *cluster resolution*: connected components over pair edges,
     * labeling every document with the smallest doc_id of its component —
     * the canonical-representative step that turns pair lists (from
@@ -1177,34 +1182,188 @@ object Dedup {
     * be both safe and automatic) — the uuid namespacing makes those safe
     * to sweep by age.
     *
+    * Small-graph driver path: the (doc_a, doc_b) projection is persisted
+    * and counted first; the counting pass already packs every partition
+    * within an even share of the bound, so a small input is counted and
+    * collected in one job. At or under `driverMaxEdges` pairs (default
+    * [[DriverMaxEdges]]) with integral ids, the pairs are collected as
+    * packed longs and resolved by one union-by-min union-find on the driver
+    * instead of the rounds above — each round is four small jobs (two
+    * rounds minimum even for near-cliques), so on the ~1k-pair inputs the
+    * pipelines produce the rounds are almost all scheduling and checkpoint
+    * overhead. The bound is sized for driver memory, not for any input:
+    * at 2^20 pairs the packed edges are 16 MB and the working set (edges,
+    * sorted distinct ids, int parents) stays under ~40 MB. The returned
+    * relation is built from driver-held arrays, so it holds no executor
+    * blocks: an executor loss recomputes it from the driver, which is why
+    * this path needs no checkpoint in either mode. It is decided before
+    * `checkpointDir` is touched — a reliable-mode call that takes it writes
+    * no files and leaves the session's checkpoint dir as it was. Above the
+    * bound, the rounds (and their fallback) run over the same cache.
+    * Both paths return the same rows and schema, including the
+    * (NULL, NULL) row a NULL endpoint gets. One INFO line per call names
+    * the path, the pair count and, for the rounds, rounds-to-converge and
+    * whether star contraction ran.
+    *
+    * @param driverMaxEdges pair-count ceiling for the driver path; 0 forces
+    *        the rounds (test hook — the equivalence spec pins both paths)
+    *
     * Returns (doc_id, cluster_id) for every document that appears in at
     * least one pair; unpaired documents are their own singleton clusters by
     * definition and are left to the caller (they need no join to decide). */
   def resolveClusters(pairs: DataFrame, maxRounds: Int = 25,
                       checkpointDir: Option[String] = None,
-                      jumpsPerRound: Int = 2): DataFrame = {
+                      jumpsPerRound: Int = 2,
+                      driverMaxEdges: Long = DriverMaxEdges): DataFrame = {
     val spark = pairs.sparkSession
     val sc = spark.sparkContext
-    val prevCkptDir = sc.getCheckpointDir
-    val runDir = checkpointDir.map(base =>
-      s"$base/graft-cc-${java.util.UUID.randomUUID()}")
-    runDir.foreach(sc.setCheckpointDir)
+    val log = org.slf4j.LoggerFactory.getLogger(getClass)
+    // the one scan of the (possibly expensive) pair relation both paths
+    // read; `proj.rdd` fills the cache (its own stage under AQE)
+    val proj = pairs.select("doc_a", "doc_b").persist()
     try {
-      resolveClustersImpl(pairs, maxRounds, checkpointDir.isDefined,
-        jumpsPerRound)
-    } finally {
-      // leave the session's checkpoint configuration the way we found it
-      // (setCheckpointDir mutates SparkContext-global state); if none was
-      // set before, ours stays but points at a uuid-fresh subdir that this
-      // run has already emptied of everything but the result's file
-      if (runDir.isDefined) prevCkptDir.foreach(sc.setCheckpointDir)
-    }
+      // labels before the first round: its schema is the result's schema
+      // on both paths (no round changes a type or a nullability)
+      val labels0 = edges0(proj).select(col("u").as("doc_id")).distinct()
+        .withColumn("cluster_id", col("doc_id"))
+      val idType = labels0.schema("doc_id").dataType
+      val driverOk = driverMaxEdges > 0 &&
+        (idType == LongType || idType == IntegerType)
+      val rows = proj.rdd
+      // one job counts every partition and already packs each one within
+      // an even share of the bound: a small input is counted and collected
+      // in one pass, and no input ships more than the bound to the driver
+      val share =
+        if (driverOk) driverMaxEdges / math.max(1, rows.getNumPartitions) else 0L
+      val parts = sc.runJob(rows, packPairs(share) _)
+      val nPairs = parts.map(_.rows).sum
+      if (driverOk && nPairs <= driverMaxEdges) {
+        val out = driverClusters(proj, parts, labels0.schema)
+        log.info("resolveClusters path=driver edges={}", nPairs)
+        out
+      } else {
+        val prevCkptDir = sc.getCheckpointDir
+        val runDir = checkpointDir.map(base =>
+          s"$base/graft-cc-${java.util.UUID.randomUUID()}")
+        runDir.foreach(sc.setCheckpointDir)
+        try {
+          val (out, rounds, star) = resolveClustersImpl(proj, labels0,
+            maxRounds, checkpointDir.isDefined, jumpsPerRound)
+          log.info("resolveClusters path=rounds edges={} rounds={} starContraction={}",
+            nPairs, rounds, star)
+          out
+        } finally {
+          // leave the session's checkpoint configuration the way we found
+          // it (setCheckpointDir mutates SparkContext-global state); if none
+          // was set before, ours stays but points at a uuid-fresh subdir
+          // that this run has already emptied of everything but the
+          // result's file
+          if (runDir.isDefined) prevCkptDir.foreach(sc.setCheckpointDir)
+        }
+      }
+    } finally proj.unpersist()
   }
 
-  private def resolveClustersImpl(pairs: DataFrame, maxRounds: Int,
-                                  reliable: Boolean,
-                                  jumpsPerRound: Int): DataFrame = {
-    val spark = pairs.sparkSession
+  /** One partition of a (doc_a, doc_b) relation: its row count and, if
+    * that is at most `cap`, its pairs packed as longs — both endpoints of
+    * every pair with no NULL, `(x, x)` for the non-NULL endpoint of a
+    * half-NULL pair (still a node of its own) — and whether any endpoint
+    * was NULL. `packed` is null when the partition was over `cap`. */
+  private final case class PackedPairs(rows: Long, packed: Array[Long],
+                                       sawNull: Boolean)
+
+  private def packPairs(cap: Long)(it: Iterator[Row]): PackedPairs = {
+    val b = Array.newBuilder[Long]
+    var n = 0L
+    var sawNull = false
+    it.foreach { r =>
+      n += 1
+      if (n <= cap) {
+        val na = r.isNullAt(0)
+        val nb = r.isNullAt(1)
+        if (na || nb) sawNull = true
+        if (!na || !nb) {
+          b += (if (na) r.get(1) else r.get(0)).asInstanceOf[Number].longValue
+          b += (if (nb) r.get(0) else r.get(1)).asInstanceOf[Number].longValue
+        }
+      }
+    }
+    if (n <= cap) PackedPairs(n, b.result(), sawNull) else PackedPairs(n, null, false)
+  }
+
+  /** The [[resolveClusters]] driver path: the packed partitions (packing
+    * the ones the counting pass withheld now that the total is known to
+    * fit), union-find on the driver, and a result relation parallelized
+    * from driver arrays with `schema`. */
+  private def driverClusters(proj: DataFrame, counted: Array[PackedPairs],
+                             schema: StructType): DataFrame = {
+    val sc = proj.sparkSession.sparkContext
+    val withheld = counted.indices.filter(counted(_).packed == null)
+    val parts = counted.filter(_.packed != null) ++ (
+      if (withheld.isEmpty) Array.empty[PackedPairs]
+      else sc.runJob(proj.rdd, packPairs(Long.MaxValue) _, withheld))
+    val (ids, root) = unionFindMin(Array.concat(parts.map(_.packed).toSeq: _*))
+    // the rounds give a NULL endpoint one (NULL, NULL) row: NULL never
+    // equi-joins, so its label is never set
+    val nullRow = parts.exists(_.sawNull)
+    val isInt = schema("doc_id").dataType == IntegerType
+    val n = ids.length
+    // interleaved (doc_id, cluster_id) per slice
+    val slices = math.min(math.max(n, 1), sc.defaultParallelism)
+    val chunks = (0 until slices).map { s =>
+      val (lo, hi) = ((n.toLong * s / slices).toInt, (n.toLong * (s + 1) / slices).toInt)
+      val c = new Array[Long](2 * (hi - lo))
+      var i = lo
+      while (i < hi) { c(2 * (i - lo)) = ids(i); c(2 * (i - lo) + 1) = ids(root(i)); i += 1 }
+      (c, nullRow && s == 0)
+    }
+    val labeled = sc.parallelize(chunks, slices).flatMap { cw =>
+      val (c, withNull) = cw
+      val it = Iterator.range(0, c.length, 2).map(j =>
+        if (isInt) Row(c(j).toInt, c(j + 1).toInt) else Row(c(j), c(j + 1)))
+      if (withNull) it ++ Iterator.single(Row(null, null)) else it
+    }
+    proj.sparkSession.createDataFrame(labeled, schema)
+  }
+
+  /** Connected components of packed `(a, b)` pairs (`packed(2k)`,
+    * `packed(2k+1)`): the sorted distinct endpoints `ids` and, per index,
+    * the index of its component minimum. Union by min — the smaller root
+    * always wins, so a root is its component's smallest id — with path
+    * halving; `parent(i) <= i` throughout, so one ascending pass finishes
+    * every path. */
+  private def unionFindMin(packed: Array[Long]): (Array[Long], Array[Int]) = {
+    val sorted = packed.clone()
+    java.util.Arrays.sort(sorted)
+    var n = 0
+    var k = 0
+    while (k < sorted.length) {
+      if (n == 0 || sorted(n - 1) != sorted(k)) { sorted(n) = sorted(k); n += 1 }
+      k += 1
+    }
+    val ids = java.util.Arrays.copyOf(sorted, n)
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
+      var i = x
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    k = 0
+    while (k < packed.length) {
+      val ra = find(java.util.Arrays.binarySearch(ids, packed(k)))
+      val rb = find(java.util.Arrays.binarySearch(ids, packed(k + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      k += 2
+    }
+    var i = 0
+    while (i < n) { parent(i) = parent(parent(i)); i += 1 }
+    (ids, parent)
+  }
+
+  private def resolveClustersImpl(proj: DataFrame, labels0: DataFrame,
+                                  maxRounds: Int, reliable: Boolean,
+                                  jumpsPerRound: Int): (DataFrame, Int, Boolean) = {
+    val spark = proj.sparkSession
     // The checkpointed frame is rebuilt from its RDD (two narrow conversion
     // maps over the small label relation) to DROP the inherited
     // `originStats`: Catalyst's size-only estimator gives a join the
@@ -1244,12 +1403,11 @@ object Dedup {
           .delete(path, true)
       }
     }
-    // both edge directions from ONE scan of the (possibly expensive) pair
-    // relation — a union of two projections would evaluate it twice, since
-    // Spark shares no subplans across DataFrame branches
-    val edges = edges0(pairs).persist()
-    var labels = ckpt(edges.select(col("u").as("doc_id")).distinct()
-      .withColumn("cluster_id", col("doc_id")))
+    // both edge directions from ONE scan of the cached pair projection — a
+    // union of two projections would read it twice, since Spark shares no
+    // subplans across DataFrame branches
+    val edges = edges0(proj)
+    var labels = ckpt(labels0)
     // exact scalar convergence check; coalesce: an empty pair relation must
     // yield an empty result, not a NULL-sum crash
     def labelSum(df: DataFrame): java.math.BigDecimal =
@@ -1336,7 +1494,7 @@ object Dedup {
         // starContract materializes its result, so the quotient edges are
         // already dead here; labels and l2 die once the composition lands
         retire(quotient)
-        // materialized (via ckpt) BEFORE edges.unpersist below
+        // materialized (via ckpt) BEFORE the caller unpersists the pairs
         val composed = ckpt(labels
           .join(l2.select(col("doc_id").as("cluster_id"),
             col("cluster_id").as("root")), Seq("cluster_id"), "left")
@@ -1346,8 +1504,7 @@ object Dedup {
         retire(labels)
         composed
       }
-    edges.unpersist()
-    result
+    (result, round, !converged)
   }
 
   /** Bidirectional edge view of a (doc_a, doc_b) pair relation from ONE

@@ -152,7 +152,8 @@ class DedupSpec extends AnyFunSuite {
     // of throwing (r4) or shipping part-propagated labels (never), the
     // large-star/small-star fallback resolves the quotient graph exactly
     val chain = (0L until 9L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val got = Dedup.resolveClusters(chain, maxRounds = 2).collect()
+    val got = Dedup.resolveClusters(chain, maxRounds = 2, driverMaxEdges = 0)
+      .collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.keySet == (0L to 9L).toSet && got.values.forall(_ == 0L))
   }
@@ -163,7 +164,8 @@ class DedupSpec extends AnyFunSuite {
     // the propagation budget — the star-contraction fallback must close it
     val ids = new scala.util.Random(42).shuffle((0L until 101L).toVector)
     val edges = (0 until 100).map(i => (ids(i), ids(i + 1)))
-    val got = Dedup.resolveClusters(edges.toDF("doc_a", "doc_b")).collect()
+    val got = Dedup.resolveClusters(edges.toDF("doc_a", "doc_b"),
+        driverMaxEdges = 0).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.keySet == (0L until 101L).toSet)
     assert(got.values.forall(_ == 0L), s"bad labels: ${got.filter(_._2 != 0L).take(5)}")
@@ -188,7 +190,8 @@ class DedupSpec extends AnyFunSuite {
       val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
       val expected = nodes.groupBy(find).values
         .flatMap(ms => { val m = ms.min; ms.map(_ -> m) }).toMap
-      val got = Dedup.resolveClusters(edges.toDF("doc_a", "doc_b"), maxRounds = 0)
+      val got = Dedup.resolveClusters(edges.toDF("doc_a", "doc_b"), maxRounds = 0,
+          driverMaxEdges = 0)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == expected, s"seed=$seed")
     }
@@ -210,7 +213,7 @@ class DedupSpec extends AnyFunSuite {
     // the pointer-jumping shortcut closes it in O(log d). Model: one chain
     // is one component labeled by its minimum.
     val chain = (0L until 60L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val got = Dedup.resolveClusters(chain).collect()
+    val got = Dedup.resolveClusters(chain, driverMaxEdges = 0).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.keySet == (0L to 60L).toSet)
     assert(got.values.forall(_ == 0L), s"non-min labels: ${got.filter(_._2 != 0L)}")
@@ -244,7 +247,7 @@ class DedupSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L))
       .toDF("doc_a", "doc_b")
-    val local = Dedup.resolveClusters(pairs).collect()
+    val local = Dedup.resolveClusters(pairs, driverMaxEdges = 0).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // a previously-configured session checkpoint dir must survive the run
     // (setCheckpointDir is SparkContext-global; there is no public unset,
@@ -252,7 +255,8 @@ class DedupSpec extends AnyFunSuite {
     val priorDir = java.nio.file.Files.createTempDirectory("graft-prior").toString
     spark.sparkContext.setCheckpointDir(priorDir)
     val before = spark.sparkContext.getCheckpointDir
-    val result = Dedup.resolveClusters(pairs, checkpointDir = Some(dir))
+    val result = Dedup.resolveClusters(pairs, checkpointDir = Some(dir),
+      driverMaxEdges = 0)
     val reliable = result.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(local == reliable)
     // session-global checkpoint configuration is pointed back under the
@@ -276,6 +280,28 @@ class DedupSpec extends AnyFunSuite {
     // and that surviving file is genuinely the result's backing store:
     // the relation must still be readable after the sweep
     assert(result.count() == reliable.size)
+  }
+
+  test("reliable mode on a small input takes the driver path: no checkpoint " +
+      "files, session checkpoint dir untouched") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-drv").toString
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L))
+      .toDF("doc_a", "doc_b")
+    val priorDir = java.nio.file.Files.createTempDirectory("graft-prior").toString
+    spark.sparkContext.setCheckpointDir(priorDir)
+    val before = spark.sparkContext.getCheckpointDir
+    val got = Dedup.resolveClusters(pairs, checkpointDir = Some(dir)).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      10L -> 10L, 11L -> 10L, 12L -> 10L))
+    // the driver path never calls setCheckpointDir, so the session dir is
+    // exactly the one set above
+    assert(spark.sparkContext.getCheckpointDir == before)
+    import scala.jdk.CollectionConverters._
+    val written = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      .iterator().asScala.filter(_.toString != dir).toList
+    // no rdd-* checkpoint files, and not even the rounds' run subdir
+    assert(written.isEmpty, s"driver path touched checkpointDir: $written")
   }
 
   test("dropped-bucket accumulators surface the maxBucket cap at runtime") {

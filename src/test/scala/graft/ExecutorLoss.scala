@@ -155,12 +155,15 @@ object ExecutorLoss {
     scenario("q_part_pagerank")(() =>
       SparkEntry.queries("q_part_pagerank")(spark, sfDir))
     // CC in reliable-checkpoint mode over the registered near-dup pair
-    // relation: the one storage mode whose whole purpose is this fault
+    // relation: the one storage mode whose whole purpose is this fault.
+    // driverMaxEdges = 0 keeps it on the checkpointed rounds (the small
+    // pair list would otherwise take the driver path, which checkpoints
+    // nothing)
     val ccDir = Files.createTempDirectory("graft_cc_loss").toString
     scenario("resolve_clusters_reliable")(() =>
       pipeline.Dedup.resolveClusters(
         pipeline.Dedup.minhashLshPairs(Tables.documents(spark, sfDir)),
-        checkpointDir = Some(ccDir)))
+        checkpointDir = Some(ccDir), driverMaxEdges = 0))
 
     // ---- streaming: executor dies between micro-batches -----------------
     import graft.streaming.StreamingUpsert

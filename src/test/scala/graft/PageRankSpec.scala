@@ -67,6 +67,57 @@ class PageRankSpec extends AnyFunSuite {
     assert(bc == model(edges, 3))
   }
 
+  test("broadcast gate counts iterations: iters = 10 at the node ceiling " +
+      "takes the shuffled plan with unchanged ranks") {
+    val edges = Seq((2L, 1L), (3L, 1L), (4L, 1L), (4L, 5L), (5L, 6L),
+      (7L, 1L), (1L, 2L), (2L, 3L))
+    val nNodes = 7L
+    // the default iteration count keeps the old node-only ceiling exactly
+    assert(PageRank.broadcastPlan(nNodes, 3, nNodes))
+    assert(!PageRank.broadcastPlan(nNodes + 1, 3, nNodes))
+    // ten iterations hold ten broadcasts: the ceiling scales down 3/10
+    assert(!PageRank.broadcastPlan(nNodes, 10, nNodes))
+    assert(PageRank.broadcastPlan(nNodes, 10, nNodes * 10 / 3 + 1))
+    // the executed plans show the gate: only the broadcast plan clusters
+    // the edge cache with a user repartition by dst (REPARTITION_BY_COL)
+    val plans = scala.collection.mutable.Buffer[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan.toString }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    def ranksAndPlan(iters: Int, ceiling: Long): (Map[Long, Long], Boolean) = {
+      plans.synchronized(plans.clear())
+      spark.listenerManager.register(listener)
+      try {
+        val r = PageRank.ranks(edges.toDF("src", "dst"), "src", "dst", iters,
+            broadcastMaxNodes = ceiling)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        // listener delivery is async; the final ranks checkpoint reads the
+        // edge cache, so its plan names the cache's repartition if any
+        var waited = 0
+        def ranked = plans.synchronized(plans.filter(_.contains("rank_micros")).toList)
+        while (ranked.isEmpty && waited < 10000) { Thread.sleep(200); waited += 200 }
+        assert(ranked.nonEmpty, "no executed plan captured for the ranks")
+        (r, ranked.exists(_.contains("REPARTITION_BY_COL")))
+      } finally spark.listenerManager.unregister(listener)
+    }
+    val (r3, bc3) = ranksAndPlan(3, nNodes)
+    val (r10, bc10) = ranksAndPlan(10, nNodes)
+    assert(bc3, "iters=3 at the ceiling must keep the broadcast plan")
+    assert(!bc10, "iters=10 at the ceiling must take the shuffled plan")
+    assert(r3 == model(edges, 3))
+    assert(r10 == model(edges, 10))
+    val forced = PageRank.ranks(edges.toDF("src", "dst"), "src", "dst", 10,
+        broadcastMaxNodes = 0L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(r10 == forced)
+  }
+
   test("ranks are invariant under input partitioning and row order") {
     val edges = (1L to 40L).map(i => (i, i % 7 + 100L)) ++
       (100L to 106L).map(i => (i, (i % 5) + 1L))
