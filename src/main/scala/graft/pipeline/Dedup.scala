@@ -797,9 +797,7 @@ object Dedup {
     * `maxHamming <= bands - 1`; recall is exact up to the `maxBucket`
     * cap (degenerate buckets dropped whole, counted in the
     * accumulators — the same guard as the MinHash path). Verification
-    * is the codegen'd `bit_count(xor)` builtin — no UDF. `shiftright`
-    * is arithmetic, so the per-band mask also strips the sign
-    * extension a negative 64-bit signature would smear. */
+    * is the codegen'd `bit_count(xor)` builtin — no UDF. */
   def bandedHammingPairs(sigs: DataFrame, maxHamming: Int = 3,
       bands: Int = 4, bandBits: Int = 16, maxBucket: Int = 64,
       partitionCols: Seq[String] = Nil,
@@ -809,17 +807,10 @@ object Dedup {
     val dropAcc = droppedBuckets.getOrElse(
       sc.longAccumulator("graft.hamming.dropped_buckets"))
     val dropDocsAcc = sc.longAccumulator("graft.hamming.dropped_docs")
-    val mask = (1L << bandBits) - 1
     val pcols = partitionCols.map(col)
-    val banded = sigs.select(pcols ++ Seq(col("doc_id"), col("sig"),
-      explode(array((0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          shiftright(col("sig"), b * bandBits).bitwiseAND(lit(mask)).as("key"))
-      }: _*)).as("bk")): _*)
-      .select(pcols ++ Seq(col("doc_id"), col("sig"),
-        col("bk.band").as("band"), col("bk.key").as("key")): _*)
     val buckets = capBuckets(
-      banded.groupBy((partitionCols ++ Seq("band", "key")).map(col): _*)
+      bandRows(sigs, pcols, bands, bandBits)
+        .groupBy((partitionCols ++ Seq("band", "key")).map(col): _*)
         .agg(collect_list(struct(col("doc_id"), col("sig"))).as("ids")),
       maxBucket, dropAcc, dropDocsAcc)
     val cand = buckets
@@ -864,26 +855,48 @@ object Dedup {
       spark.sparkContext.longAccumulator("graft.incr_hamming.dropped_buckets"))
     val dropDocsAcc =
       spark.sparkContext.longAccumulator("graft.incr_hamming.dropped_docs")
-    val mask = (1L << bandBits) - 1
     val pcols = partitionCols.map(col)
     val keyCols = partitionCols ++ Seq("band", "key")
-    def banded(df: DataFrame): DataFrame =
-      df.select(pcols ++ Seq(col("doc_id"), col("sig"),
-        explode(array((0 until bands).map { b =>
-          struct(lit(b).as("band"),
-            shiftright(col("sig"), b * bandBits).bitwiseAND(lit(mask)).as("key"))
-        }: _*)).as("bk")): _*)
-        .select(pcols ++ Seq(col("doc_id"), col("sig"),
-          col("bk.band").as("band"), col("bk.key").as("key")): _*)
-    val bBanded = banded(batch)
+    val bBanded = bandRows(batch, pcols, bands, bandBits)
     val lBuckets = capBuckets(
-      banded(ledger)
+      bandRows(ledger, pcols, bands, bandBits)
         .join(broadcast(bBanded.select(keyCols.map(col): _*).distinct()),
           keyCols)
         .groupBy(keyCols.map(col): _*)
         .agg(collect_list(struct(col("doc_id"), col("sig"))).as("ids")),
       maxBucket, dropAcc, dropDocsAcc, minSize = 1)
-    val cand = bBanded.join(lBuckets, keyCols)
+    hammingVerdicts(batch, bBanded.join(lBuckets, keyCols), partitionCols,
+      maxHamming)
+  }
+
+  /** One `(partitionCols..., doc_id, sig, band, key)` row per band of each
+    * signature in `sigs` — the unfused banding of [[bandedHammingPairs]]
+    * and [[incrementalHammingDedup]]. */
+  private def bandRows(sigs: DataFrame, pcols: Seq[Column], bands: Int,
+                       bandBits: Int): DataFrame =
+    sigs.select(pcols ++ Seq(col("doc_id"), col("sig"),
+      explode(array((0 until bands).map { b =>
+        struct(lit(b).as("band"), bandKey(col("sig"), b, bandBits).as("key"))
+      }: _*)).as("bk")): _*)
+      .select(pcols ++ Seq(col("doc_id"), col("sig"),
+        col("bk.band").as("band"), col("bk.key").as("key")): _*)
+
+  /** Band `b` of a bit signature: the `bandBits` bits from bit
+    * `b * bandBits` up. `shiftright` is arithmetic, so the mask also
+    * strips the sign extension a negative 64-bit signature would smear. */
+  private def bandKey(sig: Column, b: Int, bandBits: Int): Column =
+    shiftright(sig, b * bandBits).bitwiseAND(lit((1L << bandBits) - 1))
+
+  /** Shared verdict epilogue of [[incrementalHammingDedup]] and
+    * [[indexHammingDedup]]: `probed` pairs each batch band row
+    * `(partitionCols..., doc_id, sig)` with the `ids` postings of the
+    * ledger bucket it hit. Best match = lowest hamming within
+    * `maxHamming`, ties to the smallest ledger id, then the batch left
+    * join that surfaces no-match rows as `admitted`. */
+  private def hammingVerdicts(batch: DataFrame, probed: DataFrame,
+      partitionCols: Seq[String], maxHamming: Int): DataFrame = {
+    val pcols = partitionCols.map(col)
+    val cand = probed
       .select(pcols ++ Seq(col("doc_id").as("doc_a"), col("sig").as("sig_a"),
         explode(col("ids")).as("b")): _*)
       .select(pcols ++ Seq(col("doc_a"), col("sig_a"),
@@ -914,16 +927,30 @@ object Dedup {
     * `bkey -> [(doc_id, sig)]` postings with the partition columns and
     * band index FUSED into one string key (`kind:band:key`), so the
     * stream-static join is a single-column equi-join. `partitionCols`
-    * records the columns fused into the key at build time — probe sides
-    * MUST derive their keys from it (a probe keyed on different columns
-    * would silently match zero postings and admit everything). Persisted
+    * records the columns fused into the key at build time, and
+    * [[HammingIndex.probeKeys]] is the one place that fuses it: a probe
+    * keyed on different columns would silently match zero postings and
+    * admit everything. Persisted
     * at build (reused per admission batch); call [[release]] when done. */
   final case class HammingIndex(buckets: DataFrame, maxHamming: Int,
                                 bands: Int, bandBits: Int,
                                 partitionCols: Seq[String],
                                 maxBucket: Int, dropped: DataFrame) {
+    /** The `bkey`s of signature `sig`, one per band: build, refresh and
+      * every probe side derive their keys here, so they cannot drift. */
+    def probeKeys(sig: Column): Column =
+      fusedBandKeys(partitionCols, bands, bandBits, sig)
     def release(): Unit = { buckets.unpersist(); dropped.unpersist() }
   }
+
+  /** The fused `partitionCols...:band:key` strings of `sig` — the only
+    * spelling of a [[HammingIndex]] posting key. */
+  private def fusedBandKeys(partitionCols: Seq[String], bands: Int,
+                            bandBits: Int, sig: Column): Column =
+    array((0 until bands).map { b =>
+      concat_ws(":", partitionCols.map(col) ++
+        Seq(lit(b), bandKey(sig, b, bandBits)): _*)
+    }: _*)
 
   /** Build a [[HammingIndex]] from ledger signatures
     * `(partitionCols..., doc_id, sig)`. Caps are applied at build time —
@@ -939,16 +966,10 @@ object Dedup {
       spark.sparkContext.longAccumulator("graft.hamming_index.dropped_buckets"))
     val dropDocsAcc =
       spark.sparkContext.longAccumulator("graft.hamming_index.dropped_docs")
-    val mask = (1L << bandBits) - 1
-    val pcols = partitionCols.map(col)
-    val banded = ledger.select(pcols ++ Seq(col("doc_id"), col("sig"),
-      explode(array((0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          shiftright(col("sig"), b * bandBits).bitwiseAND(lit(mask)).as("key"))
-      }: _*)).as("bk")): _*)
-    val grouped = banded
-      .groupBy(concat_ws(":",
-        pcols ++ Seq(col("bk.band"), col("bk.key")): _*).as("bkey"))
+    val grouped = ledger.select(col("doc_id"), col("sig"),
+        explode(fusedBandKeys(partitionCols, bands, bandBits, col("sig")))
+          .as("bkey"))
+      .groupBy("bkey")
       .agg(collect_list(struct(col("doc_id"), col("sig"))).as("ids"))
       .persist()
     val buckets = capBuckets(grouped, maxBucket, dropAcc, dropDocsAcc,
@@ -973,17 +994,10 @@ object Dedup {
     * `(partitionCols..., doc_id, sig)` like the build input. */
   def refreshHammingIndex(index: HammingIndex, admitted: DataFrame)
       : HammingIndex = {
-    val mask = (1L << index.bandBits) - 1
-    val pcols = index.partitionCols.map(col)
     val emptyIds = array().cast("array<struct<doc_id:bigint,sig:bigint>>")
-    val newPosts = admitted.select(pcols ++ Seq(col("doc_id"), col("sig"),
-        explode(array((0 until index.bands).map { b =>
-          struct(lit(b).as("band"),
-            shiftright(col("sig"), b * index.bandBits)
-              .bitwiseAND(lit(mask)).as("key"))
-        }: _*)).as("bk")): _*)
-      .groupBy(concat_ws(":",
-        pcols ++ Seq(col("bk.band"), col("bk.key")): _*).as("bkey"))
+    val newPosts = admitted.select(col("doc_id"), col("sig"),
+        explode(index.probeKeys(col("sig"))).as("bkey"))
+      .groupBy("bkey")
       .agg(collect_list(struct(col("doc_id"), col("sig"))).as("new_ids"))
       .join(index.dropped, Seq("bkey"), "left_anti")
     val merged = index.buckets
@@ -1059,35 +1073,11 @@ object Dedup {
     * from the index's recorded partition columns, so a mismatched probe
     * shape fails at analysis instead of silently admitting everything. */
   def indexHammingDedup(batch: DataFrame, index: HammingIndex): DataFrame = {
-    val mask = (1L << index.bandBits) - 1
-    val pcols = index.partitionCols.map(col)
-    val bBanded = batch.select(pcols ++ Seq(col("doc_id"), col("sig"),
-        explode(array((0 until index.bands).map { b =>
-          concat_ws(":", pcols ++ Seq(lit(b),
-            shiftright(col("sig"), b * index.bandBits)
-              .bitwiseAND(lit(mask))): _*)
-        }: _*)).as("bkey")): _*)
-    val cand = bBanded.join(index.buckets, Seq("bkey"))
-      .select(pcols ++ Seq(col("doc_id").as("doc_a"), col("sig").as("sig_a"),
-        explode(col("ids")).as("b")): _*)
-      .select(pcols ++ Seq(col("doc_a"), col("sig_a"),
-        col("b.doc_id").as("doc_b"), col("b.sig").as("sig_b")): _*)
-      .distinct()
-    val best = cand
-      .withColumn("hamming",
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long"))
-      .where(col("hamming") <= index.maxHamming)
-      .groupBy(pcols :+ col("doc_a").as("doc_id"): _*)
-      // lexicographic struct min: lowest hamming, then smallest ledger id
-      .agg(min(struct(col("hamming"), col("doc_b"))).as("m"))
-      .select(pcols ++ Seq(col("doc_id"), col("m.doc_b").as("near_dup_of"),
-        col("m.hamming").as("hamming")): _*)
-    batch.select(pcols :+ col("doc_id"): _*)
-      .join(best, index.partitionCols :+ "doc_id", "left")
-      .select(pcols ++ Seq(col("doc_id"),
-        when(col("near_dup_of").isNotNull, lit("near_dup"))
-          .otherwise(lit("admitted")).as("verdict"),
-        col("near_dup_of"), col("hamming")): _*)
+    val bBanded = batch.select(index.partitionCols.map(col) ++
+      Seq(col("doc_id"), col("sig"),
+        explode(index.probeKeys(col("sig"))).as("bkey")): _*)
+    hammingVerdicts(batch, bBanded.join(index.buckets, Seq("bkey")),
+      index.partitionCols, index.maxHamming)
   }
 
   /** Benchmark decontamination: corpus documents sharing at least

@@ -53,7 +53,6 @@ object StreamingMediaDedup {
   def verdicts(spark: SparkSession, stream: DataFrame,
                index: Dedup.HammingIndex): Dataset[MediaVerdict] = {
     import spark.implicits._
-    val mask = (1L << index.bandBits) - 1
     // One decode per row; a rejected payload carries its reason class and
     // a placeholder hash that never reaches a comparison (see below).
     val hashed = stream.as[Multimodal.MediaRow].mapPartitions { it =>
@@ -64,17 +63,11 @@ object StreamingMediaDedup {
         }
       }
     }.toDF("doc_id", "kind", "phash", "qreason")
-    // The probe key MUST be fused from the same partition columns the
-    // index was built with — a mismatched key shape would join zero
-    // postings and silently admit every document. The index records them
-    // (HammingIndex.partitionCols); the hashed stream exposes doc_id /
-    // kind / phash, so any build column beyond those fails loudly at
-    // analysis instead of degrading to a false-negative dedup path.
-    val pcols = index.partitionCols.map(col)
-    val bandKeys = array((0 until index.bands).map { b =>
-      concat_ws(":", pcols ++ Seq(lit(b),
-        shiftright(col("phash"), b * index.bandBits).bitwiseAND(lit(mask))): _*)
-    }: _*)
+    // HammingIndex.probeKeys fuses the key from the partition columns the
+    // index was built with; the hashed stream exposes doc_id / kind /
+    // phash, so any build column beyond those fails loudly at analysis
+    // instead of degrading to a false-negative dedup path.
+    val bandKeys = index.probeKeys(col("phash"))
     // A quarantined row explodes to exactly one null band key: it joins
     // no postings (null never equals), survives the left join, and
     // reaches the group stage as the document's single candidate-free

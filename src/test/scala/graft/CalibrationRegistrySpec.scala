@@ -14,12 +14,12 @@ class CalibrationRegistrySpec extends AnyFunSuite {
   private lazy val calibrationOnly = annotations("tools/calibration_only.json")
   private lazy val dataProportional = annotations("tools/data_proportional.json")
 
-  test("every registered query has an oracle and every oracle a query") {
-    val qs = SparkEntry.queries.keySet
-    val os = SparkEntry.oracleSql.keySet
-    assert(qs == os,
-      s"queries without oracle: ${(qs -- os).toSeq.sorted}; " +
-        s"oracles without query: ${(os -- qs).toSeq.sorted}")
+  test("query spec names are unique and every spec has oracle SQL") {
+    val names = SparkEntry.specs.map(_.name)
+    val dups = names.groupBy(identity).collect { case (n, ns) if ns.size > 1 => n }
+    assert(dups.isEmpty, s"names registered twice: ${dups.toSeq.sorted}")
+    val blank = SparkEntry.specs.filter(q => q.oracleSql == null || q.oracleSql.trim.isEmpty)
+    assert(blank.isEmpty, s"specs without oracle SQL: ${blank.map(_.name).sorted}")
   }
 
   test("calibration-only entries are registered queries with registered twins") {

@@ -4,10 +4,15 @@ itself never depends on Python). Usage:
 
     sbt "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_out"
     python3 tools/selfcheck.py /root/testdata/sf0.01 /tmp/verify_out [query ...]
+    python3 tools/selfcheck.py --against /tmp/parent_out /tmp/verify_out [query ...]
 
 Registers the driver tables as DuckDB views, runs each oracle SQL, and
 compares against the engine's parquet output: row count, column names
-(sorted), and values (rows sorted, exact)."""
+(sorted), and values (rows sorted, exact).
+
+With --against, compares two Verify output trees instead (e.g. a parent
+commit's and a change's): oracle_sql.json byte for byte, and every result
+set row for row (same canonical order, exact values, same dtypes)."""
 import sys, json, glob, os
 import duckdb
 import pandas as pd
@@ -26,7 +31,35 @@ def canon(df):
     df = df.sort_values(by=list(df.columns), ignore_index=True)
     return df
 
+def against(parent, outdir, only):
+    n_same = n_diff = 0
+    with open(f"{parent}/oracle_sql.json", "rb") as f:
+        want = f.read()
+    with open(f"{outdir}/oracle_sql.json", "rb") as f:
+        got = f.read()
+    if want == got:
+        print(f"SAME oracle_sql.json ({len(got)} bytes)"); n_same += 1
+    else:
+        print("DIFF oracle_sql.json: bytes differ"); n_diff += 1
+    for name in sorted(set(json.loads(want)) | set(json.loads(got))):
+        if only and name not in only:
+            continue
+        p, c = load_result(parent, name), load_result(outdir, name)
+        if p is None or c is None:
+            side = "parent" if p is None else "change"
+            print(f"DIFF {name}: {side} output missing"); n_diff += 1; continue
+        p, c = canon(p), canon(c)
+        try:
+            pd.testing.assert_frame_equal(p, c, check_exact=True)
+            print(f"SAME {name} ({len(c)} rows)"); n_same += 1
+        except AssertionError as ex:
+            print(f"DIFF {name}: {str(ex)[:500]}"); n_diff += 1
+    print(f"== {n_same} same / {n_diff} differ ==")
+    sys.exit(1 if n_diff else 0)
+
 def main():
+    if sys.argv[1] == "--against":
+        against(sys.argv[2], sys.argv[3], set(sys.argv[4:]))
     sfdir, outdir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
