@@ -92,13 +92,14 @@ object Placement {
     ClusterSnapshot(nodes, sts)
   }
 
-  /** The `PlacementRequest` a batch request row stands for (shared by the
-    * pick and invariant operators so their greedy inputs cannot drift). */
-  private def toRequest(r: RequestRow): PlacementRequest =
+  /** The `PlacementRequest` a batch request row stands for, with `favored`
+    * datanodes (shared by the pick, invariant and favored-invariant
+    * operators so their greedy inputs cannot drift). */
+  private def toRequest(r: RequestRow, favored: Seq[String] = Nil): PlacementRequest =
     PlacementRequest(r.request_id, r.additional, r.writer_uuid,
       chosen = Nil, returnChosen = false, excludes = r.excludes,
       blockSize = r.block_size,
-      policy = Map("DISK" -> r.additional.toLong))
+      policy = Map("DISK" -> r.additional.toLong), favored = favored)
 
   /** P1–P9 batch mode: one balanced allocation per request row, computed in
     * executors against the broadcast snapshot. Randomness is seeded by
@@ -158,10 +159,8 @@ object Placement {
     val bc = spark.sparkContext.broadcast(snap)
     requests.as[FavoredRequestRow].map { r =>
       val s = bc.value
-      val req = PlacementRequest(r.request_id, r.additional, r.writer_uuid,
-        chosen = Nil, returnChosen = false, excludes = r.excludes,
-        blockSize = r.block_size,
-        policy = Map("DISK" -> r.additional.toLong), favored = r.favored)
+      val req = toRequest(RequestRow(r.request_id, r.additional, r.writer_uuid,
+        r.excludes, r.block_size), r.favored)
       val picks = PolicyEngine.chooseTarget(s, req, new Random(r.request_id))
       val nodes = picks.map(st => s.nodeByUuid(st.nodeUuid))
       val racks = nodes.map(n => PolicyEngine.parentPath(n.path))

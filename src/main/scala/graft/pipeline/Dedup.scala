@@ -75,28 +75,37 @@ object Dedup {
       .as[(Long, Seq[String])]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        it.flatMap { case (id, toksSeq) =>
-          val toks = toksSeq.toArray
-          val n = toks.length - (w - 1)
-          if (n <= 0) None
-          else {
-            val seen = new java.util.LinkedHashSet[String]()
-            var i = 0
-            while (i < n) {
-              val sb = new java.lang.StringBuilder(toks(i))
-              var o = 1
-              while (o < w) { sb.append(' ').append(toks(i + o)); o += 1 }
-              seen.add(sb.toString)
-              i += 1
-            }
-            val arr = new Array[Long](seen.size())
-            val itr = seen.iterator()
-            var j = 0
-            while (itr.hasNext) { arr(j) = md5Top60(md, itr.next()); j += 1 }
-            Some((id, arr))
-          }
+        it.flatMap { case (id, toks) =>
+          val hs = shingleHashes(md, toks.toArray, w)
+          if (hs.isEmpty) None else Some((id, hs))
         }
       }.toDF("doc_id", "hs")
+  }
+
+  /** Distinct `w`-token shingle hashes of one document's tokens, in
+    * first-occurrence order: `md5Top60` of each space-joined window. Empty
+    * when there are fewer than `w` tokens. The per-row kernel of
+    * [[hashedShingleDf]], shared with streaming near-dup admission. */
+  private[graft] def shingleHashes(md: java.security.MessageDigest,
+                                   toks: Array[String], w: Int): Array[Long] = {
+    val n = toks.length - (w - 1)
+    if (n <= 0) Array.emptyLongArray
+    else {
+      val seen = new java.util.LinkedHashSet[String]()
+      var i = 0
+      while (i < n) {
+        val sb = new java.lang.StringBuilder(toks(i))
+        var o = 1
+        while (o < w) { sb.append(' ').append(toks(i + o)); o += 1 }
+        seen.add(sb.toString)
+        i += 1
+      }
+      val arr = new Array[Long](seen.size())
+      val itr = seen.iterator()
+      var j = 0
+      while (itr.hasNext) { arr(j) = md5Top60(md, itr.next()); j += 1 }
+      arr
+    }
   }
 
   /** (doc_a, doc_b, inter, union_size): per-candidate-pair set intersection
@@ -425,22 +434,30 @@ object Dedup {
     val as = (0 until numPerms).map(permA).toArray
     val bs = (0 until numPerms).map(permB).toArray
     hdf.as[(Long, Array[Long])].mapPartitions { it =>
-      it.map { case (docId, hs) =>
-        val mins = Array.fill(numPerms)(Long.MaxValue)
-        var i = 0
-        while (i < hs.length) {
-          val h = hs(i) % P
-          var j = 0
-          while (j < numPerms) {
-            val v = (as(j) * h + bs(j)) % P
-            if (v < mins(j)) mins(j) = v
-            j += 1
-          }
-          i += 1
-        }
-        (docId, mins.toSeq)
-      }
+      it.map { case (docId, hs) => (docId, minhashMins(hs, as, bs).toSeq) }
     }.toDF("doc_id", "sig")
+  }
+
+  /** MinHash minima of one shingle-hash array: slot `j` is the minimum of
+    * `(as(j) * (h % P) + bs(j)) % P` over `hs` (`Long.MaxValue` when `hs` is
+    * empty). The per-row kernel of [[minhashSigDf]], shared with streaming
+    * near-dup admission. */
+  private[graft] def minhashMins(hs: Array[Long], as: Array[Long],
+                                 bs: Array[Long]): Array[Long] = {
+    val numPerms = as.length
+    val mins = Array.fill(numPerms)(Long.MaxValue)
+    var i = 0
+    while (i < hs.length) {
+      val h = hs(i) % P
+      var j = 0
+      while (j < numPerms) {
+        val v = (as(j) * h + bs(j)) % P
+        if (v < mins(j)) mins(j) = v
+        j += 1
+      }
+      i += 1
+    }
+    mins
   }
 
   /** (doc_id, band, key): the LSH band keys of a signature relation —
@@ -1125,31 +1142,31 @@ object Dedup {
     * labeling every document with the smallest doc_id of its component —
     * the canonical-representative step that turns pair lists (from
     * [[minhashLshPairs]] / [[simhashPairs]] / [[ngramJaccardPairs]]) into a
-    * keep-one-per-cluster dedup decision.
+    * keep-one-per-cluster dedup decision. The (doc_a, doc_b) projection is
+    * persisted and counted first; the count picks one of two paths.
     *
-    * Algorithm: distributed min-label propagation with *pointer jumping*.
-    * Each round (a) joins the (bidirectional) edge list with current labels
-    * and takes the per-node minimum — one shuffle, all relational, no
-    * driver-side graph — then (b) shortcuts `label(u) := label(label(u))`
-    * with a self-join of the label relation. The shortcut is what makes
-    * high-diameter components converge: plain propagation needs
-    * diameter-many rounds (a 1000-long chain would blow any round budget —
-    * the failure mode star-contraction variants exist for, Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14), while
-    * propagate+jump halves the remaining pointer depth per round, so
-    * `maxRounds = 25` covers diameters past 2^24. LSH near-dup components
-    * are near-cliques that close in 2-4 rounds either way; the jump costs
-    * one extra small self-join of the (|V|-row) label relation per round.
+    * Driver path: at or under `driverMaxEdges` pairs (default
+    * [[DriverMaxEdges]]) with integral ids, the pairs are collected as
+    * packed longs and resolved by one union-by-min union-find on the
+    * driver. The counting pass already packs every partition within an
+    * even share of the bound, so a small input is counted and collected in
+    * one job. The bound is sized for driver memory, not for any input: at
+    * 2^20 pairs the packed edges are 16 MB and the working set (edges,
+    * sorted distinct ids, int parents) stays under ~40 MB. The returned
+    * relation is built from driver-held arrays, so it holds no executor
+    * blocks: an executor loss recomputes it from the driver, which is why
+    * this path needs no checkpoint in either mode. It is decided before
+    * `checkpointDir` is touched — a reliable-mode call that takes it writes
+    * no files and leaves the session's checkpoint dir as it was.
     *
-    * Convergence is detected *exactly*: the monotone per-round label sum is
-    * aggregated as DECIMAL(38,0), not BIGINT — at billions of documents a
-    * Long sum wraps, and a wrapped "unchanged" sum would falsely converge
-    * and silently ship wrong clusters.
-    *
-    * Each round's labels are checkpointed: persist() alone caches *data*
-    * but keeps the logical plan, and since every round references the
-    * previous labels twice the plan tree doubles per round — exponential
-    * analysis memory by round ~20. Checkpointing truncates the lineage so
+    * Star path: above the bound (or for other id types), alternating
+    * large-star / small-star contraction over the same cache (see
+    * `starContract`; Kiveris et al., "Connected Components in MapReduce
+    * and Beyond", SoCC'14) — O(log² n) rounds on any graph, whatever its
+    * diameter or id layout. Each round's relation is checkpointed:
+    * persist() alone caches *data* but keeps the logical plan, and every
+    * round references the previous one several times, so the plan tree
+    * would grow with every round. Checkpointing truncates the lineage so
     * every round plans against a materialized relation. Two modes:
     * `checkpointDir = None` (default) uses `localCheckpoint` — fastest, but
     * local checkpoint blocks die with their executor, so an executor loss
@@ -1163,8 +1180,8 @@ object Dedup {
     * (Spark itself only cleans checkpoints with
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true`, and then only
     * at GC time), and the session's previously-configured checkpoint dir is
-    * restored on exit — so a 20-round job holds at most ~3 snapshots of the
-    * small label relation at any instant instead of 20+, and unrelated
+    * restored on exit — so a run holds at most 3 snapshots of the shrinking
+    * edge relation at any instant instead of one per round, and unrelated
     * checkpoints in the same session are unaffected. The one file backing
     * the RETURNED relation is kept; callers may remove the run
     * subdirectory once they are done with the result. A job that dies
@@ -1172,38 +1189,17 @@ object Dedup {
     * be both safe and automatic) — the uuid namespacing makes those safe
     * to sweep by age.
     *
-    * Small-graph driver path: the (doc_a, doc_b) projection is persisted
-    * and counted first; the counting pass already packs every partition
-    * within an even share of the bound, so a small input is counted and
-    * collected in one job. At or under `driverMaxEdges` pairs (default
-    * [[DriverMaxEdges]]) with integral ids, the pairs are collected as
-    * packed longs and resolved by one union-by-min union-find on the driver
-    * instead of the rounds above — each round is four small jobs (two
-    * rounds minimum even for near-cliques), so on the ~1k-pair inputs the
-    * pipelines produce the rounds are almost all scheduling and checkpoint
-    * overhead. The bound is sized for driver memory, not for any input:
-    * at 2^20 pairs the packed edges are 16 MB and the working set (edges,
-    * sorted distinct ids, int parents) stays under ~40 MB. The returned
-    * relation is built from driver-held arrays, so it holds no executor
-    * blocks: an executor loss recomputes it from the driver, which is why
-    * this path needs no checkpoint in either mode. It is decided before
-    * `checkpointDir` is touched — a reliable-mode call that takes it writes
-    * no files and leaves the session's checkpoint dir as it was. Above the
-    * bound, the rounds (and their fallback) run over the same cache.
     * Both paths return the same rows and schema, including the
     * (NULL, NULL) row a NULL endpoint gets. One INFO line per call names
-    * the path, the pair count and, for the rounds, rounds-to-converge and
-    * whether star contraction ran.
+    * the path, the pair count and, for the star path, its round count.
     *
     * @param driverMaxEdges pair-count ceiling for the driver path; 0 forces
-    *        the rounds (test hook — the equivalence spec pins both paths)
+    *        the star path (test hook — the equivalence spec pins both paths)
     *
     * Returns (doc_id, cluster_id) for every document that appears in at
     * least one pair; unpaired documents are their own singleton clusters by
     * definition and are left to the caller (they need no join to decide). */
-  def resolveClusters(pairs: DataFrame, maxRounds: Int = 25,
-                      checkpointDir: Option[String] = None,
-                      jumpsPerRound: Int = 2,
+  def resolveClusters(pairs: DataFrame, checkpointDir: Option[String] = None,
                       driverMaxEdges: Long = DriverMaxEdges): DataFrame = {
     val spark = pairs.sparkSession
     val sc = spark.sparkContext
@@ -1212,11 +1208,11 @@ object Dedup {
     // read; `proj.rdd` fills the cache (its own stage under AQE)
     val proj = pairs.select("doc_a", "doc_b").persist()
     try {
-      // labels before the first round: its schema is the result's schema
-      // on both paths (no round changes a type or a nullability)
-      val labels0 = edges0(proj).select(col("u").as("doc_id")).distinct()
-        .withColumn("cluster_id", col("doc_id"))
-      val idType = labels0.schema("doc_id").dataType
+      // the result's schema on both paths: both columns take the
+      // endpoints' common type and nullability
+      val schema = docIds(proj)
+        .select(col("doc_id"), col("doc_id").as("cluster_id")).schema
+      val idType = schema("doc_id").dataType
       val driverOk = driverMaxEdges > 0 &&
         (idType == LongType || idType == IntegerType)
       val rows = proj.rdd
@@ -1228,7 +1224,7 @@ object Dedup {
       val parts = sc.runJob(rows, packPairs(share) _)
       val nPairs = parts.map(_.rows).sum
       if (driverOk && nPairs <= driverMaxEdges) {
-        val out = driverClusters(proj, parts, labels0.schema)
+        val out = driverClusters(proj, parts, schema)
         log.info("resolveClusters path=driver edges={}", nPairs)
         out
       } else {
@@ -1237,10 +1233,8 @@ object Dedup {
           s"$base/graft-cc-${java.util.UUID.randomUUID()}")
         runDir.foreach(sc.setCheckpointDir)
         try {
-          val (out, rounds, star) = resolveClustersImpl(proj, labels0,
-            maxRounds, checkpointDir.isDefined, jumpsPerRound)
-          log.info("resolveClusters path=rounds edges={} rounds={} starContraction={}",
-            nPairs, rounds, star)
+          val (out, rounds) = starContract(proj, checkpointDir.isDefined)
+          log.info("resolveClusters path=star edges={} rounds={}", nPairs, rounds)
           out
         } finally {
           // leave the session's checkpoint configuration the way we found
@@ -1253,6 +1247,13 @@ object Dedup {
       }
     } finally proj.unpersist()
   }
+
+  /** Every endpoint of a (doc_a, doc_b) relation as one `doc_id` column of
+    * the endpoints' common type (NULL endpoints included), from ONE scan:
+    * Spark shares no subplans across branches, so a union of two
+    * projections would read the pairs twice. */
+  private def docIds(pairs: DataFrame): DataFrame =
+    pairs.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
 
   /** One partition of a (doc_a, doc_b) relation: its row count and, if
     * that is at most `cap`, its pairs packed as longs — both endpoints of
@@ -1293,8 +1294,8 @@ object Dedup {
       if (withheld.isEmpty) Array.empty[PackedPairs]
       else sc.runJob(proj.rdd, packPairs(Long.MaxValue) _, withheld))
     val (ids, root) = unionFindMin(Array.concat(parts.map(_.packed).toSeq: _*))
-    // the rounds give a NULL endpoint one (NULL, NULL) row: NULL never
-    // equi-joins, so its label is never set
+    // the star path gives a NULL endpoint one (NULL, NULL) row: NULL
+    // never equi-joins, so its label is never set
     val nullRow = parts.exists(_.sawNull)
     val isInt = schema("doc_id").dataType == IntegerType
     val n = ids.length
@@ -1350,22 +1351,46 @@ object Dedup {
     (ids, parent)
   }
 
-  private def resolveClustersImpl(proj: DataFrame, labels0: DataFrame,
-                                  maxRounds: Int, reliable: Boolean,
-                                  jumpsPerRound: Int): (DataFrame, Int, Boolean) = {
-    val spark = proj.sparkSession
+  /** Round limit of [[starContract]]. Rounds grow about logarithmically in
+    * practice: a scattered-id chain takes 11 rounds at 2,000 nodes and 13
+    * at 20,000, LSH-shaped graphs of small cliques take 2. Reaching the
+    * limit throws rather than ship partial labels. */
+  private val StarMaxRounds = 40
+
+  /** Connected components by alternating large-star / small-star
+    * contraction (Kiveris et al., "Connected Components in MapReduce and
+    * Beyond", SoCC'14): converges in O(log² n) rounds on ANY graph shape,
+    * including high-diameter components with scattered ids. Each round is
+    * two grouped passes over a (shrinking) edge list:
+    *   large-star: every node links its strictly-larger neighbors to the
+    *   minimum of its closed neighborhood;
+    *   small-star: every node links its not-larger neighbors (and itself)
+    *   to that minimum.
+    * Termination is EXACT set equality of the canonical edge relation
+    * (anti-join emptiness, not a hash probe — a hash-sum collision would
+    * silently ship wrong clusters). Returns (doc_id, cluster_id = component
+    * minimum) for every node appearing in `pairs`, and the round count.
+    *
+    * Every round's relations are checkpointed (`checkpoint()` when
+    * `reliable`, else `localCheckpoint`), and so is the result, so it no
+    * longer references `pairs` or any internal round. In reliable mode
+    * every superseded relation's checkpoint file is deleted as soon as its
+    * replacement lands (the [[resolveClusters]] retention contract). */
+  private def starContract(pairs: DataFrame, reliable: Boolean): (DataFrame, Int) = {
+    val spark = pairs.sparkSession
     // The checkpointed frame is rebuilt from its RDD (two narrow conversion
-    // maps over the small label relation) to DROP the inherited
-    // `originStats`: Catalyst's size-only estimator gives a join the
-    // PRODUCT of its children's sizeInBytes, and Dataset.checkpoint carries
-    // that BigInt forward — so the pointer-jump SELF-join would SQUARE
-    // sizeInBytes every round. Squaring doubles the BigInt's digit count
-    // per round, and by round ~20 the driver spends tens of seconds per
-    // round inside BigInteger.multiply (Karatsuba/ToomCook) during
-    // planning. Diagnosed via jstack on a minimal repro: an iterated
-    // checkpointed self-join blows up (118 s/iter by iter 25) while the
-    // stripped version stays flat. Fresh LogicalRDDs reset to the default
-    // size estimate, which AQE replaces with real runtime sizes anyway.
+    // maps over the relation) to DROP the inherited `originStats`:
+    // Catalyst's size-only estimator gives a join the PRODUCT of its
+    // children's sizeInBytes, and Dataset.checkpoint carries that BigInt
+    // forward — so the self-joins of every round (each star step joins the
+    // edges with their own per-node minima) would compound sizeInBytes
+    // round after round. That multiplies the BigInt's digit count per
+    // round, and by round ~20 the driver spends tens of seconds per round
+    // inside BigInteger.multiply (Karatsuba/ToomCook) during planning.
+    // Diagnosed via jstack on a minimal repro: an iterated checkpointed
+    // self-join blows up (118 s/iter by iter 25) while the stripped version
+    // stays flat. Fresh LogicalRDDs reset to the default size estimate,
+    // which AQE replaces with real runtime sizes anyway.
     // reliable mode tracks each materialized relation's backing checkpoint
     // file (found by walking the short post-checkpoint lineage) so retired
     // rounds can be deleted eagerly instead of accumulating one snapshot
@@ -1375,7 +1400,7 @@ object Dedup {
       if (depth > 8) None
       else rdd.getCheckpointFile.orElse(
         rdd.dependencies.view.flatMap(d => backingFile(d.rdd, depth + 1)).headOption)
-    val ckpt: DataFrame => DataFrame = { df0 =>
+    def ckpt(df0: DataFrame): DataFrame = {
       val ck = if (reliable) df0.checkpoint(eager = true)
                else df0.localCheckpoint(eager = true)
       val rdd = ck.rdd
@@ -1385,7 +1410,7 @@ object Dedup {
     }
     // delete a retired relation's checkpoint file NOW — only ever called
     // once everything derived from `df` has itself been materialized
-    val retire: DataFrame => Unit = { df =>
+    def retire(df: DataFrame): Unit = {
       val p = ckptFiles.remove(df)
       if (p != null) {
         val path = new org.apache.hadoop.fs.Path(p)
@@ -1393,144 +1418,6 @@ object Dedup {
           .delete(path, true)
       }
     }
-    // both edge directions from ONE scan of the cached pair projection — a
-    // union of two projections would read it twice, since Spark shares no
-    // subplans across DataFrame branches
-    val edges = edges0(proj)
-    var labels = ckpt(labels0)
-    // exact scalar convergence check; coalesce: an empty pair relation must
-    // yield an empty result, not a NULL-sum crash
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("cluster_id").cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)")))
-        .head().getDecimal(0)
-    val log = org.slf4j.LoggerFactory.getLogger(getClass)
-    var prevSum = labelSum(labels)
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      val roundT0 = System.nanoTime()
-      val nbrMin = edges
-        .join(labels.withColumnRenamed("doc_id", "v"), "v")
-        .groupBy(col("u").as("doc_id"))
-        .agg(min("cluster_id").as("nbr_min"))
-      val tProp0 = System.nanoTime()
-      val prop = ckpt(labels
-        .join(nbrMin, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id")))
-            .as("cluster_id")))
-      // round k-1's snapshot is dead once `prop` is materialized
-      retire(labels)
-      val tProp = (System.nanoTime() - tProp0) / 1000000L
-      // pointer jump: follow the label one hop (label(label(u))). Labels
-      // only decrease and label(v) <= v, so the jumped label never needs a
-      // `least` with the old one; left join + coalesce keeps roots (their
-      // label is themselves) intact. `prop` is checkpointed first — Spark
-      // shares no subplans, so an unmaterialized self-join would run the
-      // propagation twice.
-      val tJump0 = System.nanoTime()
-      // each jump squares the compressed pointer reach; a couple of these
-      // cheap |V|-row self-joins per round cuts the round count (and with
-      // it the number of expensive edge-list shuffles) on components whose
-      // min-id sits far from most members
-      var next = prop
-      var j = 0
-      while (j < math.max(1, jumpsPerRound)) {
-        val jumped = ckpt(next
-          .join(next.select(col("doc_id").as("cluster_id"),
-            col("cluster_id").as("jumped")), Seq("cluster_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("jumped"), col("cluster_id")).as("cluster_id")))
-        retire(next)
-        next = jumped
-        j += 1
-      }
-      val tJump = (System.nanoTime() - tJump0) / 1000000L
-      val tSum0 = System.nanoTime()
-      val nextSum = labelSum(next)
-      val tSum = (System.nanoTime() - tSum0) / 1000000L
-      labels = next
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      round += 1
-      // rounds-to-converge is THE health metric of this operator at scale
-      // (a growing round count means the input stopped being near-clique)
-      log.info("resolveClusters round {} took {} ms (prop={} jump={} sum={} converged={})",
-        round, (System.nanoTime() - roundT0) / 1000000L, tProp, tJump, tSum, converged)
-    }
-    val result =
-      if (converged) labels
-      else {
-        // High-diameter fallback: min-label propagation is diameter-bound
-        // when node ids are scattered (pointer jumping only doubles reach
-        // when pointer targets are nearer the minimum — true for ordered-id
-        // chains, false for e.g. stride-shifted ids). Rather than throwing,
-        // contract the QUOTIENT graph — edges mapped through the
-        // part-propagated labels, self-loops dropped — with alternating
-        // large-star/small-star (O(log² n) rounds regardless of diameter or
-        // id layout), then compose the two labelings. The quotient is
-        // small: only the unconverged structure survives the mapping.
-        log.info("resolveClusters falling back to star contraction after {} rounds", round)
-        val quotient = ckpt(edges
-          .join(labels.withColumnRenamed("doc_id", "u")
-            .withColumnRenamed("cluster_id", "lu"), "u")
-          .join(labels.withColumnRenamed("doc_id", "v")
-            .withColumnRenamed("cluster_id", "lv"), "v")
-          .select(col("lu").as("doc_a"), col("lv").as("doc_b"))
-          .where(col("doc_a") =!= col("doc_b"))
-          .distinct())
-        val l2 = starContract(quotient, ckpt, retire = retire)
-        // starContract materializes its result, so the quotient edges are
-        // already dead here; labels and l2 die once the composition lands
-        retire(quotient)
-        // materialized (via ckpt) BEFORE the caller unpersists the pairs
-        val composed = ckpt(labels
-          .join(l2.select(col("doc_id").as("cluster_id"),
-            col("cluster_id").as("root")), Seq("cluster_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("root"), col("cluster_id")).as("cluster_id")))
-        retire(l2)
-        retire(labels)
-        composed
-      }
-    (result, round, !converged)
-  }
-
-  /** Bidirectional edge view of a (doc_a, doc_b) pair relation from ONE
-    * scan (Spark shares no subplans across branches). */
-  private def edges0(pairs: DataFrame): DataFrame =
-    pairs.select(explode(array(
-        struct(col("doc_a").as("u"), col("doc_b").as("v")),
-        struct(col("doc_b").as("u"), col("doc_a").as("v")))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-
-  /** Connected components by alternating large-star / small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14): converges in O(log² n) rounds on ANY graph shape —
-    * the guarantee min-label propagation lacks for high-diameter
-    * components with scattered ids. Each round is two grouped passes over
-    * a (shrinking) edge list:
-    *   large-star: every node links its strictly-larger neighbors to the
-    *   minimum of its closed neighborhood;
-    *   small-star: every node links its not-larger neighbors (and itself)
-    *   to that minimum.
-    * Termination is EXACT set equality of the canonical edge relation
-    * (anti-join emptiness, not a hash probe — a hash-sum collision would
-    * silently ship wrong clusters). Returns (doc_id, cluster_id = component
-    * minimum) for every node appearing in `pairs`.
-    *
-    * Used as the [[resolveClusters]] fallback; also correct standalone
-    * (PropertySpec cross-checks it against union-find on random graphs).
-    *
-    * The result is materialized through `ckpt` before returning (so it no
-    * longer references `pairs` or any internal round), and every
-    * superseded internal round is handed to `retire` as soon as its
-    * replacement lands — in resolveClusters' reliable mode that deletes
-    * the round's checkpoint file immediately. */
-  def starContract(pairs: DataFrame, ckpt: DataFrame => DataFrame,
-                   maxRounds: Int = 40,
-                   retire: DataFrame => Unit = _ => ()): DataFrame = {
     // canonical undirected storage: (a < b), distinct
     def canon(df: DataFrame): DataFrame =
       df.where(col("u") =!= col("v"))
@@ -1562,7 +1449,7 @@ object Dedup {
     var e = ckpt(canon(pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))))
     var round = 0
     var stable = false
-    while (!stable && round < maxRounds) {
+    while (!stable && round < StarMaxRounds) {
       // the large-star intermediate is checkpointed too: small-star
       // references its input three times, and Spark shares no subplans
       val ls = ckpt(largeStar(e))
@@ -1578,22 +1465,22 @@ object Dedup {
     }
     if (!stable)
       throw new IllegalStateException(
-        s"starContract did not reach a star fixpoint in $maxRounds rounds")
+        s"starContract did not reach a star fixpoint in $StarMaxRounds rounds")
     // terminal stars: every node's label = min of its closed neighborhood;
     // nodes that contracted out of the edge set are roots of nothing —
     // they appear on the left of some surviving edge or not at all, so
-    // recover labels for ALL original nodes via left join + self default
+    // recover labels for ALL original nodes via left join + self default.
+    // A NULL endpoint never equi-joins, so it gets one (NULL, NULL) row.
     val b = bidirect(e)
     val starLabels = b.groupBy(col("u").as("doc_id"))
       .agg(least(min(col("v")), col("doc_id")).as("cluster_id"))
     val out = ckpt(
-      pairs.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-        .distinct()
+      docIds(pairs).distinct()
         .join(starLabels, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("cluster_id"), col("doc_id")).as("cluster_id")))
     retire(e)
-    out
+    (out, round)
   }
 
   /** Top 60 bits of md5 — bit-identical to `hash60` (first 15 hex chars

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.Similarity.PreparedVec
+import graft.pipeline.Similarity.{PreparedVec, cosDouble, dot}
 
 /** IVF-style approximate nearest-neighbor search: a coarse quantizer
   * partitions vectors into centroid buckets; a query probes only its
@@ -17,15 +17,6 @@ import graft.pipeline.Similarity.PreparedVec
   * exact integer-micros arithmetic as [[Similarity]].
   */
 object Ivf {
-
-  private def dot(a: Array[Long], b: Array[Long]): Long = {
-    var s = 0L; var i = 0
-    while (i < a.length && i < b.length) { s += a(i) * b(i); i += 1 }
-    s
-  }
-
-  private def cos(d: Long, n1: Long, n2: Long): Double =
-    d.toDouble / (math.sqrt(n1.toDouble) * math.sqrt(n2.toDouble))
 
   /** Deterministic coarse centroids: every stride-th prepared vector in
     * `vec_id` order. Selection runs *in the cluster*: the corpus is
@@ -120,7 +111,7 @@ object Ivf {
           var bestCos = Double.NegativeInfinity
           var i = 0
           while (i < cs.length) {
-            val c = cos(dot(v.xs, cs(i).xs), v.norm2, cs(i).norm2)
+            val c = cosDouble(dot(v.xs, cs(i).xs), v.norm2, cs(i).norm2)
             if (c > bestCos) { bestCos = c; best = i }
             i += 1
           }
@@ -181,7 +172,7 @@ object Ivf {
       var bestCos = Double.NegativeInfinity
       var i = 0
       while (i < cs.length) {
-        val c = cos(dot(v.xs, cs(i).xs), v.norm2, cs(i).norm2)
+        val c = cosDouble(dot(v.xs, cs(i).xs), v.norm2, cs(i).norm2)
         if (c > bestCos) { bestCos = c; best = i }
         i += 1
       }
@@ -247,7 +238,7 @@ object Ivf {
       .flatMap { q =>
         val cs = bcCents.value
         cs.indices
-          .sortBy(i => (-cos(dot(q.xs, cs(i).xs), q.norm2, cs(i).norm2), i))
+          .sortBy(i => (-cosDouble(dot(q.xs, cs(i).xs), q.norm2, cs(i).norm2), i))
           .take(nprobe)
           .map(ci => (q.vec_id, ci, q.xs, q.norm2))
       }.toDF("query_id", "centroid_id", "xs_q", "n_q")
@@ -256,7 +247,7 @@ object Ivf {
       .where(col("vec_id") =!= col("query_id"))
       .as[(Int, Long, Array[Long], Long, Long, Array[Long], Long)]
       .map { case (_, vid, xs, n, qid, xsQ, nQ) =>
-        (qid, vid, cos(dot(xsQ, xs), nQ, n))
+        (qid, vid, cosDouble(dot(xsQ, xs), nQ, n))
       }
       .toDF("query_id", "neighbor_id", "cos")
       .withColumn("rank", row_number().over(
@@ -552,7 +543,7 @@ object Ivf {
     val probes = Similarity.prepared(batch).as[PreparedVec].flatMap { q =>
       val cs = bcCents.value
       cs.indices
-        .sortBy(i => (-cos(dot(q.xs, cs(i).xs), q.norm2, cs(i).norm2), i))
+        .sortBy(i => (-cosDouble(dot(q.xs, cs(i).xs), q.norm2, cs(i).norm2), i))
         .take(nprobe)
         .map(ci => (q.vec_id, ci, q.xs, q.norm2))
     }.toDF("query_id", "centroid_id", "xs_q", "n_q")
@@ -560,7 +551,7 @@ object Ivf {
       .join(probes, "centroid_id")
       .as[(Int, Long, Array[Long], Long, Long, Array[Long], Long)]
       .map { case (_, vid, xs, n, qid, xsQ, nQ) =>
-        (qid, vid, cos(dot(xsQ, xs), nQ, n))
+        (qid, vid, cosDouble(dot(xsQ, xs), nQ, n))
       }
       .toDF("vec_id", "neighbor_id", "cos")
       .groupBy("vec_id")

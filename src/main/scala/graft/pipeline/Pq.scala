@@ -321,11 +321,6 @@ object Pq extends Serializable {
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("adc_dist"))
   }
 
-  /** IEEE-deterministic cosine from exact integers (same rule as
-    * [[Similarity.bruteTopK]]'s ranking). */
-  private def cosDouble(d: Long, n1: Long, n2: Long): Double =
-    d.toDouble / (math.sqrt(n1.toDouble) * math.sqrt(n2.toDouble))
-
   /** Exact full-vector squared L2. */
   private def intL2(a: Array[Long], b: Array[Long]): Long = {
     var s = 0L
@@ -567,11 +562,7 @@ object Pq extends Serializable {
       .as[(Long, Long, Array[Long], Long)]
       .map { case (qid, nid, xs, n2) =>
         val q = bcQ.value(qid)
-        var d = 0L
-        var i = 0
-        val qx = q.xs
-        while (i < qx.length && i < xs.length) { d += qx(i) * xs(i); i += 1 }
-        (qid, nid, cosDouble(d, q.norm2, n2))
+        (qid, nid, Similarity.cosDouble(Similarity.dot(q.xs, xs), q.norm2, n2))
       }
       .toDF("query_id", "neighbor_id", "cos")
     scored

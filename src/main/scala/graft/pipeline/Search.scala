@@ -461,15 +461,6 @@ object Search {
     bm25TopKTerms(docs, idCol, textCol, queryTerms, k, excludeSelf = true)
   }
 
-  /** Reciprocal-rank fusion (Cormack/Clarke/Buettcher, SIGIR 2009) of two
-    * ranked lists sharing (query_id, doc_id): `score = sum over lists of
-    * 1e6 div (c + rank)`, re-ranked. Exact integer scoring; a document
-    * absent from a list contributes 0 for it. The inputs are top-k
-    * relations (|queries| * k rows each), so fusion is workload-sized —
-    * one full-outer join and one rank window, nothing corpus-sized.
-    *
-    * @param a,b (query_id, doc_id, rk) relations, lower rk = better
-    */
   /** Positional phrase search: documents containing the exact token
     * sequence `phrase`, with occurrence counts — the retrieval primitive
     * bag-of-words BM25 cannot express ("new york" vs "york new").
@@ -503,6 +494,15 @@ object Search {
     matched.groupBy("doc_id").agg(count(lit(1)).as("n_matches"))
   }
 
+  /** Reciprocal-rank fusion (Cormack/Clarke/Buettcher, SIGIR 2009) of two
+    * ranked lists sharing (query_id, doc_id): `score = sum over lists of
+    * 1e6 div (c + rank)`, re-ranked. Exact integer scoring; a document
+    * absent from a list contributes 0 for it. The inputs are top-k
+    * relations (|queries| * k rows each), so fusion is workload-sized —
+    * one full-outer join and one rank window, nothing corpus-sized.
+    *
+    * @param a,b (query_id, doc_id, rk) relations, lower rk = better
+    */
   def rrfFuse(a: DataFrame, b: DataFrame, k: Int, cRrf: Int = 60): DataFrame = {
     require(k > 0 && cRrf >= 0)
     def side(df: DataFrame, name: String): DataFrame =

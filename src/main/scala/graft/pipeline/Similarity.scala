@@ -51,7 +51,8 @@ object Similarity {
       .withColumn("norm2", nativeDot(embs.sparkSession, col("xs"), col("xs")))
       .where(col("norm2") > 0)
 
-  private def dot(a: Array[Long], b: Array[Long]): Long = {
+  /** Exact integer dot product over the common prefix of `a` and `b`. */
+  private[graft] def dot(a: Array[Long], b: Array[Long]): Long = {
     var s = 0L; var i = 0
     while (i < a.length && i < b.length) { s += a(i) * b(i); i += 1 }
     s
@@ -72,7 +73,7 @@ object Similarity {
   }
 
   /** IEEE-deterministic cosine from exact integers. */
-  private def cosDouble(d: Long, n1: Long, n2: Long): Double =
+  private[graft] def cosDouble(d: Long, n1: Long, n2: Long): Double =
     d.toDouble / (math.sqrt(n1.toDouble) * math.sqrt(n2.toDouble))
 
   /** Exact near-duplicate pairs with cosine >= tauPct/100. Brute-force

@@ -214,9 +214,10 @@ object DedupQueries {
     * document labeled with its component's smallest doc_id (the canonical
     * keep-one representative). The oracle computes the same components with
     * a recursive transitive-closure CTE over the identical pair SQL — a
-    * fully independent algorithm (BFS closure vs min-label propagation)
-    * arriving at the same fixpoint, so a propagation bug (missed round,
-    * wrong join side, non-monotone update) diverges the hash. */
+    * fully independent algorithm (BFS closure vs union-find or star
+    * contraction) arriving at the same fixpoint, so a resolution bug
+    * (missed merge, wrong join side, non-minimal label) diverges the
+    * hash. */
   private def dedupClusters(s: SparkSession, dir: String): DataFrame =
     pipeline.Dedup.resolveClusters(
         pipeline.Dedup.minhashLshPairs(Tables.documents(s, dir)))

@@ -208,10 +208,10 @@ object MultimodalQueries {
     mediaPhashPairs(s, dir).orderBy("kind", "doc_a", "doc_b")
 
   /** Perceptual-duplicate GROUPS: connected components over the banded
-    * hamming pairs (Dedup.resolveClusters — the same pointer-jumping CC
-    * the text and embedding tiers use), resolving chains like
-    * original -> exact re-crawl -> perturbed re-crawl into one cluster
-    * per perceptual identity. Media kinds never pair across kind, so
+    * hamming pairs (Dedup.resolveClusters — the same driver union-find /
+    * star-contraction CC the text and embedding tiers use), resolving
+    * chains like original -> exact re-crawl -> perturbed re-crawl into one
+    * cluster per perceptual identity. Media kinds never pair across kind, so
     * components stay kind-homogeneous without carrying the column. The
     * oracle walks the same pair relation with a recursive CTE. */
   private def multimodalPhashClusters(s: SparkSession, dir: String): DataFrame =

@@ -100,45 +100,21 @@ object StreamingNearDup {
     val r = numPerms / bands
     val as = (0 until numPerms).map(Dedup.permA).toArray
     val bs = (0 until numPerms).map(Dedup.permB).toArray
-    val P = Dedup.P
-    // One narrow pass per document: distinct shingle hashes (same
-    // LinkedHashSet + md5Top60 as Dedup.hashedShingleDf), permutation
-    // minima, band keys — identical values to the batch path's helpers
-    // (drift is caught by the StreamingSpec batch-equivalence gate).
-    // Token-less/short docs keep an empty band array so they surface as
-    // 'admitted' through the outer joins, like the batch left join does.
+    // One narrow pass per document: distinct shingle hashes, permutation
+    // minima (Dedup's per-row kernels, so values equal the batch path's),
+    // band keys. Token-less/short docs keep an empty band array so they
+    // surface as 'admitted' through the outer joins, like the batch left
+    // join does.
     val keyed = stream
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
       .as[(Long, Option[Seq[String]])]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.map { case (id, toksOpt) =>
-          val toks = toksOpt.getOrElse(Seq.empty).toArray
-          val n = toks.length - 2
-          if (n <= 0) (id, Array.empty[Long], Array.empty[String])
+          val hs = Dedup.shingleHashes(md, toksOpt.getOrElse(Seq.empty).toArray, 3)
+          if (hs.isEmpty) (id, hs, Array.empty[String])
           else {
-            val seen = new java.util.LinkedHashSet[String]()
-            var i = 0
-            while (i < n) {
-              seen.add(toks(i) + " " + toks(i + 1) + " " + toks(i + 2))
-              i += 1
-            }
-            val hs = new Array[Long](seen.size())
-            val itr = seen.iterator()
-            var j = 0
-            while (itr.hasNext) { hs(j) = Dedup.md5Top60(md, itr.next()); j += 1 }
-            val mins = Array.fill(numPerms)(Long.MaxValue)
-            i = 0
-            while (i < hs.length) {
-              val h = hs(i) % P
-              var p = 0
-              while (p < numPerms) {
-                val v = (as(p) * h + bs(p)) % P
-                if (v < mins(p)) mins(p) = v
-                p += 1
-              }
-              i += 1
-            }
+            val mins = Dedup.minhashMins(hs, as, bs)
             val keys = Array.tabulate(bands)(b =>
               s"$b:${mins.slice(b * r, b * r + r).mkString("_")}")
             (id, hs, keys)

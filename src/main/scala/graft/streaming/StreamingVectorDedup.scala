@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupState
 
 import graft.pipeline.Ivf
+import graft.pipeline.Similarity.{cosDouble, dot}
 
 /** Streaming embedding-dedup admission: each vector of an ingest stream
   * is checked for high-cosine near-duplicates against a STATIC standing
@@ -149,15 +150,6 @@ object StreamingVectorDedup {
     }
   }
 
-  private def dot(a: Array[Long], b: Array[Long]): Long = {
-    var s = 0L; var i = 0
-    while (i < a.length && i < b.length) { s += a(i) * b(i); i += 1 }
-    s
-  }
-
-  private def cos(d: Long, n1: Long, n2: Long): Double =
-    d.toDouble / (math.sqrt(n1.toDouble) * math.sqrt(n2.toDouble))
-
   /** Streaming verdicts for a stream of (vec_id, embedding) rows. */
   def verdicts(spark: SparkSession, stream: DataFrame, index: Ivf.IvfIndex,
                tauPct: Int = 90, nprobe: Int = 4): Dataset[Verdict] = {
@@ -185,7 +177,7 @@ object StreamingVectorDedup {
           val probes =
             if (n2 <= 0) Array.empty[Int]
             else cs.indices
-              .sortBy(ci => (-cos(dot(xs, cs(ci).xs), n2, cs(ci).norm2), ci))
+              .sortBy(ci => (-cosDouble(dot(xs, cs(ci).xs), n2, cs(ci).norm2), ci))
               .take(nprobe).toArray
           (id, xs, n2, probes)
         }
@@ -216,7 +208,7 @@ object StreamingVectorDedup {
           var any = false
           rows.foreach {
             case (_, xs, n2, Some(nb), Some(nbXs), Some(nbN2)) =>
-              val c = cos(dot(xs, nbXs), n2, nbN2)
+              val c = cosDouble(dot(xs, nbXs), n2, nbN2)
               if (c > bestCos || (c == bestCos && nb < bestId)) {
                 bestCos = c; bestId = nb
               }

@@ -147,21 +147,9 @@ class DedupSpec extends AnyFunSuite {
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
   }
 
-  test("round-budget exhaustion falls back to star contraction, not wrong labels") {
-    // diameter-9 chain cannot converge by propagation in 2 rounds; instead
-    // of throwing (r4) or shipping part-propagated labels (never), the
-    // large-star/small-star fallback resolves the quotient graph exactly
-    val chain = (0L until 9L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val got = Dedup.resolveClusters(chain, maxRounds = 2, driverMaxEdges = 0)
-      .collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got.keySet == (0L to 9L).toSet && got.values.forall(_ == 0L))
-  }
-
-  test("shuffled-id high-diameter chain resolves via the fallback") {
-    // scattered ids defeat pointer jumping (reach doubles only when pointer
-    // targets are nearer the minimum), so this diameter-100 chain exhausts
-    // the propagation budget — the star-contraction fallback must close it
+  test("shuffled-id high-diameter chain resolves on the star path") {
+    // a diameter-100 chain with scattered ids: star contraction must close
+    // it whatever the id layout
     val ids = new scala.util.Random(42).shuffle((0L until 101L).toVector)
     val edges = (0 until 100).map(i => (ids(i), ids(i + 1)))
     val got = Dedup.resolveClusters(edges.toDF("doc_a", "doc_b"),
@@ -172,8 +160,8 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("star contraction alone matches union-find on random graphs") {
-    // maxRounds=0 skips propagation entirely: the fallback handles the full
-    // graph, cross-checked against an independent union-find model
+    // the forced star path over the full graph, cross-checked against an
+    // independent union-find model
     for (seed <- Seq(1, 2, 3)) {
       val rnd = new scala.util.Random(seed)
       val edges = Seq.fill(90)((rnd.nextInt(70).toLong, rnd.nextInt(70).toLong))
@@ -190,7 +178,7 @@ class DedupSpec extends AnyFunSuite {
       val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
       val expected = nodes.groupBy(find).values
         .flatMap(ms => { val m = ms.min; ms.map(_ -> m) }).toMap
-      val got = Dedup.resolveClusters(edges.toDF("doc_a", "doc_b"), maxRounds = 0,
+      val got = Dedup.resolveClusters(edges.toDF("doc_a", "doc_b"),
           driverMaxEdges = 0)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == expected, s"seed=$seed")
@@ -209,9 +197,9 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("cluster resolution closes a diameter-60 chain within the round budget") {
-    // plain min-label propagation would need 60 rounds (> maxRounds=25);
-    // the pointer-jumping shortcut closes it in O(log d). Model: one chain
-    // is one component labeled by its minimum.
+    // plain min-label propagation would need 60 rounds; star contraction
+    // closes it in O(log² n), well inside its round limit. Model: one
+    // chain is one component labeled by its minimum.
     val chain = (0L until 60L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val got = Dedup.resolveClusters(chain, driverMaxEdges = 0).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -300,7 +288,7 @@ class DedupSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     val written = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       .iterator().asScala.filter(_.toString != dir).toList
-    // no rdd-* checkpoint files, and not even the rounds' run subdir
+    // no rdd-* checkpoint files, and not even the star path's run subdir
     assert(written.isEmpty, s"driver path touched checkpointDir: $written")
   }
 

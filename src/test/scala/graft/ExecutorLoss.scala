@@ -156,7 +156,7 @@ object ExecutorLoss {
       SparkEntry.queries("q_part_pagerank")(spark, sfDir))
     // CC in reliable-checkpoint mode over the registered near-dup pair
     // relation: the one storage mode whose whole purpose is this fault.
-    // driverMaxEdges = 0 keeps it on the checkpointed rounds (the small
+    // driverMaxEdges = 0 keeps it on the checkpointed star path (the small
     // pair list would otherwise take the driver path, which checkpoints
     // nothing)
     val ccDir = Files.createTempDirectory("graft_cc_loss").toString

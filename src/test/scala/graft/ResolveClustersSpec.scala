@@ -8,10 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.Dedup
 
 /** `Dedup.resolveClusters` has two paths: a driver-side union-find for pair
-  * lists up to `driverMaxEdges`, and the checkpointed propagation +
-  * pointer-jump rounds above it (`driverMaxEdges = 0` forces them). Both
-  * must return the same schema and the same rows on every input, edge
-  * cases included, and both must equal an independent union-find model. */
+  * lists up to `driverMaxEdges`, and checkpointed star contraction above it
+  * (`driverMaxEdges = 0` forces it). Both must return the same schema and
+  * the same rows on every input, edge cases included, and both must equal
+  * an independent union-find model. */
 class ResolveClustersSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -22,10 +22,10 @@ class ResolveClustersSpec extends AnyFunSuite {
   /** Runs both paths on `pairs`, asserts they agree, returns the rows. */
   private def bothPaths(pairs: DataFrame, what: String): Seq[String] = {
     val driver = Dedup.resolveClusters(pairs)
-    val rounds = Dedup.resolveClusters(pairs, driverMaxEdges = 0)
-    assert(driver.schema == rounds.schema, s"$what: schema")
+    val star = Dedup.resolveClusters(pairs, driverMaxEdges = 0)
+    assert(driver.schema == star.schema, s"$what: schema")
     val d = rows(driver)
-    assert(d == rows(rounds), s"$what: rows")
+    assert(d == rows(star), s"$what: rows")
     d
   }
 
@@ -83,7 +83,7 @@ class ResolveClustersSpec extends AnyFunSuite {
     assert(got == Seq("[2,2]", "[4,4]", "[6,2]"))
   }
 
-  test("NULL endpoints: both paths give the rounds' (NULL, NULL) row") {
+  test("NULL endpoints: both paths give one (NULL, NULL) row") {
     val edges = Seq[(java.lang.Long, java.lang.Long)](
       (1L, 2L), (2L, null), (null, 7L), (null, null), (8L, 9L))
     val got = bothPaths(edges.toDF("doc_a", "doc_b"), "nulls")
@@ -105,21 +105,65 @@ class ResolveClustersSpec extends AnyFunSuite {
   }
 
   test("the driver path applies at the bound and not above it") {
-    // observable through reliable mode: only the rounds create the run's
-    // graft-cc-<uuid> directory under checkpointDir
+    // observable through reliable mode: only the star path creates the
+    // run's graft-cc-<uuid> directory under checkpointDir
     val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("doc_a", "doc_b")
     def run(bound: Long): (Seq[String], Boolean) = {
       val dir = java.nio.file.Files.createTempDirectory("graft-cc-bound")
       val got = rows(Dedup.resolveClusters(pairs,
         checkpointDir = Some(dir.toString), driverMaxEdges = bound))
-      val rounds = java.nio.file.Files.list(dir).count() > 0
-      (got, rounds)
+      val star = java.nio.file.Files.list(dir).count() > 0
+      (got, star)
     }
-    val (atBound, roundsAtBound) = run(3)
-    val (above, roundsAbove) = run(2)
-    assert(!roundsAtBound, "3 pairs at a bound of 3 must take the driver path")
-    assert(roundsAbove, "3 pairs over a bound of 2 must take the rounds")
+    val (atBound, starAtBound) = run(3)
+    val (above, starAbove) = run(2)
+    assert(!starAtBound, "3 pairs at a bound of 3 must take the driver path")
+    assert(starAbove, "3 pairs over a bound of 2 must take the star path")
     assert(atBound == above)
     assert(atBound == Seq("[1,1]", "[2,1]", "[3,1]", "[4,4]", "[5,4]"))
+  }
+
+  test("a 1,000-node scattered-id chain plus a 30-clique takes several star " +
+      "rounds and keeps one checkpoint in reliable mode") {
+    val ids = new Random(23).shuffle((0L until 1000L).toVector)
+    val edges = (0 until 999).map(i => (ids(i), ids(i + 1))) ++
+      (for (a <- 5000L until 5030L; b <- a + 1 until 5030L) yield (a, b))
+    val pairs = edges.toDF("doc_a", "doc_b")
+    val dir = java.nio.file.Files.createTempDirectory("graft-cc-star")
+    val (star, logged) = dedupInfo(rows(Dedup.resolveClusters(pairs,
+      checkpointDir = Some(dir.toString), driverMaxEdges = 0)))
+    assert(star == modelRows(edges))
+    assert(star == rows(Dedup.resolveClusters(pairs)), "driver path")
+    val line = logged.find(_.startsWith("resolveClusters path=star"))
+    val nRounds = line.flatMap("rounds=(\\d+)".r.findFirstMatchIn(_))
+      .map(_.group(1).toInt)
+    assert(nRounds.exists(_ >= 3), s"star rounds not logged or < 3: $logged")
+    import scala.jdk.CollectionConverters._
+    val rdds = java.nio.file.Files.walk(dir).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("rdd-")).toList
+    assert(rdds.size == 1, s"expected only the result's checkpoint: $rdds")
+  }
+
+  /** `f`'s value and the INFO messages `Dedup` logged while it ran. */
+  private def dedupInfo[T](f: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    val logger = LogManager.getLogger(Dedup.getClass.getName).asInstanceOf[Logger]
+    val msgs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("resolve-clusters-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        msgs.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    // addAppender refreshes the logger's config, so the level goes after it
+    logger.addAppender(app)
+    val level = logger.getLevel
+    logger.setLevel(Level.INFO)
+    try { val v = f; (v, msgs.asScala.toSeq) }
+    finally { logger.removeAppender(app); logger.setLevel(level); app.stop() }
   }
 }

@@ -93,9 +93,9 @@ class RetrySpec extends AnyFunSuite {
     val pairs = Dedup.minhashLshPairs(Tables.documents(spark, sfDir))
       .select("doc_a", "doc_b")
     // both paths: the driver-side union-find (the default at this size)
-    // and the checkpointed rounds
+    // and the checkpointed star contraction
     gate("cc", pairs) { p => Dedup.resolveClusters(p) }
-    gate("cc_rounds", pairs) { p => Dedup.resolveClusters(p, driverMaxEdges = 0) }
+    gate("cc_star", pairs) { p => Dedup.resolveClusters(p, driverMaxEdges = 0) }
   }
 
   test("LWW upsert fold (CDC apply / streaming-upsert batch twin) is " +
