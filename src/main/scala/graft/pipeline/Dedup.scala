@@ -1,9 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
+import org.apache.spark.util.LongAccumulator
 
 /** Deduplication operators: exact (fingerprint groupBy), n-gram Jaccard
   * (rare-shingle candidate generation), MinHash+LSH (banded), and SimHash.
@@ -48,12 +49,6 @@ object Dedup {
     when(size(toks) < w, array().cast("array<string>"))
       .otherwise(array_distinct(gen))
   }
-
-  /** (doc_id, sh) relation with single-pass tokenization. */
-  private def shingleDf(docs: DataFrame, w: Int = 3): DataFrame =
-    docs.select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
-      .select(col("doc_id"), shinglesFromTokens(col("toks"), w).as("sh"))
-      .where(size(col("sh")) > 0)
 
   /** (doc_id, hs): 60-bit md5 hashes of the distinct word w-shingles in
     * first-occurrence order; docs with fewer than w tokens dropped.
@@ -108,22 +103,25 @@ object Dedup {
     }
   }
 
-  /** (doc_a, doc_b, inter, union_size): per-candidate-pair set intersection
-    * of the two docs' hashed shingle arrays, computed as a primitive loop —
-    * the alternative (exploding both sides and re-joining on the shingle
-    * key) fans out to |pairs| x |shingles| rows. The pair->array joins are
-    * plain equi-joins: AQE broadcasts the compact array side when it fits;
-    * at fleet scale they degrade gracefully to shuffle joins keyed by the
-    * bounded candidate set. Intersection counts DISTINCT common hash values
-    * (mirrors DuckDB `list_intersect` in the oracle). */
-  private def pairOverlap(cand: DataFrame, hdf: DataFrame): DataFrame =
-    pairOverlap(cand, hdf, hdf)
-
-  /** Two-relation form: `doc_a` ids resolve against `hdfA`, `doc_b` ids
-    * against `hdfB` (the incremental batch-vs-ledger shape; the self-join
-    * pair operators pass the same relation twice). */
-  private def pairOverlap(cand: DataFrame, hdfA: DataFrame,
-                          hdfB: DataFrame): DataFrame = {
+  /** (doc_a, doc_b, inter, union_size, jaccard_pct): the candidate pairs
+    * whose exact shingle Jaccard reaches `thresholdPct`, with
+    * `jaccard_pct = floor(100 * inter / union_size)` — the one
+    * verification step of every Jaccard pair operator and of near-dup
+    * admission. `doc_a` ids resolve against `hdfA`, `doc_b` ids against
+    * `hdfB` (the self-join pair operators pass the same relation twice;
+    * admission passes batch and ledger).
+    *
+    * The per-pair set intersection of the two docs' hashed shingle arrays
+    * is a primitive loop — the alternative (exploding both sides and
+    * re-joining on the shingle key) fans out to |pairs| x |shingles| rows.
+    * The pair->array joins are plain equi-joins: AQE broadcasts the
+    * compact array side when it fits; at fleet scale they degrade
+    * gracefully to shuffle joins keyed by the bounded candidate set.
+    * Intersection counts DISTINCT common hash values (mirrors DuckDB
+    * `list_intersect` in the oracle). A pair of two empty shingle sets
+    * (0/0 Jaccard) is a non-pair, not a division. */
+  private def jaccardPairs(cand: DataFrame, hdfA: DataFrame,
+                           hdfB: DataFrame, thresholdPct: Int): DataFrame = {
     val spark = cand.sparkSession
     import spark.implicits._
     cand.join(hdfA.toDF("doc_a", "hs_a"), "doc_a")
@@ -142,13 +140,19 @@ object Dedup {
           (a, b, inter, ha.length.toLong + hb.length - inter)
         }
       }.toDF("doc_a", "doc_b", "inter", "union_size")
+      .where(col("union_size") > 0 &&
+        col("inter") * 100 >= col("union_size") * thresholdPct)
+      .withColumn("jaccard_pct",
+        floor(col("inter") * 100 / col("union_size")).cast("long"))
   }
 
-  /** Dropped-bucket observability for the LSH cap sites: the `(band, key)`
+  /** Dropped-bucket observability for the LSH cap sites: the `bkey`
     * bucket relation is capped by an imperative filter that counts every
     * over-cap bucket (and its member rows) into named `LongAccumulator`s
-    * (`<name>.dropped_buckets` / `<name>.dropped_docs`, visible in the
-    * Spark UI) before dropping it. A degenerate hash family that collapses
+    * (`graft.<site>.dropped_buckets` / `graft.<site>.dropped_docs`,
+    * visible in the Spark UI) before dropping it. Both are created here,
+    * the only place that makes them; a caller's `droppedBuckets`
+    * accumulator replaces the first. A degenerate hash family that collapses
     * the corpus into a handful of giant buckets — the round-4 SRP incident,
     * which passed its shared-constants oracle gate with zero pairs — now
     * shows up as a non-zero drop count on any run.
@@ -165,17 +169,21 @@ object Dedup {
     * correctness output. The filter is a typed row predicate (one
     * deserialization per *bucket*, a relation orders of magnitude smaller
     * than the corpus). */
-  private def capBuckets(buckets: DataFrame, maxBucket: Int,
-                         droppedBuckets: org.apache.spark.util.LongAccumulator,
-                         droppedDocs: org.apache.spark.util.LongAccumulator,
+  private def capBuckets(buckets: DataFrame, maxBucket: Int, site: String,
+                         droppedBuckets: Option[LongAccumulator],
                          minSize: Int = 2)
-      : DataFrame =
+      : DataFrame = {
+    val sc = buckets.sparkSession.sparkContext
+    val dropAcc = droppedBuckets.getOrElse(
+      sc.longAccumulator(s"graft.$site.dropped_buckets"))
+    val dropDocsAcc = sc.longAccumulator(s"graft.$site.dropped_docs")
     buckets.filter { (r: org.apache.spark.sql.Row) =>
       val n = r.getSeq[Any](r.fieldIndex("ids")).size
       if (n > maxBucket) {
-        droppedBuckets.add(1L); droppedDocs.add(n.toLong); false
+        dropAcc.add(1L); dropDocsAcc.add(n.toLong); false
       } else n >= minSize
     }
+  }
 
   /** Exact dedup: keep-first per normalized-content fingerprint. */
   def exact(docs: DataFrame): DataFrame = {
@@ -279,7 +287,7 @@ object Dedup {
     // (dedup_index_refresh 2.0 -> 4.5 s in the same A/B that won here).
     // EAGER cache fill, not a lazy persist: the downstream consumers are
     // independent map stages of one AQE job (the df aggregate, both
-    // candidate arms, both pairOverlap sides) and they LAUNCH concurrently
+    // candidate arms, both jaccardPairs sides) and they LAUNCH concurrently
     // — racing a lazy cache means several of them recompute the whole
     // tokenize+md5 shingle build before the blocks land (measured at 100x:
     // two concurrent 61 task-s builds of identical work). The count()
@@ -301,10 +309,7 @@ object Dedup {
       .join(rareEx.toDF("s", "doc_b"), "s")
       .where(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b").distinct()
-    pairOverlap(cand, hdf)
-      .where(col("inter") * 100 >= col("union_size") * thresholdPct)
-      .withColumn("jaccard_pct", floor(col("inter") * 100 / col("union_size")).cast("long"))
-      .select("doc_a", "doc_b", "inter", "union_size", "jaccard_pct")
+    jaccardPairs(cand, hdf, hdf, thresholdPct)
   }
 
   /** Sorted-neighborhood near-dup pairs — the third classic blocking
@@ -390,15 +395,7 @@ object Dedup {
       .distinct()
     val hdf = hashedShingleDf(docs).persist()
     caches += hdf
-    // union_size > 0: unlike shingle-co-occurrence candidates, a sorted
-    // neighbor can be a sub-3-token doc with an EMPTY shingle set —
-    // 0/0 Jaccard is a non-pair, not a division
-    val out = pairOverlap(cand, hdf)
-      .where(col("union_size") > 0 &&
-        col("inter") * 100 >= col("union_size") * thresholdPct)
-      .withColumn("jaccard_pct",
-        floor(col("inter") * 100 / col("union_size")).cast("long"))
-      .select("doc_a", "doc_b", "inter", "union_size", "jaccard_pct")
+    val out = jaccardPairs(cand, hdf, hdf, thresholdPct)
       .localCheckpoint(true) // pairs-sized; cuts lineage to the caches
     caches.foreach(_.unpersist(false))
     out
@@ -423,27 +420,11 @@ object Dedup {
         least(m, (c.getField("a") * h + c.getField("b")) % P)))
   }
 
-  /** (doc_id, sig): numPerms-permutation MinHash signature per document
-    * over the hashed-shingle relation — a tight primitive loop per
-    * partition (one traversal updates all permutation minima; identical
-    * values to [[minhashSignature]], ~10x faster than interpreted HOF
-    * evaluation). */
-  private def minhashSigDf(hdf: DataFrame, numPerms: Int): DataFrame = {
-    val spark = hdf.sparkSession
-    import spark.implicits._
-    val as = (0 until numPerms).map(permA).toArray
-    val bs = (0 until numPerms).map(permB).toArray
-    hdf.as[(Long, Array[Long])].mapPartitions { it =>
-      it.map { case (docId, hs) => (docId, minhashMins(hs, as, bs).toSeq) }
-    }.toDF("doc_id", "sig")
-  }
-
   /** MinHash minima of one shingle-hash array: slot `j` is the minimum of
     * `(as(j) * (h % P) + bs(j)) % P` over `hs` (`Long.MaxValue` when `hs` is
-    * empty). The per-row kernel of [[minhashSigDf]], shared with streaming
-    * near-dup admission. */
-  private[graft] def minhashMins(hs: Array[Long], as: Array[Long],
-                                 bs: Array[Long]): Array[Long] = {
+    * empty). The per-row kernel under [[minhashBandKeys]]. */
+  private def minhashMins(hs: Array[Long], as: Array[Long],
+                          bs: Array[Long]): Array[Long] = {
     val numPerms = as.length
     val mins = Array.fill(numPerms)(Long.MaxValue)
     var i = 0
@@ -460,15 +441,40 @@ object Dedup {
     mins
   }
 
-  /** (doc_id, band, key): the LSH band keys of a signature relation —
-    * `bands` keys per doc, each joining `r` consecutive signature slots. */
-  private def bandedKeysDf(sig: DataFrame, bands: Int, r: Int): DataFrame =
-    sig.select(col("doc_id"),
-      explode(array((0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          concat_ws("_", slice(col("sig"), b * r + 1, r)).as("key"))
-      }: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
+  /** The MinHash-LSH band keyer: maps one shingle-hash array to its
+    * `bands` fused bucket keys `"<band>:<k1>_<k2>_…"`, band `b` joining
+    * the `r = numPerms / bands` [[minhashMins]] from slot `b * r`. The
+    * only spelling of a MinHash bucket key: [[minhashLshPairs]], the
+    * [[NearDupIndex]] build, refresh and probe, and
+    * [[graft.streaming.StreamingNearDup.verdicts]] all key through it. It
+    * closes over the permutation constants only, so it ships to executors
+    * and runs inside their row loops. */
+  private[graft] def minhashBandKeys(numPerms: Int, bands: Int)
+      : Array[Long] => Array[String] = {
+    val as = Array.tabulate(numPerms)(permA)
+    val bs = Array.tabulate(numPerms)(permB)
+    val r = numPerms / bands
+    hs => {
+      val mins = minhashMins(hs, as, bs)
+      Array.tabulate(bands)(b =>
+        s"$b:${mins.slice(b * r, b * r + r).mkString("_")}")
+    }
+  }
+
+  /** (doc_id, bkey): one row per LSH band of each document of a
+    * hashed-shingle relation `(doc_id, hs)`, keyed by [[minhashBandKeys]]
+    * in a tight primitive loop per partition (one traversal updates all
+    * permutation minima; identical values to [[minhashSignature]], ~10x
+    * faster than interpreted HOF evaluation). */
+  private def minhashBandDf(hdf: DataFrame, numPerms: Int,
+                            bands: Int): DataFrame = {
+    val spark = hdf.sparkSession
+    import spark.implicits._
+    val keys = minhashBandKeys(numPerms, bands)
+    hdf.as[(Long, Array[Long])]
+      .flatMap { case (docId, hs) => keys(hs).map(k => (docId, k)) }
+      .toDF("doc_id", "bkey")
+  }
 
   /** MinHash+LSH near-dup candidate pairs with exact-Jaccard verification.
     * bands x rowsPerBand = signature length; a pair collides when any band
@@ -478,28 +484,115 @@ object Dedup {
                       maxBucket: Int = 64, thresholdPct: Int = 30,
                       droppedBuckets: Option[org.apache.spark.util.LongAccumulator] = None)
       : DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val dropAcc = droppedBuckets.getOrElse(
-      spark.sparkContext.longAccumulator("graft.minhash_lsh.dropped_buckets"))
-    val dropDocsAcc =
-      spark.sparkContext.longAccumulator("graft.minhash_lsh.dropped_docs")
-    val r = numPerms / bands
     // caller-owned cache lifetime — see the note in ngramJaccardPairs
     val hdf = hashedShingleDf(docs).persist()
-    val banded = bandedKeysDf(minhashSigDf(hdf, numPerms), bands, r)
     val buckets = capBuckets(
-      banded.groupBy("band", "key").agg(collect_list("doc_id").as("ids")),
-      maxBucket, dropAcc, dropDocsAcc)
+      minhashBandDf(hdf, numPerms, bands)
+        .groupBy("bkey").agg(collect_list("doc_id").as("ids")),
+      maxBucket, "minhash_lsh", droppedBuckets)
     val cand = buckets
       .select(explode(col("ids")).as("doc_a"), col("ids"))
       .select(col("doc_a"), explode(col("ids")).as("doc_b"))
       .where(col("doc_a") < col("doc_b"))
       .distinct()
-    pairOverlap(cand, hdf)
-      .where(col("inter") * 100 >= col("union_size") * thresholdPct)
-      .withColumn("jaccard_pct", floor(col("inter") * 100 / col("union_size")).cast("long"))
+    jaccardPairs(cand, hdf, hdf, thresholdPct)
       .select("doc_a", "doc_b", "jaccard_pct")
+  }
+
+  /** The posting core both banded tiers ([[NearDupIndex]],
+    * [[HammingIndex]]) are built through: `(bkey, item...)` rows, one per
+    * band of each ledger item, grouped into `bkey -> ids` postings
+    * (`ids = collect_list(item)`). A bucket over `maxBucket` is dropped
+    * whole into the `graft.<site>.*` accumulators ([[capBuckets]]) and its
+    * key kept as a TOMBSTONE in `dropped`, so [[mergePostings]] decides it
+    * exactly as a from-scratch rebuild would (a merged bucket is a
+    * superset of one that already exceeded the cap).
+    *
+    * `probe` (any relation with a `bkey` column) first semi-joins the rows
+    * against its distinct keys, broadcast, before any wide exchange: a
+    * one-shot admission builds only the buckets its batch touches, and the
+    * accumulators count exactly the over-cap ones among them. The prune
+    * selects whole buckets, so caps are prune-invariant and a pruned build
+    * probes the same as the full one. A standing (unpruned) index's
+    * relations are persisted and materialized before returning. */
+  private def postings(rows: DataFrame, item: Column, maxBucket: Int,
+                       site: String, droppedBuckets: Option[LongAccumulator],
+                       probe: Option[DataFrame]): (DataFrame, DataFrame) = {
+    val kept = probe.fold(rows)(p =>
+      rows.join(broadcast(p.select("bkey").distinct()), "bkey"))
+    val grouped = kept.groupBy("bkey").agg(collect_list(item).as("ids"))
+    val buckets = capBuckets(grouped, maxBucket, site, droppedBuckets,
+      minSize = 1)
+    val dropped = grouped.where(size(col("ids")) > maxBucket).select("bkey")
+    // a pruned one-shot index is read once, by its own probe: left lazy, it
+    // plans into that probe's job instead of adding materialization jobs
+    if (probe.isEmpty) {
+      grouped.persist(); buckets.persist(); dropped.persist()
+      buckets.count(); dropped.count()
+      grouped.unpersist(false)
+    }
+    (buckets, dropped)
+  }
+
+  /** Merge a batch's `(bkey, item...)` rows into standing [[postings]]
+    * with rebuild-exact caps (`merge(build(L), B) == build(L ∪ B)`): rows
+    * under a tombstoned key stay dropped, and a kept bucket the merge
+    * pushes over `maxBucket` is dropped whole and tombstoned. Only the
+    * batch's side exchanges; the full outer join reuses the standing
+    * buckets' `bkey` partitioning. The new (buckets, dropped) are
+    * materialized before returning, so the caller can release the old
+    * ones immediately. */
+  private def mergePostings(buckets: DataFrame, dropped: DataFrame,
+                            rows: DataFrame, item: Column,
+                            maxBucket: Int): (DataFrame, DataFrame) = {
+    val emptyIds = array().cast(buckets.schema("ids").dataType)
+    val newPosts = rows.groupBy("bkey").agg(collect_list(item).as("new_ids"))
+      .join(dropped, Seq("bkey"), "left_anti")
+    val merged = buckets.join(newPosts, Seq("bkey"), "full_outer")
+      .select(col("bkey"), concat(coalesce(col("ids"), emptyIds),
+        coalesce(col("new_ids"), emptyIds)).as("ids"))
+      .persist()
+    val buckets2 = merged.where(size(col("ids")) <= maxBucket).persist()
+    val dropped2 = dropped
+      .union(merged.where(size(col("ids")) > maxBucket).select("bkey"))
+      .persist()
+    buckets2.count(); dropped2.count()
+    merged.unpersist(false)
+    (buckets2, dropped2)
+  }
+
+  /** Write one generation of a banded index under `dir`, the
+    * [[Ivf.saveIndex]] discipline: a generation OUTLIVES the process that
+    * built it, and one atomic [[IndexGen]] pointer rename publishes every
+    * relation together. `buckets/` and `dropped/` (the tombstones — losing
+    * them would resurrect capped-out buckets on the next refresh) are
+    * range-clustered on `bkey`, so a probe batch's bucket lookup prunes;
+    * `meta/` is one row of build hyperparameters; each `extra`
+    * `(name, relation, key)` is a tier relation clustered on `key`. */
+  private def savePostings(dir: String, nFiles: Int, buckets: DataFrame,
+                           dropped: DataFrame, meta: DataFrame,
+                           extra: (String, DataFrame, String)*): Unit = {
+    val (gen, genPath) = IndexGen.newGen(dir)
+    def clustered(name: String, df: DataFrame, key: String, n: Int): Unit =
+      df.repartitionByRange(n, col(key)).sortWithinPartitions(key)
+        .write.mode("overwrite").parquet(s"$genPath/$name")
+    clustered("buckets", buckets, "bkey", nFiles)
+    clustered("dropped", dropped, "bkey", math.max(1, nFiles / 4))
+    extra.foreach { case (name, df, key) => clustered(name, df, key, nFiles) }
+    meta.coalesce(1).write.mode("overwrite").parquet(s"$genPath/meta")
+    IndexGen.flip(dir, gen)
+  }
+
+  /** Read the generation [[savePostings]] last published under `dir`:
+    * its path (for the tier's own relations), its meta row, and the
+    * persisted `buckets` and `dropped` relations. ONE generation serves
+    * the whole load. */
+  private def loadPostings(spark: SparkSession, dir: String)
+      : (String, Row, DataFrame, DataFrame) = {
+    val cur = IndexGen.resolve(dir)
+    (cur, spark.read.parquet(s"$cur/meta").head(),
+      spark.read.parquet(s"$cur/buckets").select("bkey", "ids").persist(),
+      spark.read.parquet(s"$cur/dropped").select("bkey").persist())
   }
 
   /** Incremental near-dup admission: each BATCH document checked for
@@ -512,80 +605,76 @@ object Dedup {
     * id. Within-batch near-dups are [[minhashLshPairs]]'s job — compose
     * both for full ingest hygiene.
     *
-    * Scale shape (the [[incrementalBloom]] asymmetry, banded): the ledger
-    * never moves whole. Its banded key relation is semi-joined against the
-    * BATCH's distinct band keys (workload-sized, broadcast) before any
-    * wide exchange, so ledger work is proportional to the buckets the
-    * batch actually touches — not to the 100 TB corpus. Pruned ledger
-    * buckets over `maxBucket` (boilerplate shingle sets) are dropped whole
-    * into the accumulators, bounding pairing fan-out; the cap is
-    * equivalent pre- and post-prune because the prune selects whole
-    * buckets. Exact-Jaccard verification removes every LSH false positive
-    * (precision exact; recall = banding recall). The batch-sized verdict
-    * relation is materialized eagerly so both shingle caches release
-    * deterministically. */
+    * A one-shot [[NearDupIndex]]: the ledger's index, pruned to the
+    * batch's own band keys ([[postings]]), is probed as [[indexNearDup]]
+    * probes a standing index, then released. The [[incrementalBloom]]
+    * asymmetry, banded: the ledger never moves whole, and its work tracks
+    * the buckets the batch touches, not the 100 TB corpus. Over-cap
+    * buckets the batch touches (boilerplate shingle sets) are dropped
+    * whole into the `graft.incr_neardup.*` accumulators; the verdicts equal
+    * probing the unpruned index. Exact-Jaccard verification removes every
+    * LSH false positive (precision exact; recall = banding recall). The
+    * batch is shingled once, and the batch-sized verdicts are
+    * materialized before the caches are released. */
   def incrementalNearDup(batch: DataFrame, ledger: DataFrame,
                          numPerms: Int = 32, bands: Int = 8,
                          maxBucket: Int = 64, thresholdPct: Int = 30,
                          droppedBuckets: Option[org.apache.spark.util.LongAccumulator] = None)
       : DataFrame = {
-    val spark = batch.sparkSession
-    val dropAcc = droppedBuckets.getOrElse(
-      spark.sparkContext.longAccumulator("graft.incr_neardup.dropped_buckets"))
-    val dropDocsAcc =
-      spark.sparkContext.longAccumulator("graft.incr_neardup.dropped_docs")
-    val r = numPerms / bands
     val bh = hashedShingleDf(batch).persist()
-    val lh = hashedShingleDf(ledger).persist()
-    val bBanded = bandedKeysDf(minhashSigDf(bh, numPerms), bands, r)
-    val lBanded = bandedKeysDf(minhashSigDf(lh, numPerms), bands, r)
-    val lBuckets = capBuckets(
-      lBanded
-        .join(broadcast(bBanded.select("band", "key").distinct()), Seq("band", "key"))
-        .groupBy("band", "key").agg(collect_list("doc_id").as("ids")),
-      maxBucket, dropAcc, dropDocsAcc, minSize = 1)
-    val cand = bBanded.join(lBuckets, Seq("band", "key"))
-      .select(col("doc_id").as("doc_a"), explode(col("ids")).as("doc_b"))
-      .distinct()
-    val out = nearDupVerdicts(batch, cand, bh, lh, thresholdPct)
-    bh.unpersist(); lh.unpersist()
+    val bKeys = minhashBandDf(bh, numPerms, bands)
+    val index = nearDupIndex(ledger, numPerms, bands, maxBucket, thresholdPct,
+      "incr_neardup", droppedBuckets, Some(bKeys))
+    val out = probeNearDup(batch, bh, bKeys, index)
+    index.release(); bh.unpersist()
     out
   }
 
-  /** Shared verdict epilogue of [[incrementalNearDup]] and
-    * [[indexNearDup]]: exact-Jaccard verification of the candidate pairs
-    * (batch ids resolve against `bh`, ledger ids against `lh`), best
-    * match = highest Jaccard with ties to the smallest ledger id, then
-    * the batch left join that surfaces no-match rows as `admitted`. The
-    * batch-sized result is materialized eagerly so callers can release
-    * their shingle caches deterministically. */
-  private def nearDupVerdicts(batch: DataFrame, cand: DataFrame,
-      bh: DataFrame, lh: DataFrame, thresholdPct: Int): DataFrame = {
-    val best = pairOverlap(cand, bh, lh)
-      .where(col("inter") * 100 >= col("union_size") * thresholdPct)
-      .withColumn("jaccard_pct",
-        floor(col("inter") * 100 / col("union_size")).cast("long"))
+  /** Verdicts of `batch` (shingles `bh`, band keys `bKeys`) against
+    * `index` — the probe of [[incrementalNearDup]] and [[indexNearDup]]:
+    * candidates from one equi-join on `bkey`, exact-Jaccard verification,
+    * best match = highest Jaccard with ties to the smallest ledger id. The
+    * batch-sized result is materialized so callers can release the shingle
+    * caches and the index deterministically. */
+  private def probeNearDup(batch: DataFrame, bh: DataFrame, bKeys: DataFrame,
+                           index: NearDupIndex): DataFrame = {
+    val cand = bKeys.join(index.buckets, "bkey")
+      .select(col("doc_id").as("doc_a"), explode(col("ids")).as("doc_b"))
+      .distinct()
+    val best = jaccardPairs(cand, bh, index.shingles, index.thresholdPct)
       .groupBy(col("doc_a").as("doc_id"))
       // lexicographic struct max: highest jaccard, then min ledger id
       .agg(max(struct(col("jaccard_pct"), (-col("doc_b")).as("neg_id"))).as("m"))
       .select(col("doc_id"), (-col("m.neg_id")).as("near_dup_of"),
         col("m.jaccard_pct").as("jaccard_pct"))
-    batch.select(col("doc_id"))
-      .join(best, Seq("doc_id"), "left")
-      .select(col("doc_id"),
+    admissionVerdicts(batch, best, Nil, "jaccard_pct").localCheckpoint(true)
+  }
+
+  /** One verdict row per `batch` row (keyed by `partitionCols` and
+    * `doc_id`): `near_dup` with its best match's `near_dup_of` and `score`
+    * column where `best` has one, else `admitted` with NULLs. */
+  private def admissionVerdicts(batch: DataFrame, best: DataFrame,
+                                partitionCols: Seq[String],
+                                score: String): DataFrame = {
+    val keys = partitionCols :+ "doc_id"
+    batch.select(keys.map(col): _*)
+      .join(best, keys, "left")
+      .select(keys.map(col) ++ Seq(
         when(col("near_dup_of").isNotNull, lit("near_dup"))
           .otherwise(lit("admitted")).as("verdict"),
-        col("near_dup_of"), col("jaccard_pct"))
-      .localCheckpoint(true)
+        col("near_dup_of"), col(score)): _*)
   }
 
   /** Prebuilt MinHash-LSH ledger index for repeated near-dup admission:
-    * `buckets` = capped `(band, key) -> ids` postings, `shingles` =
-    * `(doc_id, hs)` for exact-Jaccard verification. Both relations are
-    * persisted at build time (they are reused per admission batch /
-    * micro-batch); call [[release]] when done. At fleet scale this is the
-    * materialize-once artifact a 100 TB corpus maintains next to itself —
-    * admission cost then tracks the batch, never the corpus. */
+    * `buckets` = capped `(bkey, ids)` postings and `dropped` = the `bkey`
+    * tombstones of capped-out buckets ([[postings]]), keyed by the one
+    * fused spelling `"<band>:<k1>_<k2>_…"` of [[minhashBandKeys]], so a
+    * probe — batch or stream-static — is a single-column equi-join;
+    * `shingles` = `(doc_id, hs)` for exact-Jaccard verification. The
+    * relations are persisted at build time (they are reused per admission
+    * batch / micro-batch); call [[release]] when done. At fleet scale this
+    * is the materialize-once artifact a 100 TB corpus maintains next to
+    * itself — admission cost then tracks the batch, never the corpus. */
   final case class NearDupIndex(buckets: DataFrame, shingles: DataFrame,
                                 numPerms: Int, bands: Int, thresholdPct: Int,
                                 maxBucket: Int, dropped: DataFrame) {
@@ -594,113 +683,65 @@ object Dedup {
     }
   }
 
-  /** Build a [[NearDupIndex]] from a ledger corpus. The bucket cap is
-    * applied at build time (equivalent to per-batch capping: pruning by a
-    * batch's keys selects whole buckets, so bucket sizes are
-    * prune-invariant). Capped-out keys are kept as TOMBSTONES in
-    * `dropped`, so [[refreshNearDupIndex]] can keep deciding them exactly
-    * as a from-scratch rebuild would (a merged bucket is a superset of
-    * one that already exceeded the cap). */
+  /** The [[NearDupIndex]] of `ledger`, pruned to `probe`'s keys when one
+    * is given ([[postings]]): the build behind [[buildNearDupIndex]] and
+    * the one-shot [[incrementalNearDup]]. */
+  private def nearDupIndex(ledger: DataFrame, numPerms: Int, bands: Int,
+      maxBucket: Int, thresholdPct: Int, site: String,
+      droppedBuckets: Option[LongAccumulator],
+      probe: Option[DataFrame]): NearDupIndex = {
+    val lh = hashedShingleDf(ledger).persist()
+    val (buckets, dropped) = postings(minhashBandDf(lh, numPerms, bands),
+      col("doc_id"), maxBucket, site, droppedBuckets, probe)
+    NearDupIndex(buckets, lh, numPerms, bands, thresholdPct, maxBucket,
+      dropped)
+  }
+
+  /** Build a [[NearDupIndex]] from a ledger corpus: caps are applied and
+    * capped-out keys tombstoned at build time ([[postings]]). */
   def buildNearDupIndex(ledger: DataFrame, numPerms: Int = 32, bands: Int = 8,
                         maxBucket: Int = 64, thresholdPct: Int = 30,
                         droppedBuckets: Option[org.apache.spark.util.LongAccumulator] = None)
-      : NearDupIndex = {
-    val spark = ledger.sparkSession
-    val dropAcc = droppedBuckets.getOrElse(
-      spark.sparkContext.longAccumulator("graft.neardup_index.dropped_buckets"))
-    val dropDocsAcc =
-      spark.sparkContext.longAccumulator("graft.neardup_index.dropped_docs")
-    val lh = hashedShingleDf(ledger).persist()
-    val grouped = bandedKeysDf(minhashSigDf(lh, numPerms), bands, numPerms / bands)
-      .groupBy("band", "key").agg(collect_list("doc_id").as("ids"))
-      .persist()
-    val buckets = capBuckets(grouped, maxBucket, dropAcc, dropDocsAcc,
-      minSize = 1).persist()
-    val dropped = grouped.where(size(col("ids")) > maxBucket)
-      .select("band", "key").persist()
-    buckets.count(); dropped.count()
-    grouped.unpersist(false)
-    NearDupIndex(buckets, lh, numPerms, bands, thresholdPct, maxBucket, dropped)
-  }
+      : NearDupIndex =
+    nearDupIndex(ledger, numPerms, bands, maxBucket, thresholdPct,
+      "neardup_index", droppedBuckets, None)
 
   /** Incremental maintenance of a standing [[NearDupIndex]]: append an
     * admitted batch's shingles and band postings WITHOUT rebuilding from
     * the corpus — `refreshNearDupIndex(build(L), B) == build(L ∪ B)`
     * relation-for-relation (DedupSpec pins it, dropped-bucket transitions
     * included; the `dedup_index_refresh` oracle gate exercises this path
-    * end-to-end against a from-scratch DuckDB rederivation).
-    *
-    * Cap semantics match a rebuild exactly: a batch posting under a
-    * tombstoned key stays dropped (the merged bucket is a superset of one
-    * that already exceeded the cap), and a kept bucket pushed over
-    * `maxBucket` by the merge is dropped whole and tombstoned.
-    *
-    * Scale shape: everything batch-sized except the merge join itself,
-    * which reuses the standing buckets' (band, key) hash partitioning —
-    * only the batch-sized posting side exchanges; the 100 TB corpus never
-    * re-shingles. The new relations are materialized before returning, so
-    * the caller can `release()` the old index immediately. Long refresh
-    * chains should still rebuild periodically (compaction): each refresh
-    * adds one union to the shingle/tombstone lineage. */
+    * end-to-end against a from-scratch DuckDB rederivation). Postings
+    * merge by [[mergePostings]]; the 100 TB corpus never re-shingles. The
+    * new relations are materialized, so the caller can `release()` the old
+    * index immediately. Long refresh chains should still rebuild
+    * periodically (compaction): each refresh adds one union to the
+    * shingle/tombstone lineage. */
   def refreshNearDupIndex(index: NearDupIndex, admitted: DataFrame)
       : NearDupIndex = {
     val bh = hashedShingleDf(admitted).persist()
-    val emptyIds = array().cast("array<bigint>")
-    val newPosts =
-      bandedKeysDf(minhashSigDf(bh, index.numPerms), index.bands,
-          index.numPerms / index.bands)
-        .groupBy("band", "key").agg(collect_list("doc_id").as("new_ids"))
-        .join(index.dropped, Seq("band", "key"), "left_anti")
-    val merged = index.buckets
-      .join(newPosts, Seq("band", "key"), "full_outer")
-      .select(col("band"), col("key"),
-        concat(coalesce(col("ids"), emptyIds),
-          coalesce(col("new_ids"), emptyIds)).as("ids"))
-      .persist()
-    val buckets2 = merged.where(size(col("ids")) <= index.maxBucket).persist()
-    val dropped2 = index.dropped
-      .union(merged.where(size(col("ids")) > index.maxBucket)
-        .select("band", "key"))
-      .persist()
-    val shingles2 = index.shingles.union(bh).persist()
-    buckets2.count(); dropped2.count(); shingles2.count()
-    merged.unpersist(false); bh.unpersist(false)
-    index.copy(buckets = buckets2, shingles = shingles2, dropped = dropped2)
+    val (buckets, dropped) = mergePostings(index.buckets, index.dropped,
+      minhashBandDf(bh, index.numPerms, index.bands), col("doc_id"),
+      index.maxBucket)
+    val shingles = index.shingles.union(bh).persist()
+    shingles.count()
+    bh.unpersist(false)
+    index.copy(buckets = buckets, shingles = shingles, dropped = dropped)
   }
 
-  /** Persist a standing [[NearDupIndex]] under `dir` — the
-    * [[Ivf.saveIndex]] discipline for the lexical near-dup tier: an index
-    * generation lives in storage and OUTLIVES the process that built it.
-    * Four relations: `buckets/` (capped (band, key) postings, clustered
-    * on the join key so an admission batch's bucket lookup prunes),
-    * `shingles/` (the exact-Jaccard verification side, doc_id-clustered),
-    * `dropped/` (the cap tombstones — losing these would silently
-    * resurrect capped-out buckets on the next refresh), `meta/` (1 row:
-    * the build hyperparameters, so a loaded index refreshes and probes
-    * with exactly the banding it was built with). */
+  /** Persist a standing [[NearDupIndex]] under `dir` as one
+    * [[savePostings]] generation: `buckets/` and `dropped/` keyed on
+    * `bkey`, `meta/` (num_perms, bands, threshold_pct, max_bucket), plus
+    * `shingles/` (the exact-Jaccard verification side, doc_id-clustered). */
   def saveNearDupIndex(index: NearDupIndex, dir: String,
                        nFiles: Int = 16): Unit = {
     val spark = index.buckets.sparkSession
     import spark.implicits._
-    // generation-versioned ([[IndexGen]]): one atomic pointer rename
-    // publishes all four relations together
-    val (gen, genPath) = IndexGen.newGen(dir)
-    index.buckets
-      .repartitionByRange(nFiles, col("band"), col("key"))
-      .sortWithinPartitions("band", "key")
-      .write.mode("overwrite").parquet(s"$genPath/buckets")
-    index.shingles
-      .repartitionByRange(nFiles, col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(s"$genPath/shingles")
-    index.dropped
-      .repartitionByRange(math.max(1, nFiles / 4), col("band"), col("key"))
-      .sortWithinPartitions("band", "key")
-      .write.mode("overwrite").parquet(s"$genPath/dropped")
-    Seq((index.numPerms, index.bands, index.thresholdPct, index.maxBucket))
+    val meta = Seq((index.numPerms, index.bands, index.thresholdPct,
+        index.maxBucket))
       .toDF("num_perms", "bands", "threshold_pct", "max_bucket")
-      .coalesce(1).write.mode("overwrite").parquet(s"$genPath/meta")
-    IndexGen.flip(dir, gen)
+    savePostings(dir, nFiles, index.buckets, index.dropped, meta,
+      ("shingles", index.shingles, "doc_id"))
   }
 
   /** Load a [[saveNearDupIndex]] directory into a servable standing
@@ -714,14 +755,9 @@ object Dedup {
     * set, reused per admission batch); release() as usual. */
   def loadNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                        dir: String): NearDupIndex = {
-    val cur = IndexGen.resolve(dir) // ONE generation serves this load
-    val meta = spark.read.parquet(s"$cur/meta").head()
-    val buckets = spark.read.parquet(s"$cur/buckets")
-      .select("band", "key", "ids").persist()
+    val (cur, meta, buckets, dropped) = loadPostings(spark, dir)
     val shingles = spark.read.parquet(s"$cur/shingles")
       .select("doc_id", "hs").persist()
-    val dropped = spark.read.parquet(s"$cur/dropped")
-      .select("band", "key").persist()
     NearDupIndex(buckets, shingles,
       meta.getAs[Int]("num_perms"), meta.getAs[Int]("bands"),
       meta.getAs[Int]("threshold_pct"), meta.getAs[Int]("max_bucket"),
@@ -731,17 +767,13 @@ object Dedup {
   /** Batch near-dup admission against a standing [[NearDupIndex]] — the
     * batch twin of [[graft.streaming.StreamingNearDup.verdicts]], emitting
     * [[incrementalNearDup]]-shaped verdicts. Candidates come from the
-    * index's pre-capped postings (one equi-join), verification from its
-    * shingle relation; admission cost tracks the batch, never the corpus. */
+    * index's pre-capped postings (one equi-join on `bkey`), verification
+    * from its shingle relation; admission cost tracks the batch, never the
+    * corpus. */
   def indexNearDup(batch: DataFrame, index: NearDupIndex): DataFrame = {
     val bh = hashedShingleDf(batch).persist()
-    val bBanded = bandedKeysDf(minhashSigDf(bh, index.numPerms), index.bands,
-      index.numPerms / index.bands)
-    val cand = bBanded.join(index.buckets, Seq("band", "key"))
-      .select(col("doc_id").as("doc_a"), explode(col("ids")).as("doc_b"))
-      .distinct()
-    val out = nearDupVerdicts(batch, cand, bh, index.shingles,
-      index.thresholdPct)
+    val out = probeNearDup(batch, bh,
+      minhashBandDf(bh, index.numPerms, index.bands), index)
     bh.unpersist()
     out
   }
@@ -792,58 +824,63 @@ object Dedup {
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3, bands: Int = 4,
                    bandBits: Int = 15, maxBucket: Int = 64,
                    droppedBuckets: Option[org.apache.spark.util.LongAccumulator] = None)
-      : DataFrame = {
-    val sc = docs.sparkSession.sparkContext
-    val dropAcc = droppedBuckets.getOrElse(
-      sc.longAccumulator("graft.simhash.dropped_buckets"))
+      : DataFrame =
     bandedHammingPairs(simhash(docs).withColumnRenamed("simhash", "sig"),
-      maxHamming, bands, bandBits, maxBucket, Nil, Some(dropAcc))
-  }
+      maxHamming, bands, bandBits, maxBucket, Nil, droppedBuckets)
 
   /** Banded hamming-distance pairing over precomputed bit signatures —
     * the candidate-generation core shared by [[simhashPairs]] (60-bit
     * text simhash) and the perceptual-hash media pairs (64-bit
     * dHash/waveform hash, `Multimodal.perceptualHashes`).
     *
-    * `sigs` is `(partitionCols..., doc_id, sig)`; pairs are generated
-    * only within equal `partitionCols` values (e.g. media kind — an
-    * image dHash and an audio waveform hash are different modalities
-    * and must never pair, even on a bit collision). By pigeonhole, any
+    * `sigs` is `(partitionCols..., doc_id, sig)`; buckets group on the
+    * fused [[HammingIndex]] key ([[fusedBandKeys]]), so pairs are
+    * generated only within equal `partitionCols` values (e.g. media kind
+    * — an image dHash and an audio waveform hash are different modalities
+    * and must never pair, even on a bit collision); the partition columns
+    * ride along the grouping so the pairs keep them. By pigeonhole, any
     * pair within hamming distance `bands - 1` shares at least one
     * identical band, so banding itself loses nothing at
     * `maxHamming <= bands - 1`; recall is exact up to the `maxBucket`
     * cap (degenerate buckets dropped whole, counted in the
-    * accumulators — the same guard as the MinHash path). Verification
-    * is the codegen'd `bit_count(xor)` builtin — no UDF. */
+    * `graft.hamming.*` accumulators — the same guard as the MinHash
+    * path). Verification is the codegen'd `bit_count(xor)` builtin — no
+    * UDF. */
   def bandedHammingPairs(sigs: DataFrame, maxHamming: Int = 3,
       bands: Int = 4, bandBits: Int = 16, maxBucket: Int = 64,
       partitionCols: Seq[String] = Nil,
       droppedBuckets: Option[org.apache.spark.util.LongAccumulator] = None)
       : DataFrame = {
-    val sc = sigs.sparkSession.sparkContext
-    val dropAcc = droppedBuckets.getOrElse(
-      sc.longAccumulator("graft.hamming.dropped_buckets"))
-    val dropDocsAcc = sc.longAccumulator("graft.hamming.dropped_docs")
     val pcols = partitionCols.map(col)
     val buckets = capBuckets(
-      bandRows(sigs, pcols, bands, bandBits)
-        .groupBy((partitionCols ++ Seq("band", "key")).map(col): _*)
-        .agg(collect_list(struct(col("doc_id"), col("sig"))).as("ids")),
-      maxBucket, dropAcc, dropDocsAcc)
-    val cand = buckets
-      .select(pcols ++ Seq(explode(col("ids")).as("a"), col("ids")): _*)
-      .select(pcols ++ Seq(col("a.doc_id").as("doc_a"),
-        col("a.sig").as("sig_a"), explode(col("ids")).as("b")): _*)
+      hammingKeyed(sigs, partitionCols, bands, bandBits)
+        .groupBy(pcols :+ col("bkey"): _*)
+        .agg(collect_list(sigItem).as("ids")),
+      maxBucket, "hamming", droppedBuckets)
+    hammingMatches(buckets
+        .select(pcols ++ Seq(explode(col("ids")).as("a"), col("ids")): _*)
+        .select(pcols ++ Seq(col("a.doc_id").as("doc_a"),
+          col("a.sig").as("sig_a"), col("ids")): _*),
+        pcols, maxHamming, col("doc_a") < col("doc_b"))
+      .select(pcols ++ Seq(col("doc_a"), col("doc_b"), col("hamming")): _*)
+  }
+
+  /** `(pcols..., doc_a, sig_a, doc_b, sig_b, hamming)`: each
+    * `(pcols..., doc_a, sig_a, ids)` row paired with every posting in its
+    * `ids` that passes `pairFilter`, distinct, then verified by the
+    * codegen'd `bit_count(xor)` builtin to within `maxHamming`. */
+  private def hammingMatches(rows: DataFrame, pcols: Seq[Column],
+                             maxHamming: Int, pairFilter: Column): DataFrame =
+    rows
+      .select(pcols ++ Seq(col("doc_a"), col("sig_a"),
+        explode(col("ids")).as("b")): _*)
       .select(pcols ++ Seq(col("doc_a"), col("sig_a"),
         col("b.doc_id").as("doc_b"), col("b.sig").as("sig_b")): _*)
-      .where(col("doc_a") < col("doc_b"))
+      .where(pairFilter)
       .distinct()
-    cand
-      .select(pcols ++ Seq(col("doc_a"), col("doc_b"),
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long")
-          .as("hamming")): _*)
+      .withColumn("hamming",
+        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long"))
       .where(col("hamming") <= maxHamming)
-  }
 
   /** Incremental hamming admission over precomputed bit signatures:
     * each BATCH row checked for ledger signatures within `maxHamming`
@@ -852,214 +889,153 @@ object Dedup {
     * re-crawl admitted only if no standing media is perceptually
     * near-identical) and equally applicable to simhash.
     *
-    * Scale shape (the same inversion as every incremental operator
-    * here): the LEDGER never moves whole. Its banded keys semi-join
-    * the batch's distinct `(partitionCols, band, key)` set (broadcast,
-    * workload-sized) before any wide exchange, so ledger work tracks
-    * the buckets the batch touches — not the standing corpus. Bucket
-    * caps drop degenerate buckets whole into the accumulators
-    * (prune-invariant, the [[incrementalNearDup]] argument). Verdict
-    * per batch row: best match = minimum hamming, ties to the
-    * smallest ledger id; rows with no in-distance match are
-    * `admitted`. */
+    * The [[incrementalNearDup]] composition: a one-shot [[HammingIndex]]
+    * of the ledger, pruned to the batch's own fused keys ([[postings]]),
+    * is probed as [[indexHammingDedup]] probes a standing index, then
+    * released, so ledger work tracks the buckets the batch touches — not
+    * the standing corpus. Over-cap buckets the batch touches are dropped
+    * whole into the `graft.incr_hamming.*` accumulators. Verdict per batch
+    * row: best match = minimum hamming, ties to the smallest ledger id;
+    * rows with no in-distance match are `admitted`. The batch-sized
+    * verdicts are materialized before the index is released. */
   def incrementalHammingDedup(batch: DataFrame, ledger: DataFrame,
       maxHamming: Int = 3, bands: Int = 4, bandBits: Int = 16,
       maxBucket: Int = 64, partitionCols: Seq[String] = Nil,
       droppedBuckets: Option[org.apache.spark.util.LongAccumulator] = None)
       : DataFrame = {
-    val spark = batch.sparkSession
-    val dropAcc = droppedBuckets.getOrElse(
-      spark.sparkContext.longAccumulator("graft.incr_hamming.dropped_buckets"))
-    val dropDocsAcc =
-      spark.sparkContext.longAccumulator("graft.incr_hamming.dropped_docs")
-    val pcols = partitionCols.map(col)
-    val keyCols = partitionCols ++ Seq("band", "key")
-    val bBanded = bandRows(batch, pcols, bands, bandBits)
-    val lBuckets = capBuckets(
-      bandRows(ledger, pcols, bands, bandBits)
-        .join(broadcast(bBanded.select(keyCols.map(col): _*).distinct()),
-          keyCols)
-        .groupBy(keyCols.map(col): _*)
-        .agg(collect_list(struct(col("doc_id"), col("sig"))).as("ids")),
-      maxBucket, dropAcc, dropDocsAcc, minSize = 1)
-    hammingVerdicts(batch, bBanded.join(lBuckets, keyCols), partitionCols,
-      maxHamming)
+    val probe = hammingKeyed(batch, partitionCols, bands, bandBits)
+    val index = hammingIndex(ledger, maxHamming, bands, bandBits, maxBucket,
+      partitionCols, "incr_hamming", droppedBuckets, Some(probe))
+    val out = probeHamming(batch, probe, index).localCheckpoint(true)
+    index.release()
+    out
   }
 
-  /** One `(partitionCols..., doc_id, sig, band, key)` row per band of each
-    * signature in `sigs` — the unfused banding of [[bandedHammingPairs]]
-    * and [[incrementalHammingDedup]]. */
-  private def bandRows(sigs: DataFrame, pcols: Seq[Column], bands: Int,
-                       bandBits: Int): DataFrame =
-    sigs.select(pcols ++ Seq(col("doc_id"), col("sig"),
-      explode(array((0 until bands).map { b =>
-        struct(lit(b).as("band"), bandKey(col("sig"), b, bandBits).as("key"))
-      }: _*)).as("bk")): _*)
-      .select(pcols ++ Seq(col("doc_id"), col("sig"),
-        col("bk.band").as("band"), col("bk.key").as("key")): _*)
+  /** A hamming posting's item: the signature travels with its id. */
+  private def sigItem: Column = struct(col("doc_id"), col("sig"))
 
-  /** Band `b` of a bit signature: the `bandBits` bits from bit
-    * `b * bandBits` up. `shiftright` is arithmetic, so the mask also
-    * strips the sign extension a negative 64-bit signature would smear. */
-  private def bandKey(sig: Column, b: Int, bandBits: Int): Column =
-    shiftright(sig, b * bandBits).bitwiseAND(lit((1L << bandBits) - 1))
+  /** `(partitionCols..., doc_id, sig, bkey)`: one row per band of each
+    * signature in `sigs`, keyed by [[fusedBandKeys]] — the rows every
+    * hamming build, refresh, probe and pairing groups or joins on. */
+  private def hammingKeyed(sigs: DataFrame, partitionCols: Seq[String],
+                           bands: Int, bandBits: Int): DataFrame =
+    sigs.select(partitionCols.map(col) ++ Seq(col("doc_id"), col("sig"),
+      explode(fusedBandKeys(partitionCols, bands, bandBits, col("sig")))
+        .as("bkey")): _*)
 
-  /** Shared verdict epilogue of [[incrementalHammingDedup]] and
-    * [[indexHammingDedup]]: `probed` pairs each batch band row
-    * `(partitionCols..., doc_id, sig)` with the `ids` postings of the
-    * ledger bucket it hit. Best match = lowest hamming within
-    * `maxHamming`, ties to the smallest ledger id, then the batch left
-    * join that surfaces no-match rows as `admitted`. */
-  private def hammingVerdicts(batch: DataFrame, probed: DataFrame,
-      partitionCols: Seq[String], maxHamming: Int): DataFrame = {
+  /** Verdicts of `batch` (its [[hammingKeyed]] rows `probe`) against
+    * `index` — the probe of [[incrementalHammingDedup]] and
+    * [[indexHammingDedup]]: candidates from one equi-join on `bkey`, best
+    * match = lowest hamming within `maxHamming`, ties to the smallest
+    * ledger id. */
+  private def probeHamming(batch: DataFrame, probe: DataFrame,
+                           index: HammingIndex): DataFrame = {
+    val partitionCols = index.partitionCols
     val pcols = partitionCols.map(col)
-    val cand = probed
-      .select(pcols ++ Seq(col("doc_id").as("doc_a"), col("sig").as("sig_a"),
-        explode(col("ids")).as("b")): _*)
-      .select(pcols ++ Seq(col("doc_a"), col("sig_a"),
-        col("b.doc_id").as("doc_b"), col("b.sig").as("sig_b")): _*)
-      .distinct()
-    val best = cand
-      .withColumn("hamming",
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long"))
-      .where(col("hamming") <= maxHamming)
+    val best = hammingMatches(probe.join(index.buckets, "bkey")
+        .select(pcols ++ Seq(col("doc_id").as("doc_a"), col("sig").as("sig_a"),
+          col("ids")): _*),
+        pcols, index.maxHamming, lit(true))
       .groupBy(pcols :+ col("doc_a").as("doc_id"): _*)
       // lexicographic struct min: lowest hamming, then smallest ledger id
       .agg(min(struct(col("hamming"), col("doc_b"))).as("m"))
       .select(pcols ++ Seq(col("doc_id"), col("m.doc_b").as("near_dup_of"),
         col("m.hamming").as("hamming")): _*)
-    batch.select(pcols :+ col("doc_id"): _*)
-      .join(best, partitionCols :+ "doc_id", "left")
-      .select(pcols ++ Seq(col("doc_id"),
-        when(col("near_dup_of").isNotNull, lit("near_dup"))
-          .otherwise(lit("admitted")).as("verdict"),
-        col("near_dup_of"), col("hamming")): _*)
+    admissionVerdicts(batch, best, partitionCols, "hamming")
   }
 
   /** Prebuilt banded hamming ledger index for repeated signature
     * admission — the [[NearDupIndex]] analogue for bit signatures
     * ([[incrementalHammingDedup]]'s standing side, and the static
     * relation `streaming.StreamingMediaDedup` joins every
-    * micro-batch). `buckets` holds capped
-    * `bkey -> [(doc_id, sig)]` postings with the partition columns and
-    * band index FUSED into one string key (`kind:band:key`), so the
-    * stream-static join is a single-column equi-join. `partitionCols`
-    * records the columns fused into the key at build time, and
-    * [[HammingIndex.probeKeys]] is the one place that fuses it: a probe
+    * micro-batch). `buckets` holds capped `(bkey, ids: [(doc_id, sig)])`
+    * postings and `dropped` the `bkey` tombstones ([[postings]]), with the
+    * partition columns and band index FUSED into one string key
+    * (`kind:band:key`), so the stream-static join is a single-column
+    * equi-join. `partitionCols` records the columns fused into the key at
+    * build time, and [[fusedBandKeys]] (exposed as
+    * [[HammingIndex.probeKeys]]) is the one place that fuses it: a probe
     * keyed on different columns would silently match zero postings and
-    * admit everything. Persisted
-    * at build (reused per admission batch); call [[release]] when done. */
+    * admit everything. Persisted at build (reused per admission batch);
+    * call [[release]] when done. */
   final case class HammingIndex(buckets: DataFrame, maxHamming: Int,
                                 bands: Int, bandBits: Int,
                                 partitionCols: Seq[String],
                                 maxBucket: Int, dropped: DataFrame) {
-    /** The `bkey`s of signature `sig`, one per band: build, refresh and
-      * every probe side derive their keys here, so they cannot drift. */
+    /** The `bkey`s of signature `sig`, one per band: the
+      * [[fusedBandKeys]] that build, refresh and every batch probe key
+      * on, under this index's own parameters, so a stream probe cannot
+      * drift from them. */
     def probeKeys(sig: Column): Column =
       fusedBandKeys(partitionCols, bands, bandBits, sig)
     def release(): Unit = { buckets.unpersist(); dropped.unpersist() }
   }
 
   /** The fused `partitionCols...:band:key` strings of `sig` — the only
-    * spelling of a [[HammingIndex]] posting key. */
+    * spelling of a [[HammingIndex]] posting key. Band `b`'s key is the
+    * `bandBits` bits from bit `b * bandBits` up; `shiftright` is
+    * arithmetic, so the mask also strips the sign extension a negative
+    * 64-bit signature would smear. */
   private def fusedBandKeys(partitionCols: Seq[String], bands: Int,
                             bandBits: Int, sig: Column): Column =
     array((0 until bands).map { b =>
-      concat_ws(":", partitionCols.map(col) ++
-        Seq(lit(b), bandKey(sig, b, bandBits)): _*)
+      concat_ws(":", partitionCols.map(col) ++ Seq(lit(b),
+        shiftright(sig, b * bandBits).bitwiseAND(lit((1L << bandBits) - 1))): _*)
     }: _*)
 
-  /** Build a [[HammingIndex]] from ledger signatures
-    * `(partitionCols..., doc_id, sig)`. Caps are applied at build time —
-    * equivalent to per-batch capping, because pruning by a batch's keys
-    * selects whole buckets (the [[buildNearDupIndex]] argument). */
-  def buildHammingIndex(ledger: DataFrame, maxHamming: Int = 3,
-      bands: Int = 4, bandBits: Int = 16, maxBucket: Int = 64,
-      partitionCols: Seq[String] = Nil,
-      droppedBuckets: Option[org.apache.spark.util.LongAccumulator] = None)
-      : HammingIndex = {
-    val spark = ledger.sparkSession
-    val dropAcc = droppedBuckets.getOrElse(
-      spark.sparkContext.longAccumulator("graft.hamming_index.dropped_buckets"))
-    val dropDocsAcc =
-      spark.sparkContext.longAccumulator("graft.hamming_index.dropped_docs")
-    val grouped = ledger.select(col("doc_id"), col("sig"),
-        explode(fusedBandKeys(partitionCols, bands, bandBits, col("sig")))
-          .as("bkey"))
-      .groupBy("bkey")
-      .agg(collect_list(struct(col("doc_id"), col("sig"))).as("ids"))
-      .persist()
-    val buckets = capBuckets(grouped, maxBucket, dropAcc, dropDocsAcc,
-      minSize = 1).persist()
-    // capped-out keys tombstoned for rebuild-equivalent refresh
-    // (the buildNearDupIndex argument)
-    val dropped = grouped.where(size(col("ids")) > maxBucket)
-      .select("bkey").persist()
-    buckets.count(); dropped.count()
-    grouped.unpersist(false)
+  /** The [[HammingIndex]] of ledger signatures, pruned to `probe`'s keys
+    * when one is given ([[postings]]): the build behind
+    * [[buildHammingIndex]] and the one-shot [[incrementalHammingDedup]]. */
+  private def hammingIndex(ledger: DataFrame, maxHamming: Int, bands: Int,
+      bandBits: Int, maxBucket: Int, partitionCols: Seq[String], site: String,
+      droppedBuckets: Option[LongAccumulator],
+      probe: Option[DataFrame]): HammingIndex = {
+    val (buckets, dropped) = postings(
+      hammingKeyed(ledger, partitionCols, bands, bandBits), sigItem,
+      maxBucket, site, droppedBuckets, probe)
     HammingIndex(buckets, maxHamming, bands, bandBits, partitionCols,
       maxBucket, dropped)
   }
 
+  /** Build a [[HammingIndex]] from ledger signatures
+    * `(partitionCols..., doc_id, sig)`. Caps are applied at build time and
+    * capped-out keys tombstoned — the [[buildNearDupIndex]] argument. */
+  def buildHammingIndex(ledger: DataFrame, maxHamming: Int = 3,
+      bands: Int = 4, bandBits: Int = 16, maxBucket: Int = 64,
+      partitionCols: Seq[String] = Nil,
+      droppedBuckets: Option[org.apache.spark.util.LongAccumulator] = None)
+      : HammingIndex =
+    hammingIndex(ledger, maxHamming, bands, bandBits, maxBucket,
+      partitionCols, "hamming_index", droppedBuckets, None)
+
   /** Incremental maintenance of a standing [[HammingIndex]] — the bit-
-    * signature twin of [[refreshNearDupIndex]], with the same contract:
-    * `refreshHammingIndex(build(L), B) == build(L ∪ B)` (DedupSpec pins
-    * it), batch postings under tombstoned keys stay dropped, merged
-    * buckets over `maxBucket` drop whole and tombstone, the merge join
-    * reuses the standing side's bkey partitioning, and the new relations
-    * are materialized before returning. `admitted` is
-    * `(partitionCols..., doc_id, sig)` like the build input. */
+    * signature twin of [[refreshNearDupIndex]] through the same
+    * [[mergePostings]]: `refreshHammingIndex(build(L), B) == build(L ∪ B)`
+    * (DedupSpec pins it). `admitted` is `(partitionCols..., doc_id, sig)`
+    * like the build input. */
   def refreshHammingIndex(index: HammingIndex, admitted: DataFrame)
       : HammingIndex = {
-    val emptyIds = array().cast("array<struct<doc_id:bigint,sig:bigint>>")
-    val newPosts = admitted.select(col("doc_id"), col("sig"),
-        explode(index.probeKeys(col("sig"))).as("bkey"))
-      .groupBy("bkey")
-      .agg(collect_list(struct(col("doc_id"), col("sig"))).as("new_ids"))
-      .join(index.dropped, Seq("bkey"), "left_anti")
-    val merged = index.buckets
-      .join(newPosts, Seq("bkey"), "full_outer")
-      .select(col("bkey"),
-        concat(coalesce(col("ids"), emptyIds),
-          coalesce(col("new_ids"), emptyIds)).as("ids"))
-      .persist()
-    val buckets2 = merged.where(size(col("ids")) <= index.maxBucket).persist()
-    val dropped2 = index.dropped
-      .union(merged.where(size(col("ids")) > index.maxBucket).select("bkey"))
-      .persist()
-    buckets2.count(); dropped2.count()
-    merged.unpersist(false)
-    index.copy(buckets = buckets2, dropped = dropped2)
+    val (buckets, dropped) = mergePostings(index.buckets, index.dropped,
+      hammingKeyed(admitted, index.partitionCols, index.bands, index.bandBits),
+      sigItem, index.maxBucket)
+    index.copy(buckets = buckets, dropped = dropped)
   }
 
-  /** Persist a standing [[HammingIndex]] under `dir` — the
-    * [[saveNearDupIndex]] arc for the bit-signature tier. Three
-    * relations: `buckets/` (capped bkey postings, bkey-clustered so a
-    * probe batch's bucket lookup prunes), `dropped/` (cap tombstones),
-    * `meta/` (1 row: maxHamming/bands/bandBits/maxBucket plus the FUSED
-    * partition columns — a loaded index must derive probe keys from the
-    * same columns it was built with, or every probe silently misses). */
+  /** Persist a standing [[HammingIndex]] under `dir` as one
+    * [[savePostings]] generation: `buckets/` and `dropped/` keyed on
+    * `bkey`, and `meta/` (maxHamming/bands/bandBits/maxBucket plus the
+    * FUSED partition columns — a loaded index must derive probe keys from
+    * the same columns it was built with, or every probe silently
+    * misses). */
   def saveHammingIndex(index: HammingIndex, dir: String,
                        nFiles: Int = 16): Unit = {
     val spark = index.buckets.sparkSession
     import spark.implicits._
-    // generation-versioned ([[IndexGen]]): one atomic pointer rename
-    // publishes buckets/dropped/meta together
-    val (gen, genPath) = IndexGen.newGen(dir)
-    index.buckets
-      .repartitionByRange(nFiles, col("bkey"))
-      .sortWithinPartitions("bkey")
-      .write.mode("overwrite").parquet(s"$genPath/buckets")
-    index.dropped
-      .repartitionByRange(math.max(1, nFiles / 4), col("bkey"))
-      .sortWithinPartitions("bkey")
-      .write.mode("overwrite").parquet(s"$genPath/dropped")
-    Seq((index.maxHamming, index.bands, index.bandBits, index.maxBucket,
-        index.partitionCols))
+    val meta = Seq((index.maxHamming, index.bands, index.bandBits,
+        index.maxBucket, index.partitionCols))
       .toDF("max_hamming", "bands", "band_bits", "max_bucket",
         "partition_cols")
-      .coalesce(1).write.mode("overwrite").parquet(s"$genPath/meta")
-    IndexGen.flip(dir, gen)
+    savePostings(dir, nFiles, index.buckets, index.dropped, meta)
   }
 
   /** Load a [[saveHammingIndex]] directory:
@@ -1071,12 +1047,7 @@ object Dedup {
     * chain's DuckDB rederivation). */
   def loadHammingIndex(spark: org.apache.spark.sql.SparkSession,
                        dir: String): HammingIndex = {
-    val cur = IndexGen.resolve(dir) // ONE generation serves this load
-    val meta = spark.read.parquet(s"$cur/meta").head()
-    val buckets = spark.read.parquet(s"$cur/buckets")
-      .select("bkey", "ids").persist()
-    val dropped = spark.read.parquet(s"$cur/dropped")
-      .select("bkey").persist()
+    val (_, meta, buckets, dropped) = loadPostings(spark, dir)
     HammingIndex(buckets, meta.getAs[Int]("max_hamming"),
       meta.getAs[Int]("bands"), meta.getAs[Int]("band_bits"),
       meta.getAs[scala.collection.Seq[String]]("partition_cols").toSeq,
@@ -1089,13 +1060,10 @@ object Dedup {
     * `batch` is `(partitionCols..., doc_id, sig)`; probe keys are fused
     * from the index's recorded partition columns, so a mismatched probe
     * shape fails at analysis instead of silently admitting everything. */
-  def indexHammingDedup(batch: DataFrame, index: HammingIndex): DataFrame = {
-    val bBanded = batch.select(index.partitionCols.map(col) ++
-      Seq(col("doc_id"), col("sig"),
-        explode(index.probeKeys(col("sig"))).as("bkey")): _*)
-    hammingVerdicts(batch, bBanded.join(index.buckets, Seq("bkey")),
-      index.partitionCols, index.maxHamming)
-  }
+  def indexHammingDedup(batch: DataFrame, index: HammingIndex): DataFrame =
+    probeHamming(batch,
+      hammingKeyed(batch, index.partitionCols, index.bands, index.bandBits),
+      index)
 
   /** Benchmark decontamination: corpus documents sharing at least
     * `minShared` distinct word w-shingles with *any* benchmark document —

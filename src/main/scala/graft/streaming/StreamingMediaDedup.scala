@@ -30,7 +30,10 @@ import graft.pipeline.{Dedup, Multimodal}
   * [[StreamingNearDup]] design carried over to signature space:
   * decode+dHash is a narrow per-row pass, band keys explode to a
   * stream-static left join against the persisted index postings
-  * (partition column, band and key fused into one string join key),
+  * (partition column, band and key fused into one string `bkey` by
+  * [[Dedup.HammingIndex.probeKeys]] — the one hamming key spelling, the
+  * same `bkey` the index's `buckets` and `dropped` relations are keyed
+  * by in memory and on disk),
   * and the best-match reduction runs in a `flatMapGroupsWithState`
   * that never stores state — every candidate row of a document derives
   * from that document's single input row, so the group is always

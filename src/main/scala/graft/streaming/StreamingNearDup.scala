@@ -23,6 +23,12 @@ import graft.pipeline.{Dedup, TextAnalysis}
   * verdicts on ANY replay split (StreamingSpec gates equivalence against
   * `Dedup.incrementalNearDup` on the same fixture).
   *
+  * Band keys are [[Dedup.minhashBandKeys]]'s fused `"<band>:<k1>_<k2>_…"`
+  * strings — the one MinHash key spelling, the same `bkey` the index's
+  * `buckets` and `dropped` relations are keyed by in memory and on disk —
+  * so the stream-static join is one equi-join on `bkey`, with no
+  * re-keying of the static side.
+  *
   * A candidate pair reachable through k shared bands is verified k times
   * (≤ bands) instead of paying a distinct() shuffle first — narrow
   * recompute beats an exchange inside a micro-batch; the max-reduction
@@ -95,16 +101,12 @@ object StreamingNearDup {
   def verdicts(spark: SparkSession, stream: DataFrame,
                index: Dedup.NearDupIndex): Dataset[Verdict] = {
     import spark.implicits._
-    val numPerms = index.numPerms
-    val bands = index.bands
-    val r = numPerms / bands
-    val as = (0 until numPerms).map(Dedup.permA).toArray
-    val bs = (0 until numPerms).map(Dedup.permB).toArray
-    // One narrow pass per document: distinct shingle hashes, permutation
-    // minima (Dedup's per-row kernels, so values equal the batch path's),
-    // band keys. Token-less/short docs keep an empty band array so they
-    // surface as 'admitted' through the outer joins, like the batch left
-    // join does.
+    val bandKeys = Dedup.minhashBandKeys(index.numPerms, index.bands)
+    // One narrow pass per document: distinct shingle hashes and their
+    // fused band keys, through Dedup's per-row kernels — the same keys the
+    // index postings carry, so the join below needs no re-keying.
+    // Token-less/short docs keep an empty band array so they surface as
+    // 'admitted' through the outer joins, like the batch left join does.
     val keyed = stream
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
       .as[(Long, Option[Seq[String]])]
@@ -112,23 +114,13 @@ object StreamingNearDup {
         val md = java.security.MessageDigest.getInstance("MD5")
         it.map { case (id, toksOpt) =>
           val hs = Dedup.shingleHashes(md, toksOpt.getOrElse(Seq.empty).toArray, 3)
-          if (hs.isEmpty) (id, hs, Array.empty[String])
-          else {
-            val mins = Dedup.minhashMins(hs, as, bs)
-            val keys = Array.tabulate(bands)(b =>
-              s"$b:${mins.slice(b * r, b * r + r).mkString("_")}")
-            (id, hs, keys)
-          }
+          (id, hs, if (hs.isEmpty) Array.empty[String] else bandKeys(hs))
         }
       }.toDF("doc_id", "hs", "bkeys")
-    // band keys carry the band index as a "b:" prefix, so the join key is
-    // the single string column (band, key) fused — same bucketing, one key
-    val buckets = index.buckets
-      .select(concat_ws(":", col("band"), col("key")).as("bkey"), col("ids"))
     val ledgerHs = index.shingles.toDF("doc_b", "hs_b")
     val scored = keyed
       .select(col("doc_id"), col("hs"), explode_outer(col("bkeys")).as("bkey"))
-      .join(buckets, Seq("bkey"), "left_outer")
+      .join(index.buckets, Seq("bkey"), "left_outer")
       .select(col("doc_id"), col("hs"), explode_outer(col("ids")).as("doc_b"))
       .join(ledgerHs, Seq("doc_b"), "left_outer")
       .select(col("doc_id"), col("doc_b"),

@@ -536,13 +536,13 @@ class DedupSpec extends AnyFunSuite {
     val refreshed = Dedup.refreshNearDupIndex(
       Dedup.buildNearDupIndex(ledger, maxBucket = 2), batch)
     val rebuilt = Dedup.buildNearDupIndex(ledger.union(batch), maxBucket = 2)
-    assert(bucketSet(refreshed.buckets, Seq("band", "key"))
-      == bucketSet(rebuilt.buckets, Seq("band", "key")))
+    assert(bucketSet(refreshed.buckets, Seq("bkey"))
+      == bucketSet(rebuilt.buckets, Seq("bkey")))
     assert(keySet(refreshed.dropped) == keySet(rebuilt.dropped))
     assert(bucketSet(refreshed.shingles.toDF("doc_id", "ids"), Seq("doc_id"))
       == bucketSet(rebuilt.shingles.toDF("doc_id", "ids"), Seq("doc_id")))
     // the planted transitions actually happened
-    val keptIds = bucketSet(refreshed.buckets, Seq("band", "key")).map(_._2)
+    val keptIds = bucketSet(refreshed.buckets, Seq("bkey")).map(_._2)
     assert(refreshed.dropped.count() > 0, "build-time drop expected (tA x3)")
     assert(!keptIds.exists(_.contains(10L)),
       "tA batch copy must stay dropped under the tombstoned key")
@@ -620,8 +620,8 @@ class DedupSpec extends AnyFunSuite {
       && loaded.bands == built.bands
       && loaded.thresholdPct == built.thresholdPct
       && loaded.maxBucket == built.maxBucket)
-    assert(bucketSet(loaded.buckets, Seq("band", "key"))
-      == bucketSet(built.buckets, Seq("band", "key")))
+    assert(bucketSet(loaded.buckets, Seq("bkey"))
+      == bucketSet(built.buckets, Seq("bkey")))
     assert(keySet(loaded.dropped) == keySet(built.dropped))
     assert(built.dropped.count() > 0, "fixture must exercise tombstones")
     assert(bucketSet(loaded.shingles.toDF("doc_id", "ids"), Seq("doc_id"))
@@ -629,8 +629,8 @@ class DedupSpec extends AnyFunSuite {
     // refresh ON the loaded generation == refresh on the original
     val refLoaded = Dedup.refreshNearDupIndex(loaded, batch)
     val refOrig = Dedup.refreshNearDupIndex(built, batch)
-    assert(bucketSet(refLoaded.buckets, Seq("band", "key"))
-      == bucketSet(refOrig.buckets, Seq("band", "key")))
+    assert(bucketSet(refLoaded.buckets, Seq("bkey"))
+      == bucketSet(refOrig.buckets, Seq("bkey")))
     assert(keySet(refLoaded.dropped) == keySet(refOrig.dropped))
     val probe = Seq(doc(20, tC)).toDF("doc_id", "text", "lang")
     assert(Dedup.indexNearDup(probe, refLoaded).collect().toSeq
@@ -669,5 +669,81 @@ class DedupSpec extends AnyFunSuite {
     assert(Dedup.indexHammingDedup(probe, refLoaded).collect().toSeq
       == Dedup.indexHammingDedup(probe, refOrig).collect().toSeq)
     built.release(); loaded.release(); refLoaded.release(); refOrig.release()
+  }
+
+  // --- one-shot admission == probing the unpruned standing index; the
+  //     batch-key prune counts exactly the over-cap buckets it touches
+
+  test("one-shot near-dup admission equals probing the unpruned index and " +
+       "counts exactly the over-cap buckets the batch touches") {
+    val rnd = new scala.util.Random(23)
+    val vocab = (0 until 200).map(i => s"v$i")
+    def text(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    def edit(t: String) = {
+      val ws = t.split(" "); ws(rnd.nextInt(ws.length)) = "edited"
+      ws.mkString(" ")
+    }
+    // tA x3 and tB x3 overflow every band bucket at cap 2; only tA is in
+    // the batch's reach
+    val tA = text(20); val tB = text(20)
+    val randoms = (0 until 40).map(i => (100L + i, text(20)))
+    val ledger = (Seq((1L, tA), (2L, tA), (3L, tA), (4L, tB), (5L, tB),
+      (6L, tB)) ++ randoms).toDF("doc_id", "text")
+    val batch = (Seq((1000L, tA), (1001L, edit(tA))) ++
+      randoms.take(10).map { case (id, t) => (id + 1000L, edit(t)) } ++
+      (0 until 10).map(i => (2000L + i, text(20)))).toDF("doc_id", "text")
+    val acc = spark.sparkContext.longAccumulator("test.incr_neardup.dropped")
+    val oneShot = Dedup.incrementalNearDup(batch, ledger, maxBucket = 2,
+      droppedBuckets = Some(acc)).collect().toSet
+    val full = Dedup.buildNearDupIndex(ledger, maxBucket = 2)
+    assert(oneShot == Dedup.indexNearDup(batch, full).collect().toSet)
+    assert(oneShot.count(_.getString(1) == "near_dup") >= 5,
+      "fixture must plant enough ledger near-dups to be meaningful")
+    val keysOf = Dedup.minhashBandKeys(32, 8)
+    val batchKeys = Dedup.hashedShingleDf(batch).collect()
+      .flatMap(r => keysOf(r.getSeq[Long](1).toArray)).toSet
+    val dropped = full.dropped.collect().map(_.getString(0)).toSet
+    val touched = dropped.intersect(batchKeys)
+    assert(touched.size == 8, "tA's 8 over-cap bands are in the batch's reach")
+    assert(dropped.size > touched.size, "tB's over-cap bands are not")
+    assert(acc.value == touched.size.toLong)
+    full.release()
+  }
+
+  test("one-shot hamming admission equals probing the unpruned index and " +
+       "counts exactly the over-cap buckets the batch touches") {
+    import org.apache.spark.sql.functions.{col, explode}
+    val rnd = new scala.util.Random(29)
+    def flip(s: Long, n: Int) =
+      (0 until n).foldLeft(s)((a, _) => a ^ (1L << rnd.nextInt(64)))
+    // s1 x4 and s2 x4 overflow every band bucket at cap 3; only s1 is in
+    // the batch's reach
+    val s1 = rnd.nextLong(); val s2 = rnd.nextLong()
+    val randoms = (0 until 60).map(i => (100L + i, rnd.nextLong()))
+    val ledger = (Seq(1L, 2L, 3L, 4L).map(id => (id, s1)) ++
+      Seq(5L, 6L, 7L, 8L).map(id => (id, s2)) ++ randoms)
+      .map { case (id, sig) => ("img", id, sig) }
+      .toDF("kind", "doc_id", "sig")
+    val batch = (Seq((1000L, s1)) ++
+      randoms.take(20).map { case (id, s) => (id + 1000L, flip(s, 1 + id.toInt % 3)) } ++
+      (0 until 10).map(i => (2000L + i, rnd.nextLong())))
+      .map { case (id, sig) => ("img", id, sig) }
+      .toDF("kind", "doc_id", "sig")
+    val acc = spark.sparkContext.longAccumulator("test.incr_hamming.dropped")
+    val oneShot = Dedup.incrementalHammingDedup(batch, ledger, maxBucket = 3,
+      partitionCols = Seq("kind"), droppedBuckets = Some(acc)).collect().toSet
+    val full = Dedup.buildHammingIndex(ledger, maxBucket = 3,
+      partitionCols = Seq("kind"))
+    assert(oneShot == Dedup.indexHammingDedup(batch, full).collect().toSet)
+    assert(oneShot.count(_.getAs[String]("verdict") == "near_dup") >= 10,
+      "fixture must plant enough ledger near-dups to be meaningful")
+    val batchKeys = batch.select(explode(full.probeKeys(col("sig"))))
+      .collect().map(_.getString(0)).toSet
+    val dropped = full.dropped.collect().map(_.getString(0)).toSet
+    val touched = dropped.intersect(batchKeys)
+    assert(touched.size == 4, "s1's 4 over-cap bands are in the batch's reach")
+    assert(dropped.size > touched.size, "s2's over-cap bands are not")
+    assert(acc.value == touched.size.toLong)
+    full.release()
   }
 }
