@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
   * `root -> /dc -> /dc/rack -> /dc/rack/ip` is carried in string columns, so
   * every "walk" is a codegen'd string projection — no graph, no UDF.
   *
-  * Reference semantics: `toTopRack` (`CrossAZBlockPlacementPolicy.java:723-728`)
-  * and `maybeToTopLevelRack` (`:730-742`).
+  * Reference semantics: `toTopRack` (`CrossAZBlockPlacementPolicy.java:723-728`).
   */
 object PathAlgebra {
 
@@ -20,25 +19,4 @@ object PathAlgebra {
     val idx = instr(substring(path, 2, 1000000), "/") // second '/' position - 1
     when(idx > 0, substring(path, lit(1), idx)).otherwise(path)
   }
-
-  /** Datacenter-level path `/dc`. */
-  def dcPath(path: Column): Column = substring_index(path, "/", 2)
-
-  /** Rack-level path `/dc/rack`. */
-  def rackPath(path: Column): Column = substring_index(path, "/", 3)
-
-  /** All (parent, child) ancestor edges of a leaf path, root path being ""
-    * (ref edge emission, `CrossAZBlockPlacementPolicy.java:388-398`). Returns
-    * an array of structs suitable for `explode`. */
-  def ancestorEdges(path: Column): Column = array(
-    struct(lit("").as("parent"), dcPath(path).as("child")),
-    struct(dcPath(path).as("parent"), rackPath(path).as("child")),
-    struct(rackPath(path).as("parent"), path.as("child"))
-  )
-
-  /** Writer resolution (ref `:730-742`): writer's top rack if present in the
-    * topology, else root (""). Driver-side over a collected set of known top
-    * racks — the topology dimension is small by construction. */
-  def resolveSelectionRoot(topRacks: Set[String]): String =
-    if (topRacks.size == 1) topRacks.head else ""
 }

@@ -1,27 +1,21 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftConf
 
-/** Per-(block, rack) stat row used by the single-pass hierarchy expansion
-  * (public: Catalyst codegen instantiates the deserializer externally). */
-case class RackStat(dc: String, rack: String, groups: Long,
-                    leaf: Long, max_placed: Long, min_placed: Long)
-
-/** P10–P12: placement verification as pure relational analytics.
+/** P10–P12: placement verification as one fold per block.
   *
-  * Re-expresses the reference's `verifyBlockPlacementBalancedOptimal`
-  * (`CrossAZBlockPlacementPolicy.java:385-516`) as a *single-shuffle rollup*:
-  * replicas are hash-partitioned by `block_id` once, then the per-level
-  * hierarchy statistics (host -> rack -> dc -> root) are computed with
-  * partition-local aggregations — `HashPartitioning(block_id)` satisfies the
-  * required clustering of every `groupBy(block_id, ...)`, so Catalyst plans
-  * no further exchanges. The previous formulation (explode ancestor edges ->
-  * two groupBys keyed by long path strings) shuffled 3x the rows twice with
-  * wide string keys; this one shuffles the narrow fact rows once. At 100 TB
-  * the `replicas` table dominates — one narrow shuffle is the floor.
+  * The reference's `verifyBlockPlacementBalancedOptimal`
+  * (`CrossAZBlockPlacementPolicy.java:385-516`) walks one block's few
+  * replicas up the hierarchy host -> rack -> dc -> root. Here that walk is
+  * a fold over each block's sorted run in a per-block replica view
+  * ([[blockView]]): one exchange of the replica table — the 100 TB-class
+  * input, so one narrow shuffle of it is the floor — then nested run-length
+  * scans, with no aggregate and no further exchange of the replicas.
   *
   * Semantics preserved exactly (ref `:400-515`):
   *
@@ -43,19 +37,6 @@ case class RackStat(dc: String, rack: String, groups: Long,
   */
 object Verification {
 
-  /** Direct-child counts per topology inner node — the Spark equivalent of
-    * `topology.getDatanodesInRack(parent).size()` (ref `:449-450`). Tiny
-    * (1 + #dcs + #racks rows): always broadcast. */
-  def availableGroups(topology: DataFrame): DataFrame = {
-    val root = topology.agg(countDistinct(concat(lit("/"), col("dc"))).as("available"))
-      .select(lit("").as("parent"), col("available"))
-    val dcs = topology.groupBy(concat(lit("/"), col("dc")).as("parent"))
-      .agg(countDistinct(col("rack")).as("available"))
-    val racks = topology.groupBy(concat(lit("/"), col("dc"), lit("/"), col("rack")).as("parent"))
-      .agg(count(lit(1)).as("available"))
-    root.unionByName(dcs).unionByName(racks)
-  }
-
   /** Replicas located on the topology: adds dc/rack/path/ip per replica row.
     * When the topology carries no `ip` column, the path leaf stands in — in
     * HDFS `NodeBase` paths (`/dc/rack/<host>`) the leaf IS the node's
@@ -68,140 +49,163 @@ object Verification {
       col("rack"), col("path"), ip.as("ip"))), "datanode_uuid")
   }
 
-  private def roll(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("groups"), sum("cnt").as("leaf"),
-        max("cnt").as("max_placed"), min("cnt").as("min_placed"))
+  // column ordinals of the block view
+  private final val Block = 0
+  private final val Dc = 1
+  private final val Rack = 2
+  private final val Node = 3
+  private final val Ip = 4
 
-  /** Per-(block, host) replica counts, hash-partitioned by `block_id` once;
-    * every downstream `groupBy(block_id, ...)` is then partition-local
-    * because `HashPartitioning(block_id)` satisfies its clustering.
-    *
-    * The width is PINNED to the configured shuffle partitions (see
-    * [[pinnedByBlock]]): the whole downstream rollup chain is partition-
-    * local, so whatever width this one exchange lands at is the chain's
-    * CPU parallelism for every level — and AQE's byte-based coalescing
-    * sizes it by the compact counted bytes (12 of 32 slots at the 200k-
-    * block fixture), not by the comparator/message CPU the chain runs. */
-  private def hostCounts(located: DataFrame): DataFrame =
-    pinnedByBlock(located
-        .select(col("block_id"), col("dc"), col("rack"), col("datanode_uuid")))
-      .groupBy("block_id", "dc", "rack", "datanode_uuid")
-      .agg(count(lit(1)).as("cnt"))
-
-  /** `repartition(spark.sql.shuffle.partitions, block_id)`: identical
-    * clustering to `repartition(block_id)`, but REPARTITION_BY_NUM is
-    * exempt from AQE coalescing, so the CPU-bound rollup chain keeps the
-    * CONFIGURED width (cluster-tuned at scale) instead of a width sized
-    * by post-aggregation bytes. */
-  private def pinnedByBlock(df: DataFrame): DataFrame =
+  /** The per-block replica view both operators fold over: located replicas
+    * as `(block_id, dc, rack, datanode_uuid, ip)`, one exchange by
+    * `block_id`, sorted within partitions so that each block, dc, rack and
+    * host is a contiguous run. A replica without a block id is left out.
+    * The exchange width is PINNED to the configured shuffle partitions
+    * (REPARTITION_BY_NUM is exempt from AQE coalescing): the fold after it
+    * is CPU work, which byte-based coalescing would size by the narrow
+    * view's bytes instead (12 of 32 slots at the 200k-block fixture). */
+  private def blockView(replicas: DataFrame, topology: DataFrame): DataFrame = {
+    val view = located(replicas, topology)
+      .where(col("block_id").isNotNull)
+      .select(col("block_id"), col("dc"), col("rack"), col("datanode_uuid"), col("ip"))
     // resolved conf accessor, not raw-string .toInt: some runtimes set the
     // raw conf to a non-numeric value (e.g. "auto") that the session
     // resolves to a number
-    df.repartition(
-      df.sparkSession.sessionState.conf.numShufflePartitions,
-      col("block_id"))
+    view.repartition(view.sparkSession.sessionState.conf.numShufflePartitions,
+        col("block_id"))
+      .sortWithinPartitions("block_id", "dc", "rack", "datanode_uuid")
+  }
+
+  /** Runs `foldRun` over each block's run of one partition's sorted view
+    * rows. */
+  private def perBlock[T](rows: Iterator[Row])(
+      foldRun: (Long, collection.IndexedSeq[Row]) => Iterable[T]): Iterator[T] = {
+    val in = rows.buffered
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val id = in.head.getLong(Block)
+      val run = ArrayBuffer.empty[Row]
+      while (in.hasNext && in.head.getLong(Block) == id) run += in.next()
+      foldRun(id, run)
+    }
+  }
+
+  /** End of the run of rows in `[from, until)` whose column `c` equals
+    * `rs(from)`'s (NULL equals NULL, as in a grouping key). */
+  private def runEnd(rs: collection.IndexedSeq[Row], from: Int, until: Int, c: Int): Int = {
+    val v = rs(from).getString(c)
+    var i = from + 1
+    while (i < until && rs(i).getString(c) == v) i += 1
+    i
+  }
+
+  /** Running `(groups, leaf, max, min)` over the child counts of one
+    * parent: groups is the number of children, leaf the replicas below. */
+  private final class Tally {
+    var groups, leaf = 0L
+    var max = Long.MinValue
+    var min = Long.MaxValue
+    def add(n: Long): Unit = {
+      groups += 1; leaf += n; max = math.max(max, n); min = math.min(min, n)
+    }
+    /** The spread or balance check fails against `available` children. */
+    def violated(available: Long): Boolean =
+      (if (leaf <= available) groups != leaf else groups != available) || max - min > 1
+  }
+
+  /** Walks one block's sorted run up the hierarchy with nested run scans.
+    * Each rack run `[from, until)` is tallied from its host runs (a host's
+    * count includes same-node duplicates) and offered to `rack(dc, rack,
+    * from, until, hosts)`, which says whether it counts; each dc with a
+    * counted rack goes to `dc(dc, racks)`. Returns the root's tally. */
+  private def walk(rs: collection.IndexedSeq[Row])(
+      rack: (String, String, Int, Int, Tally) => Boolean,
+      dc: (String, Tally) => Unit): Tally = {
+    val root = new Tally
+    var i = 0
+    while (i < rs.length) {
+      val dcName = rs(i).getString(Dc)
+      val dcEnd = runEnd(rs, i, rs.length, Dc)
+      val racks = new Tally
+      var j = i
+      while (j < dcEnd) {
+        val rackEnd = runEnd(rs, j, dcEnd, Rack)
+        val hosts = new Tally
+        var k = j
+        while (k < rackEnd) {
+          val hostEnd = runEnd(rs, k, rackEnd, Node)
+          hosts.add(hostEnd - k)
+          k = hostEnd
+        }
+        if (rack(dcName, rs(j).getString(Rack), j, rackEnd, hosts)) racks.add(hosts.leaf)
+        j = rackEnd
+      }
+      if (racks.groups > 0) {
+        dc(dcName, racks)
+        root.add(racks.leaf)
+      }
+      i = dcEnd
+    }
+    root
+  }
 
   /** Hierarchy statistics per (block, parent): number of occupied child
     * groups, total replicas underneath, and per-child max/min — the path-
     * keyed shape the reference exposes (parents "", "/dc", "/dc/rack").
-    *
-    * Single-pass: rack-level stats collect per block (partition-local after
-    * the one `repartition(block_id)` shuffle — a block spans at most
-    * #dcs x #racks entries), then one flatMap derives the dc- and root-level
-    * summaries in memory and emits all three levels. The alternative (union
-    * of three rollup branches) re-scans and re-shuffles the fact table per
-    * branch, since Spark shares no subplans across DataFrame branches. */
+    * One [[walk]] per block emits every rack, dc and root row. There is no
+    * dimension join, so a NULL dc or rack is a group of its own and prints
+    * as "null" in the parent path. */
   def hierarchyStats(replicas: DataFrame, topology: DataFrame): DataFrame = {
     val spark = replicas.sparkSession
     import spark.implicits._
-    val rackLvl = roll(hostCounts(located(replicas, topology)),
-      Seq("block_id", "dc", "rack"))
-    rackLvl
-      .groupBy("block_id")
-      .agg(collect_list(struct(col("dc"), col("rack"), col("groups"),
-        col("leaf"), col("max_placed"), col("min_placed"))).as("racks"))
-      .as[(Long, Seq[RackStat])]
-      .flatMap { case (blockId, racks) =>
-        val rackRows = racks.map(r =>
-          (blockId, s"/${r.dc}/${r.rack}", r.groups, r.leaf, r.max_placed, r.min_placed))
-        val dcRows = racks.groupBy(_.dc).map { case (dc, rs) =>
-          val leafs = rs.map(_.leaf)
-          (blockId, s"/$dc", rs.size.toLong, leafs.sum, leafs.max, leafs.min)
-        }.toSeq
-        val dcLeafs = dcRows.map(_._4)
-        val rootRow =
-          (blockId, "", dcRows.size.toLong, dcLeafs.sum, dcLeafs.max, dcLeafs.min)
-        (rootRow +: dcRows) ++ rackRows
-      }
+    blockView(replicas, topology)
+      .mapPartitions(rows => perBlock(rows)(hierarchyFold))
       .toDF("block_id", "parent", "groups", "leaf", "max_placed", "min_placed")
   }
+
+  private def hierarchyFold(id: Long, rs: collection.IndexedSeq[Row])
+      : Iterable[(Long, String, Long, Long, Long, Long)] = {
+    val out = ArrayBuffer.empty[(Long, String, Long, Long, Long, Long)]
+    def emit(parent: String, t: Tally): Unit =
+      out += ((id, parent, t.groups, t.leaf, t.max, t.min))
+    emit("", walk(rs)(
+      (dc, rack, _, _, hosts) => { emit(s"/$dc/$rack", hosts); true },
+      (dc, racks) => emit(s"/$dc", racks)))
+    out
+  }
+
+  /** The topology's child counts, read once per call on the driver through
+    * the fleet-size bound of [[Placement.boundedFetch]]: dc -> rack ->
+    * topology rows in that rack. A rack's `available` is
+    * `fanout(dc)(rack)`, a dc's `fanout(dc).size`, the root's
+    * `fanout.size`; a NULL dc or rack is no group, as in `countDistinct`
+    * and an equi-join. */
+  private def fanout(topology: DataFrame): Map[String, Map[String, Long]] =
+    Placement.boundedFetch(topology.select("dc", "rack"), "topology")
+      .filter(!_.isNullAt(0))
+      .groupBy(_.getString(0))
+      .map { case (dc, rows) =>
+        dc -> rows.filter(!_.isNullAt(1)).groupBy(_.getString(1))
+          .map { case (rack, hosts) => rack -> hosts.length.toLong }
+      }
 
   /** Full balanced-optimal verification: one row per block in `blocks`
     * (block_id, require_replica) with (satisfied, reason_code, reason).
     *
-    * Shape: a *linear* chain host -> rack -> dc -> root where each rollup is
-    * a partition-local `groupBy` (one `repartition(block_id)` shuffle total)
-    * and the per-level violation flag is computed as soon as that level's
-    * stats exist, then carried upward with `max(...)` through the next
-    * rollup. No plan branch ever reuses a subtree, so nothing needs
-    * caching, and the per-block verdict emerges from the final rollup with
-    * no self-joins. Group-size dimensions join broadcast at each step.
-    *
-    * The per-block node list needed for P17 message parity rides the same
-    * chain as a flattened array (bounded by the block's replica count —
-    * single digits — so the extra agg state is constant-sized); building it
-    * in a separate `groupBy(block_id)` branch would re-scan and re-shuffle
-    * the fact table, since Spark shares no subplans across branches. */
+    * One [[walk]] per block yields `(block_id, any_violation, root_total,
+    * ips)`, checking each level against its [[fanout]] count (captured in
+    * the fold) and gathering the replicas' ips. A replica whose dc or rack
+    * is NULL or not in the topology drops out of every level and of the
+    * node list; a block with none left has no fold row, so it gets
+    * `not_enough` with an empty list. The verdict and message epilogue is
+    * SQL over the `blocks` left join. */
   def verifyBalancedOptimal(replicas: DataFrame, topology: DataFrame,
                             blocks: DataFrame): DataFrame = {
-    // group-size dimensions in natural keys; all tiny -> broadcast
-    val hostsPerRack = topology.groupBy("dc", "rack").agg(count(lit(1)).as("available"))
-    val racksPerDc = topology.groupBy("dc").agg(countDistinct("rack").as("available"))
-    val nDcs = topology.agg(countDistinct(col("dc")).as("available"))
-
-    val violated: Column =
-      when(col("leaf") <= col("available"), col("groups") =!= col("leaf"))
-        .otherwise(col("groups") =!= col("available")) ||
-        (col("max_placed") - col("min_placed") > 1)
-    val vFlag: Column = when(violated, 1).otherwise(0)
-
-    // per-(block, host) replica counts + that host's ip per replica row;
-    // one pinned-width repartition(block_id) makes every rollup below
-    // partition-local at the configured width (see pinnedByBlock)
-    val hosts = pinnedByBlock(located(replicas, topology)
-        .select(col("block_id"), col("dc"), col("rack"),
-          col("datanode_uuid"), col("ip")))
-      .groupBy("block_id", "dc", "rack", "datanode_uuid")
-      .agg(count(lit(1)).as("cnt"), collect_list("ip").as("ips"))
-    // parent = /dc/rack: children are hosts
-    val rackLvl = hosts
-      .groupBy("block_id", "dc", "rack")
-      .agg(count(lit(1)).as("groups"), sum("cnt").as("leaf"),
-        max("cnt").as("max_placed"), min("cnt").as("min_placed"),
-        flatten(collect_list("ips")).as("ips"))
-      .join(broadcast(hostsPerRack), Seq("dc", "rack"))
-      .select(col("block_id"), col("dc"), col("leaf").as("cnt"), vFlag.as("v"),
-        col("ips"))
-    // parent = /dc: children are racks; carry the rack-level flag upward
-    val dcLvl = rackLvl
-      .groupBy("block_id", "dc")
-      .agg(count(lit(1)).as("groups"), sum("cnt").as("leaf"),
-        max("cnt").as("max_placed"), min("cnt").as("min_placed"),
-        max("v").as("v_below"), flatten(collect_list("ips")).as("ips"))
-      .join(broadcast(racksPerDc), Seq("dc"))
-      .select(col("block_id"), col("leaf").as("cnt"),
-        greatest(vFlag, col("v_below")).as("v"), col("ips"))
-    // parent = root: children are dcs; the final rollup yields the verdict
-    val perBlock = dcLvl
-      .groupBy("block_id")
-      .agg(count(lit(1)).as("groups"), sum("cnt").as("leaf"),
-        max("cnt").as("max_placed"), min("cnt").as("min_placed"),
-        max("v").as("v_below"), flatten(collect_list("ips")).as("ips"))
-      .crossJoin(broadcast(nDcs))
-      .select(col("block_id"),
-        greatest(vFlag, col("v_below")).as("any_violation"),
-        col("leaf").as("root_total"), col("ips"))
+    val spark = replicas.sparkSession
+    import spark.implicits._
+    val avail = fanout(topology)
+    val verdicts = blockView(replicas, topology)
+      .mapPartitions(rows => perBlock(rows)(verifyFold(avail)))
+      .toDF("block_id", "any_violation", "root_total", "ips")
 
     val notEnough: Column =
       col("root_total").isNull || col("root_total") < col("require_replica")
@@ -210,7 +214,7 @@ object Verification {
       transform(sort_array(coalesce(col("ips"), array().cast("array<string>"))),
         x => concat(lit("("), x, lit(")"))))
 
-    blocks.join(perBlock, Seq("block_id"), "left")
+    blocks.join(verdicts, Seq("block_id"), "left")
       .select(col("block_id"),
         when(notEnough, false)
           .when(col("any_violation") === 1, false)
@@ -225,6 +229,21 @@ object Verification {
             "placement not optimal, datanodes:[%s], require replica:%d",
             nodesStr, col("require_replica")))
           .otherwise(lit(null).cast("string")).as("reason"))
+  }
+
+  private def verifyFold(avail: Map[String, Map[String, Long]])(id: Long,
+      rs: collection.IndexedSeq[Row]): Iterable[(Long, Int, Long, Seq[String])] = {
+    val ips = ArrayBuffer.empty[String]
+    var violated = false
+    val root = walk(rs)(
+      (dc, rack, from, until, hosts) => avail.get(dc).flatMap(_.get(rack)).exists { n =>
+        violated |= hosts.violated(n)
+        (from until until).foreach { k => Option(rs(k).getString(Ip)).foreach(ips += _) }
+        true
+      },
+      (dc, racks) => violated |= racks.violated(avail(dc).size))
+    if (root.groups == 0) Nil
+    else Seq((id, if (violated || root.violated(avail.size)) 1 else 0, root.leaf, ips.toSeq))
   }
 
   /** P11 fast verification (ref `:373-383`): replica count >= required. */

@@ -3,6 +3,9 @@ package graft.plans
 import scala.collection.mutable
 import scala.util.Random
 
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
+
 /** Compact datanode descriptor carried in the broadcast snapshot. */
 final case class NodeMeta(uuid: String, path: String, healthy: Boolean, xceivers: Int)
 
@@ -31,9 +34,20 @@ final case class PlacementRequest(
   * few MB), while the *request/fact* dimension is what scales to 100 TB —
   * so the scalable shape is: broadcast the snapshot, run the per-request
   * greedy decision procedures data-parallel inside executors
-  * (`Placement.choosePlacements` / `chooseDeletions`). */
+  * (`Placement.choosePlacements` / `chooseDeletions`). A snapshot is
+  * serialized once however many operators run over it: it owns one
+  * broadcast of itself, created on first use and released by Spark's
+  * cleaner once the snapshot is unreachable. */
 final case class ClusterSnapshot(nodes: Vector[NodeMeta], storages: Vector[StorageMeta])
     extends Serializable {
+
+  @transient private var shared: (SparkContext, Broadcast[ClusterSnapshot]) = _
+
+  /** This snapshot's broadcast in `sc` (again in a later context). */
+  def broadcast(sc: SparkContext): Broadcast[ClusterSnapshot] = synchronized {
+    if (shared == null || (shared._1 ne sc)) shared = (sc, sc.broadcast(this))
+    shared._2
+  }
 
   @transient lazy val nodeByUuid: Map[String, NodeMeta] = nodes.map(n => n.uuid -> n).toMap
   @transient lazy val nodeByPath: Map[String, NodeMeta] = nodes.map(n => n.path -> n).toMap

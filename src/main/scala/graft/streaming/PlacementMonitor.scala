@@ -9,8 +9,8 @@ import graft.operators.Verification
 /** Periodic placement-health re-verification: streams replica-snapshot
   * parquet drops and re-runs the *batch* verification operator on each
   * micro-batch via `foreachBatch` — the idiomatic way to reuse a multi-stage
-  * batch plan (two groupBys + broadcast join) that streaming aggregation
-  * cannot express directly. The trigger is the Spark analog of the
+  * batch plan (a driver-side topology read, an exchange and a sorted
+  * per-block fold) that streaming aggregation cannot express directly. The trigger is the Spark analog of the
   * reference's fixed-rate scheduler (`Promise.java:353-376`). */
 object PlacementMonitor {
 

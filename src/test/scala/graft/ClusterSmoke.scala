@@ -23,8 +23,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - `ClusterSnapshot` broadcast (batch placement evaluates requests in
   *     executors against a broadcast topology snapshot)
   *                                     -> placement_choose, placement_delete
-  *   - `RackStat` codegen deserializer (placement verification rollup)
-  *                                     -> placement_verify,
+  *   - the per-block verification fold (a typed `mapPartitions` over the
+  *     sorted block view; verify's task closure carries the topology
+  *     fan-out read on the driver)     -> placement_verify,
   *                                        placement_hierarchy_stats
   *
   * plus the TypedImperativeAggregate tier whose partial buffers must

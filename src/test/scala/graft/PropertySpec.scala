@@ -27,51 +27,91 @@ class PropertySpec extends AnyFunSuite {
       n.path.split('/')(1), n.path.split('/')(2)))
     .toDF("datanode_uuid", "path", "dc", "rack").cache()
 
+  private def pathOf(uuid: String): String = nodes.find(_.uuid == uuid).get.path
+
   /** Independent model of verifyBlockPlacementBalancedOptimal (reference
     * rules, written directly from the spec — no shared code with the Spark
-    * operator). */
-  private def modelVerify(replicaUuids: Seq[String], require: Int): Boolean = {
-    if (replicaUuids.isEmpty) return false
-    val paths = replicaUuids.map(u => nodes.find(_.uuid == u).get.path)
+    * operator): (satisfied, reason_code, reason). The topology has no `ip`
+    * column, so a node prints as its path leaf; the list holds one entry
+    * per replica, sorted. */
+  private def modelVerify(replicaUuids: Seq[String], require: Int)
+      : (Boolean, String, String) = {
+    val paths = replicaUuids.map(pathOf)
+    val nodeList = paths.map(p => s"(${p.split('/').last})").sorted.mkString(",")
     val edges = paths.flatMap(PolicyEngine.ancestorEdges)
     val perParentChild = edges.groupBy(identity).view.mapValues(_.size).toMap
     val byParent = perParentChild.groupBy(_._1._1)
     val rootTotal = byParent.get("").map(_.values.sum).getOrElse(0)
-    if (rootTotal < require) return false
     val childrenOf = nodes.flatMap(n => PolicyEngine.ancestorEdges(n.path))
       .distinct.groupBy(_._1).view.mapValues(_.size).toMap
-    byParent.forall { case (parent, cc) =>
+    val optimal = byParent.forall { case (parent, cc) =>
       val groups = cc.size
       val leaf = cc.values.sum
       val available = childrenOf(parent)
       val spreadOk = if (leaf <= available) groups == leaf else groups == available
       spreadOk && cc.values.max - cc.values.min <= 1
     }
+    if (replicaUuids.isEmpty || rootTotal < require)
+      (false, "not_enough", s"not enough storage nodes:[$nodeList], require:$require")
+    else if (!optimal)
+      (false, "not_optimal",
+        s"placement not optimal, datanodes:[$nodeList], require replica:$require")
+    else (true, null, null)
   }
+
+  /** Independent model of hierarchyStats: per (parent, child) replica
+    * counts from the paths' ancestor edges, then per parent the number of
+    * children, their total and their max/min. */
+  private def modelHierarchy(id: Long, replicaUuids: Seq[String])
+      : Seq[(Long, String, Long, Long, Long, Long)] =
+    replicaUuids.map(pathOf).flatMap(PolicyEngine.ancestorEdges)
+      .groupBy(identity).toSeq
+      .groupBy(_._1._1).toSeq.map { case (parent, children) =>
+        val counts = children.map(_._2.size.toLong)
+        (id, parent, counts.size.toLong, counts.sum, counts.max, counts.min)
+      }
+
+  /** 200 seeded replica sets of 0..7 replicas, duplicates allowed. */
+  private lazy val cases = (1 to 200).map { i =>
+    val rnd = new Random(i)
+    val n = rnd.nextInt(8)
+    val uuids = Vector.fill(n)(nodes(rnd.nextInt(nodes.size)).uuid)
+    (i.toLong, uuids, 1 + rnd.nextInt(5))
+  }
+
+  private def caseReplicas =
+    cases.flatMap { case (id, uuids, _) =>
+      uuids.zipWithIndex.map { case (u, ix) => (id, ix, u) }
+    }.toDF("block_id", "replica_index", "datanode_uuid")
 
   test("property: Spark verification agrees with the independent model " +
     "on 200 random replica sets") {
-    val cases = (1 to 200).map { i =>
-      val rnd = new Random(i)
-      val n = rnd.nextInt(8) // 0..7 replicas, duplicates allowed
-      val uuids = Vector.fill(n)(nodes(rnd.nextInt(nodes.size)).uuid)
-      (i.toLong, uuids, 1 + rnd.nextInt(5))
-    }
     // batch every sampled case into ONE Spark job
-    val replicas = cases.flatMap { case (id, uuids, _) =>
-      uuids.zipWithIndex.map { case (u, ix) => (id, ix, u) }
-    }.toDF("block_id", "replica_index", "datanode_uuid")
     val blocks = cases.map { case (id, _, req) => (id, req) }
       .toDF("block_id", "require_replica")
-    val got = Verification.verifyBalancedOptimal(replicas, topoDf, blocks)
-      .collect().map(r => r.getLong(0) -> r.getAs[Boolean]("satisfied")).toMap
+    val got = Verification.verifyBalancedOptimal(caseReplicas, topoDf, blocks)
+      .collect().map(r => r.getLong(0) -> ((r.getAs[Boolean]("satisfied"),
+        r.getAs[String]("reason_code"), r.getAs[String]("reason")))).toMap
     var satisfiedSeen = 0
+    var duplicatesSeen = 0
     cases.foreach { case (id, uuids, req) =>
       val want = modelVerify(uuids, req)
-      if (want) satisfiedSeen += 1
+      if (want._1) satisfiedSeen += 1
+      if (uuids.distinct.size < uuids.size && !want._1) duplicatesSeen += 1
       assert(got(id) == want, s"case $id uuids=$uuids require=$req spark=${got(id)}")
     }
+    assert(got.size == cases.size)
     assert(satisfiedSeen > 0, "degenerate sample: no satisfied case generated")
+    assert(duplicatesSeen > 0, "degenerate sample: no same-node duplicate in a message")
+  }
+
+  test("property: hierarchyStats agrees with the independent model " +
+    "on 200 random replica sets") {
+    val got = Verification.hierarchyStats(caseReplicas, topoDf)
+      .as[(Long, String, Long, Long, Long, Long)].collect().toSeq
+    val want = cases.flatMap { case (id, uuids, _) => modelHierarchy(id, uuids) }
+    assert(want.nonEmpty)
+    assert(got.sortBy(r => (r._1, r._2)) == want.sortBy(r => (r._1, r._2)))
   }
 
   test("property: chooseTarget picks are distinct, filtered, bounded") {

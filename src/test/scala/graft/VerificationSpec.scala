@@ -117,6 +117,81 @@ class VerificationSpec extends AnyFunSuite {
       .getAs[String]("reason") == null)
   }
 
+  /** Degenerate inputs: NULL dc, NULL rack, NULL ip, a replica on a node
+    * absent from the topology, a replica with a NULL node, a block with no
+    * replicas, same-node duplicates and a block listed twice. */
+  private lazy val degenerate = {
+    val topology = Seq(
+      ("dn-a", "d1", "r1", "/d1/r1/10.0.0.1", "10.0.0.1"),
+      ("dn-b", "d1", "r2", "/d1/r2/10.0.0.2", "10.0.0.2"),
+      ("dn-c", "d2", "r1", "/d2/r1/10.0.0.3", "10.0.0.3"),
+      ("dn-nodc", null, "r1", null, "10.0.0.4"),
+      ("dn-norack", "d2", null, null, "10.0.0.5"),
+      ("dn-noip", "d2", "r2", "/d2/r2/x", null),
+      ("dn-nothing", null, null, null, "10.0.0.6"))
+      .toDF("datanode_uuid", "dc", "rack", "path", "ip")
+    val replicas = Seq(1L -> "dn-a", 1L -> "dn-c", 2L -> "dn-a", 2L -> "dn-nodc",
+        3L -> "dn-a", 3L -> "dn-norack", 3L -> "dn-c", 4L -> "dn-ghost", 4L -> "dn-b",
+        6L -> "dn-nodc", 6L -> "dn-nothing", 7L -> "dn-noip", 7L -> "dn-a", 7L -> "dn-a",
+        8L -> null, 8L -> "dn-c", 9L -> "dn-b")
+      .zipWithIndex.map { case ((b, u), i) => (b, i, u) }
+      .toDF("block_id", "replica_index", "datanode_uuid")
+    val blocks = Seq((1L, 2L), (2L, 2L), (3L, 2L), (4L, 1L), (5L, 1L), (6L, 1L),
+        (7L, 3L), (8L, 1L), (9L, 1L), (9L, 2L))
+      .toDF("block_id", "require_replica")
+    (replicas, topology, blocks)
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("degenerate topology: NULL dc/rack/ip, unknown nodes and empty blocks") {
+    val (replicas, topology, blocks) = degenerate
+    // pinned from the previous (aggregate-chain) implementation: NULL or
+    // unknown locations drop out of the verify levels and the node list,
+    // NULL ips drop out of the list only, an empty block is not_enough
+    assert(sortedRows(Verification.verifyBalancedOptimal(replicas, topology, blocks)) == Seq(
+      "[1,true,null,null]",
+      "[2,false,not_enough,not enough storage nodes:[(10.0.0.1)], require:2]",
+      "[3,true,null,null]",
+      "[4,true,null,null]",
+      "[5,false,not_enough,not enough storage nodes:[], require:1]",
+      "[6,false,not_enough,not enough storage nodes:[], require:1]",
+      "[7,false,not_optimal,placement not optimal, datanodes:[(10.0.0.1),(10.0.0.1)], " +
+        "require replica:3]",
+      "[8,true,null,null]",
+      "[9,false,not_enough,not enough storage nodes:[(10.0.0.2)], require:2]",
+      "[9,true,null,null]"))
+    // hierarchyStats has no dimension join: NULL parts are groups of their
+    // own and print as "null" in the parent path
+    assert(sortedRows(Verification.hierarchyStats(replicas, topology)) == Seq(
+      "[1,,2,2,1,1]", "[1,/d1,1,1,1,1]", "[1,/d1/r1,1,1,1,1]", "[1,/d2,1,1,1,1]",
+      "[1,/d2/r1,1,1,1,1]",
+      "[2,,2,2,1,1]", "[2,/d1,1,1,1,1]", "[2,/d1/r1,1,1,1,1]", "[2,/null,1,1,1,1]",
+      "[2,/null/r1,1,1,1,1]",
+      "[3,,2,3,2,1]", "[3,/d1,1,1,1,1]", "[3,/d1/r1,1,1,1,1]", "[3,/d2,2,2,1,1]",
+      "[3,/d2/null,1,1,1,1]", "[3,/d2/r1,1,1,1,1]",
+      "[4,,1,1,1,1]", "[4,/d1,1,1,1,1]", "[4,/d1/r2,1,1,1,1]",
+      "[6,,1,2,2,2]", "[6,/null,2,2,1,1]", "[6,/null/null,1,1,1,1]",
+      "[6,/null/r1,1,1,1,1]",
+      "[7,,2,3,2,1]", "[7,/d1,1,2,2,2]", "[7,/d1/r1,1,2,2,2]", "[7,/d2,1,1,1,1]",
+      "[7,/d2/r2,1,1,1,1]",
+      "[8,,1,1,1,1]", "[8,/d2,1,1,1,1]", "[8,/d2/r1,1,1,1,1]",
+      "[9,,1,1,1,1]", "[9,/d1,1,1,1,1]", "[9,/d1/r2,1,1,1,1]"))
+  }
+
+  test("both operators keep their output schema: names, types, nullability") {
+    val (replicas, topology, blocks) = degenerate
+    def fields(df: DataFrame): Seq[String] =
+      df.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}:${f.nullable}").toSeq
+    assert(fields(Verification.verifyBalancedOptimal(replicas, topology, blocks)) == Seq(
+      "block_id:bigint:false", "satisfied:boolean:false",
+      "reason_code:string:true", "reason:string:true"))
+    assert(fields(Verification.hierarchyStats(replicas, topology)) == Seq(
+      "block_id:bigint:false", "parent:string:true", "groups:bigint:false",
+      "leaf:bigint:false", "max_placed:bigint:false", "min_placed:bigint:false"))
+  }
+
   test("fast verify is a pure count check") {
     val replicas = Seq((1L, 0, "dn-1"), (1L, 1, "dn-1"), (2L, 0, "dn-3"))
       .toDF("block_id", "replica_index", "datanode_uuid")
