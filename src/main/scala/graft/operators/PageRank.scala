@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** Fixed-iteration PageRank in exact integer micros — graph centrality for
   * "which nodes are representative/authoritative" selection (e.g. central
@@ -16,8 +17,23 @@ import org.apache.spark.sql.functions._
   * stay below 2^63 for any per-node contribution sum `s` up to ~9.2e18
   * micros (a node would need ~10^13 full-rank in-neighbors to overflow).
   *
-  * Shape per iteration: edges-with-outdeg join ranks on src (one hash
-  * join), groupBy dst (one exchange with map-side partial sums), left
+  * Three paths, one INFO line per call naming it and the input edge count
+  * (`PageRank path=driver|broadcast|shuffled edges=N`); all return the same
+  * rows and schema:
+  *
+  *  - driver, at or under `driverMaxEdges` edge rows (default
+  *    [[DriverGraph.MaxEdges]]) with integral, non-NULL ids: the edges are
+  *    collected once ([[DriverGraph.collect]]) and the same recurrence runs
+  *    over arrays on the driver ([[driverRanks]]), with the sums and
+  *    products overflow-checked as ANSI `sum` and arithmetic are; the
+  *    result is a [[DriverGraph.relation]] of its arrays. No cache, no
+  *    checkpoint, no broadcast.
+  *  - broadcast, above the bound with at most [[BroadcastMaxNodes]] nodes
+  *    at [[BroadcastIters]] iterations ([[broadcastPlan]]), and
+  *  - shuffled, above both: the Spark plans below.
+  *
+  * Spark plan shape per iteration: edges-with-outdeg join ranks on src (one
+  * hash join), groupBy dst (one exchange with map-side partial sums), left
   * join back to the node set. The edge relation and node set are persisted
   * once across all iterations and released when the final ranks
   * materialize; the whole run is `iters` chained exchange rounds — the
@@ -68,29 +84,118 @@ object PageRank {
   /** @param broadcastMaxNodes node-count ceiling for the broadcast plan at
     *        [[BroadcastIters]] iterations ([[BroadcastMaxNodes]]); 0 forces
     *        the shuffled plan (test hook — PageRankSpec pins both plans
-    *        bit-identical) */
+    *        bit-identical)
+    * @param driverMaxEdges edge-row ceiling for the driver path; 0 forces
+    *        the Spark plans (test hook) */
   def ranks(edges: DataFrame, srcCol: String, dstCol: String,
             iters: Int = BroadcastIters, dampMicros: Long = 850000L,
-            broadcastMaxNodes: Long = BroadcastMaxNodes): DataFrame = {
+            broadcastMaxNodes: Long = BroadcastMaxNodes,
+            driverMaxEdges: Long = DriverGraph.MaxEdges): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     require(dampMicros >= 0 && dampMicros <= 1000000L,
       "dampMicros must be in [0, 1e6]")
-    val base = 1000000L - dampMicros
+    val log = org.slf4j.LoggerFactory.getLogger(getClass)
+    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    // the result's schema on every path: the final ranking over the node
+    // set and a contribution relation, as the Spark plans build it
+    val schema = ranked(nodesOf(e),
+      contributions(e.withColumn("outdeg", lit(1L)), "1000000 div outdeg"),
+      rankExpr(dampMicros)).schema
+    val (n, collected) =
+      DriverGraph.collect(e, schema("node").dataType, driverMaxEdges)
+    collected.filter(!_.sawNull) match {
+      case Some(c) =>
+        val (nodes, rs) = driverRanks(c.packed, iters, dampMicros)
+        log.info("PageRank path=driver edges={}", n)
+        DriverGraph.relation(edges.sparkSession, schema, Seq(nodes, rs))
+      case None =>
+        // over the collect job's executed RDD: the plans reuse the input's
+        // computed shuffle outputs instead of evaluating its lineage again
+        sparkRanks(PlanBridge.overExecuted(e), iters, dampMicros,
+          broadcastMaxNodes, n)
+    }
+  }
 
+  /** The distinct endpoints of `(src, dst)` as one `node` column. */
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
+
+  /** Per-`dst` sums `s` of the per-edge contribution `c`. */
+  private def contributions(withDeg: DataFrame, c: String): DataFrame =
+    withDeg.select(col("dst").as("node"), expr(c).as("c"))
+      .groupBy("node").agg(sum("c").as("s"))
+
+  /** `(node, rank_micros)` for every node, from the last contributions. */
+  private def ranked(nodes: DataFrame, contrib: DataFrame, rank: String): DataFrame =
+    nodes.join(contrib, Seq("node"), "left")
+      .select(col("node"), expr(rank).as("rank_micros"))
+
+  /** rank_micros = base + floor(s * damp / 1e6) with s the node's summed
+    * in-contributions (0 when absent) — the exact Euclidean-split damping
+    * from the object scaladoc, applied to a possibly-NULL sum. */
+  private def rankExpr(dampMicros: Long): String = {
+    val base = 1000000L - dampMicros
+    s"$base + (coalesce(s, 0L) div 1000000) * $dampMicros" +
+      s" + ((coalesce(s, 0L) % 1000000) * $dampMicros) div 1000000"
+  }
+
+  /** The driver kernel over packed `(src, dst)` pairs with no NULL: the
+    * recurrence of the Spark plans over arrays, with every sum and product
+    * exact (`Math.addExact` / `multiplyExact` throw where ANSI arithmetic
+    * does). Returns every node's id, ascending, and rank. */
+  private def driverRanks(packed: Array[Long], iters: Int,
+                                     dampMicros: Long): (Array[Long], Array[Long]) = {
+    val ids = DriverGraph.sortedDistinct(packed)
+    val n = ids.length
+    val m = packed.length / 2
+    val src = new Array[Int](m)
+    val dst = new Array[Int](m)
+    val outdeg = new Array[Long](n)
+    var k = 0
+    while (k < m) {
+      src(k) = java.util.Arrays.binarySearch(ids, packed(2 * k))
+      dst(k) = java.util.Arrays.binarySearch(ids, packed(2 * k + 1))
+      outdeg(src(k)) += 1
+      k += 1
+    }
+    val base = 1000000L - dampMicros
+    def rank(s: Long): Long = Math.addExact(
+      Math.addExact(base, Math.multiplyExact(s / 1000000, dampMicros)),
+      Math.multiplyExact(s % 1000000, dampMicros) / 1000000)
+    // iteration 1 contributes 1000000 div outdeg from every source
+    var s = new Array[Long](n)
+    k = 0
+    while (k < m) { s(dst(k)) = Math.addExact(s(dst(k)), 1000000L / outdeg(src(k))); k += 1 }
+    for (_ <- 2 to iters) {
+      val r = s.map(rank)
+      val next = new Array[Long](n)
+      k = 0
+      while (k < m) {
+        next(dst(k)) = Math.addExact(next(dst(k)), r(src(k)) / outdeg(src(k)))
+        k += 1
+      }
+      s = next
+    }
+    (ids, s.map(rank))
+  }
+
+  /** The broadcast and shuffled plans over the `(src, dst)` relation `e0`
+    * of `nEdges` rows. */
+  private def sparkRanks(e0: DataFrame, iters: Int, dampMicros: Long,
+                         broadcastMaxNodes: Long, nEdges: Long): DataFrame = {
     // The incoming edge relation may be arbitrarily expensive (a distinct
     // over a self-join, an LSH candidate build); it feeds THREE consumers
     // here (degrees, the join relation, the node set), so persist it or
     // pay its lineage once per consumer.
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .persist()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct().persist()
+    val e = e0.persist()
+    val nodes = nodesOf(e).distinct().persist()
     // the node count gates the broadcast plan; the count action
     // materializes the node-set cache the FINAL join reuses, so it costs
     // one scheduling round, not an extra pipeline run
     val nNodes = nodes.count()
     val useBc = broadcastPlan(nNodes, iters, broadcastMaxNodes)
+    org.slf4j.LoggerFactory.getLogger(getClass).info("PageRank path={} edges={}",
+      if (useBc) "broadcast" else "shuffled", nEdges)
     val deg0 = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val deg = if (useBc) broadcast(deg0) else deg0
     // (src, dst, outdeg): the relation every iteration joins against.
@@ -103,13 +208,7 @@ object PageRank {
     val withDeg =
       if (useBc) e.join(deg, "src").repartition(col("dst")).persist()
       else e.join(deg, "src").persist()
-
-    // rank_micros = base + floor(s * damp / 1e6) with s the node's summed
-    // in-contributions (0 when absent) — the exact Euclidean-split damping
-    // from the object scaladoc, applied to a possibly-NULL sum
-    val rankExpr =
-      s"$base + (coalesce(s, 0L) div 1000000) * $dampMicros" +
-        s" + ((coalesce(s, 0L) % 1000000) * $dampMicros) div 1000000"
+    val rank = rankExpr(dampMicros)
 
     // Iterate on the CONTRIBUTION-SUM relation, not the rank relation:
     // a node absent from `contrib` has rank exactly `base` (a constant),
@@ -119,25 +218,18 @@ object PageRank {
     // cache scan fewer per iteration. Iteration 1's uniform rank of 1e6
     // needs no join at all. The rank relation itself is materialized once,
     // at the end, by the final nodes left join.
-    var contrib = withDeg
-      .select(col("dst").as("node"),
-        expr("1000000 div outdeg").as("c"))
-      .groupBy("node").agg(sum("c").as("s"))
+    var contrib = contributions(withDeg, "1000000 div outdeg")
     for (_ <- 2 to iters) {
       // broadcast plan: the node-sized contribution sums ship to the
       // streamed edge cache — the join needs no exchange on either side
       val prev0 = contrib.withColumnRenamed("node", "src")
       val prev = if (useBc) broadcast(prev0) else prev0
-      contrib = withDeg
-        .join(prev, Seq("src"), "left")
-        .select(col("dst").as("node"),
-          expr(s"($rankExpr) div outdeg").as("c"))
-        .groupBy("node").agg(sum("c").as("s"))
+      contrib = contributions(withDeg.join(prev, Seq("src"), "left"),
+        s"($rank) div outdeg")
     }
     val lastContrib =
       if (useBc) broadcast(contrib) else contrib
-    val ranks = nodes.join(lastContrib, Seq("node"), "left")
-      .select(col("node"), expr(rankExpr).as("rank_micros"))
+    val ranks = ranked(nodes, lastContrib, rank)
     // node-sized materialization cuts the iters-deep lineage and lets the
     // persisted edge/node caches release deterministically
     val out = ranks.localCheckpoint(true)
@@ -158,9 +250,11 @@ object PageRank {
     * without paying an extra corpus-sized `distinct()` exchange every
     * caller with clean input would waste — so the contract lives here. */
   def ranksUndirected(pairs: DataFrame, aCol: String, bCol: String,
-                      iters: Int = 3, dampMicros: Long = 850000L): DataFrame = {
+                      iters: Int = 3, dampMicros: Long = 850000L,
+                      driverMaxEdges: Long = DriverGraph.MaxEdges): DataFrame = {
     val fwd = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
     val rev = pairs.select(col(bCol).as("src"), col(aCol).as("dst"))
-    ranks(fwd.union(rev), "src", "dst", iters, dampMicros)
+    ranks(fwd.union(rev), "src", "dst", iters, dampMicros,
+      driverMaxEdges = driverMaxEdges)
   }
 }

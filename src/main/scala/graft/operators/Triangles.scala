@@ -2,12 +2,26 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** Per-node triangle counting over an undirected graph — the clustering
   * primitive for near-dup/co-occurrence graphs (local clustering
   * coefficient numerators, community seeds).
   *
-  * Algorithm: degree-ordered edge orientation (Cohen / node-iterator++).
+  * Two paths, one INFO line per call naming it and the input edge count
+  * (`Triangles path=driver|spark edges=N`); both return the same rows and
+  * schema:
+  *
+  *  - driver, at or under `driverMaxEdges` input rows (default
+  *    [[DriverGraph.MaxEdges]]) with integral ids: the edges are collected
+  *    once ([[DriverGraph.collect]]) and counted on the driver over a
+  *    degree-ordered CSR with sorted-merge intersections ([[driverCounts]]);
+  *    the result is a [[DriverGraph.relation]] of its arrays.
+  *  - spark, above the bound or for other id types: the distributed plan
+  *    below.
+  *
+  * Algorithm (both paths): degree-ordered edge orientation (Cohen /
+  * node-iterator++).
   * Every edge is directed from its (degree, id)-smaller endpoint to the
   * larger; wedges are enumerated by self-joining the ORIENTED adjacency
   * on the source, and a wedge (s -> d1, s -> d2) closes iff the oriented
@@ -20,9 +34,9 @@ import org.apache.spark.sql.functions._
   * celebrity node of degree 1M contributes not 10^12 wedges but only
   * wedges among its FEW higher-degree neighbors. The wedge relation
   * (the big intermediate) is sum of out-degree^2 <= m^1.5, the known
-  * optimum for exact triangle enumeration. All three joins are BIGINT
-  * equi-joins (composite keys for the closing join), shuffled on node
-  * ids — no broadcast of anything graph-sized.
+  * optimum for exact triangle enumeration. In the Spark plan all three
+  * joins are BIGINT equi-joins (composite keys for the closing join),
+  * shuffled on node ids — no broadcast of anything graph-sized.
   */
 object Triangles {
 
@@ -99,17 +113,123 @@ object Triangles {
     *               sizing aggregate would be pure overhead.
     *               0: force the default-width sort-merge plan; > 0:
     *               explicit width (test hook — pins plan equivalence).
+    * @param driverMaxEdges input-row ceiling for the driver path; 0 forces
+    *               the Spark plan (test hook — the equivalence specs pin
+    *               both paths). `bloomBits`, `edgeCountHint` and
+    *               `wedgeParts` apply to the Spark plan only.
     * @return (node, n_triangles), one row per node in >= 1 triangle
     */
   def perNode(edges: DataFrame, uCol: String, vCol: String,
       bloomBits: Int = -1, bloomHashes: Int = 5,
-      edgeCountHint: Long = -1L, wedgeParts: Int = -1): DataFrame = {
-    val e = edges
-      .select(least(col(uCol), col(vCol)).as("u"),
-        greatest(col(uCol), col(vCol)).as("v"))
+      edgeCountHint: Long = -1L, wedgeParts: Int = -1,
+      driverMaxEdges: Long = DriverGraph.MaxEdges): DataFrame = {
+    val log = org.slf4j.LoggerFactory.getLogger(getClass)
+    val pairs = edges.select(col(uCol).as("u"), col(vCol).as("v"))
+    // the normalized edge relation over `src`: the result's schema on both
+    // paths derives from it
+    def normalized(src: DataFrame): DataFrame = src
+      .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
       .where(col("u") =!= col("v"))
       .distinct()
+    val schema = perNodeCounts(normalized(pairs)
+      .select(col("u").as("src"), col("v").as("d1"), col("v").as("d2"))).schema
+    val (n, collected) =
+      DriverGraph.collect(pairs, schema("node").dataType, driverMaxEdges)
+    if (collected.isDefined) {
+      val (nodes, counts) = driverCounts(collected.get.packed)
+      log.info("Triangles path=driver edges={}", n)
+      DriverGraph.relation(edges.sparkSession, schema, Seq(nodes, counts))
+    } else {
+      log.info("Triangles path=spark edges={}", n)
+      // over the collect job's executed RDD: the plan reuses the input's
+      // computed shuffle outputs instead of evaluating its lineage again
+      // (persisting the edge projection instead measured slower than both)
+      sparkPerNode(normalized(PlanBridge.overExecuted(pairs)),
+        bloomBits, bloomHashes, edgeCountHint, wedgeParts)
+    }
+  }
 
+  /** `(node, n_triangles)` from the triangle relation `(src, d1, d2)`. */
+  private def perNodeCounts(triangles: DataFrame): DataFrame =
+    triangles
+      .select(explode(array(col("src"), col("d1"), col("d2"))).as("node"))
+      .groupBy("node").agg(count(lit(1)).as("n_triangles"))
+
+  /** The driver kernel over packed `(a, b)` pairs (see
+    * [[DriverGraph.Edges]]): self-loops dropped, pairs normalized and
+    * deduplicated, each edge oriented from its (degree, id)-smaller
+    * endpoint, out-lists sorted (a CSR), and every oriented edge `u -> v`
+    * closes one triangle per common out-neighbor, found by a sorted merge
+    * of the two lists. Returns the ids and counts of the nodes in at least
+    * one triangle, ascending by id. */
+  private def driverCounts(packed: Array[Long]): (Array[Long], Array[Long]) = {
+    val ends = {
+      val b = Array.newBuilder[Long]
+      var k = 0
+      while (k < packed.length) {
+        if (packed(k) != packed(k + 1)) { b += packed(k); b += packed(k + 1) }
+        k += 2
+      }
+      b.result()
+    }
+    val ids = DriverGraph.sortedDistinct(ends)
+    val n = ids.length
+    // each edge as (lo index << 32 | hi index), sorted and deduplicated
+    val keys = {
+      val raw = new Array[Long](ends.length / 2)
+      var k = 0
+      while (k < raw.length) {
+        val a = java.util.Arrays.binarySearch(ids, ends(2 * k)).toLong
+        val b = java.util.Arrays.binarySearch(ids, ends(2 * k + 1)).toLong
+        raw(k) = if (a < b) (a << 32) | b else (b << 32) | a
+        k += 1
+      }
+      DriverGraph.sortedDistinct(raw)
+    }
+    val deg = new Array[Int](n)
+    keys.foreach { key => deg((key >>> 32).toInt) += 1; deg(key.toInt) += 1 }
+    def before(a: Int, b: Int) = deg(a) < deg(b) || (deg(a) == deg(b) && a < b)
+    // CSR of the oriented out-lists, each sorted by index
+    val start = new Array[Int](n + 1)
+    keys.foreach { key =>
+      val (a, b) = ((key >>> 32).toInt, key.toInt)
+      start((if (before(a, b)) a else b) + 1) += 1
+    }
+    var i = 0
+    while (i < n) { start(i + 1) += start(i); i += 1 }
+    val adj = new Array[Int](keys.length)
+    val fill = java.util.Arrays.copyOf(start, n)
+    keys.foreach { key =>
+      val (a, b) = ((key >>> 32).toInt, key.toInt)
+      if (before(a, b)) { adj(fill(a)) = b; fill(a) += 1 }
+      else { adj(fill(b)) = a; fill(b) += 1 }
+    }
+    i = 0
+    while (i < n) { java.util.Arrays.sort(adj, start(i), start(i + 1)); i += 1 }
+    val cnt = new Array[Long](n)
+    var u = 0
+    while (u < n) {
+      var e = start(u)
+      while (e < start(u + 1)) {
+        val v = adj(e)
+        var p = start(u)
+        var q = start(v)
+        while (p < start(u + 1) && q < start(v + 1)) {
+          if (adj(p) < adj(q)) p += 1
+          else if (adj(p) > adj(q)) q += 1
+          else { cnt(u) += 1; cnt(v) += 1; cnt(adj(p)) += 1; p += 1; q += 1 }
+        }
+        e += 1
+      }
+      u += 1
+    }
+    val hit = (0 until n).filter(cnt(_) > 0).toArray
+    (hit.map(ids(_)), hit.map(cnt(_)))
+  }
+
+  /** The distributed plan over the normalized edge relation `e`. */
+  private def sparkPerNode(e: DataFrame, bloomBits: Int, bloomHashes: Int,
+      edgeCountHint: Long, wedgeParts: Int): DataFrame = {
     val deg = e.select(col("u").as("node"))
       .unionAll(e.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -151,7 +271,7 @@ object Triangles {
         (col("dd1") === col("dd2") && col("d1") < col("d2")))
       .select("src", "d1", "d2")
 
-    val spark = edges.sparkSession
+    val spark = e.sparkSession
     // 2^30 bits = 128 MiB, the graft_bloom_agg ceiling. The sketch ships as
     // a SparkContext broadcast (BloomMightContainBc), NOT a plan literal,
     // so blob size costs one torrent transfer per executor — not one
@@ -229,9 +349,7 @@ object Triangles {
           .join(closing.hint("shuffle_hash"), Seq("d1", "d2"))
       else prunedWedges._1.join(closing, Seq("d1", "d2"))
 
-    val result = triangles
-      .select(explode(array(col("src"), col("d1"), col("d2"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("n_triangles"))
+    val result = perNodeCounts(triangles)
     // the per-node aggregate is tiny next to the wedge relation: materialize
     // it eagerly (cutting lineage) so the big persisted intermediate and
     // the sketch broadcast can be released deterministically instead of

@@ -2,8 +2,9 @@ package graft.operators
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.GraftConf
 
@@ -49,43 +50,49 @@ object Verification {
       col("rack"), col("path"), ip.as("ip"))), "datanode_uuid")
   }
 
-  // column ordinals of the block view
+  // column ordinals of the block view; verification appends the marker
+  // columns (see [[verifyBalancedOptimal]])
   private final val Block = 0
   private final val Dc = 1
   private final val Rack = 2
   private final val Node = 3
   private final val Ip = 4
+  private final val Bid = 5
+  private final val Req = 6
+  private final val Marker = 7
 
-  /** The per-block replica view both operators fold over: located replicas
-    * as `(block_id, dc, rack, datanode_uuid, ip)`, one exchange by
-    * `block_id`, sorted within partitions so that each block, dc, rack and
-    * host is a contiguous run. A replica without a block id is left out.
+  /** Located replicas as `(block_id, dc, rack, datanode_uuid, ip)`; a
+    * replica without a block id is left out. */
+  private def replicaView(replicas: DataFrame, topology: DataFrame): DataFrame =
+    located(replicas, topology)
+      .where(col("block_id").isNotNull)
+      .select(col("block_id"), col("dc"), col("rack"), col("datanode_uuid"), col("ip"))
+
+  /** The per-block view both operators fold over: `view` (led by the
+    * [[replicaView]] columns) in one exchange by `block_id`, sorted within
+    * partitions so that each block, dc, rack and host is a contiguous run.
     * The exchange width is PINNED to the configured shuffle partitions
     * (REPARTITION_BY_NUM is exempt from AQE coalescing): the fold after it
     * is CPU work, which byte-based coalescing would size by the narrow
     * view's bytes instead (12 of 32 slots at the 200k-block fixture). */
-  private def blockView(replicas: DataFrame, topology: DataFrame): DataFrame = {
-    val view = located(replicas, topology)
-      .where(col("block_id").isNotNull)
-      .select(col("block_id"), col("dc"), col("rack"), col("datanode_uuid"), col("ip"))
+  private def blockView(view: DataFrame): DataFrame =
     // resolved conf accessor, not raw-string .toInt: some runtimes set the
     // raw conf to a non-numeric value (e.g. "auto") that the session
     // resolves to a number
     view.repartition(view.sparkSession.sessionState.conf.numShufflePartitions,
         col("block_id"))
       .sortWithinPartitions("block_id", "dc", "rack", "datanode_uuid")
-  }
 
   /** Runs `foldRun` over each block's run of one partition's sorted view
-    * rows. */
+    * rows (a NULL `block_id` is a run of its own). */
   private def perBlock[T](rows: Iterator[Row])(
-      foldRun: (Long, collection.IndexedSeq[Row]) => Iterable[T]): Iterator[T] = {
+      foldRun: collection.IndexedSeq[Row] => Iterable[T]): Iterator[T] = {
     val in = rows.buffered
     Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
-      val id = in.head.getLong(Block)
+      val id = in.head.get(Block)
       val run = ArrayBuffer.empty[Row]
-      while (in.hasNext && in.head.getLong(Block) == id) run += in.next()
-      foldRun(id, run)
+      while (in.hasNext && in.head.get(Block) == id) run += in.next()
+      foldRun(run)
     }
   }
 
@@ -157,13 +164,14 @@ object Verification {
   def hierarchyStats(replicas: DataFrame, topology: DataFrame): DataFrame = {
     val spark = replicas.sparkSession
     import spark.implicits._
-    blockView(replicas, topology)
+    blockView(replicaView(replicas, topology))
       .mapPartitions(rows => perBlock(rows)(hierarchyFold))
       .toDF("block_id", "parent", "groups", "leaf", "max_placed", "min_placed")
   }
 
-  private def hierarchyFold(id: Long, rs: collection.IndexedSeq[Row])
+  private def hierarchyFold(rs: collection.IndexedSeq[Row])
       : Iterable[(Long, String, Long, Long, Long, Long)] = {
+    val id = rs.head.getLong(Block)
     val out = ArrayBuffer.empty[(Long, String, Long, Long, Long, Long)]
     def emit(parent: String, t: Tally): Unit =
       out += ((id, parent, t.groups, t.leaf, t.max, t.min))
@@ -191,21 +199,34 @@ object Verification {
   /** Full balanced-optimal verification: one row per block in `blocks`
     * (block_id, require_replica) with (satisfied, reason_code, reason).
     *
-    * One [[walk]] per block yields `(block_id, any_violation, root_total,
+    * Each `blocks` row rides the replica exchange as a marker row of its
+    * block (its `block_id` cast to BIGINT as the key, its own `block_id`
+    * and `require_replica` carried beside it), so the verdict needs no
+    * join. One [[walk]] per block yields `(any_violation, root_total,
     * ips)`, checking each level against its [[fanout]] count (captured in
-    * the fold) and gathering the replicas' ips. A replica whose dc or rack
-    * is NULL or not in the topology drops out of every level and of the
-    * node list; a block with none left has no fold row, so it gets
-    * `not_enough` with an empty list. The verdict and message epilogue is
-    * SQL over the `blocks` left join. */
+    * the fold) and gathering the replicas' ips, and every marker of the
+    * block gets one row with them — a block listed twice gets two. A
+    * replica whose dc or rack is NULL or not in the topology drops out of
+    * every level and of the node list; a block with none left, like a
+    * NULL `block_id`, gets NULLs there and so `not_enough` with an empty
+    * list. The verdict and message epilogue is SQL over those rows. */
   def verifyBalancedOptimal(replicas: DataFrame, topology: DataFrame,
                             blocks: DataFrame): DataFrame = {
-    val spark = replicas.sparkSession
-    import spark.implicits._
     val avail = fanout(topology)
-    val verdicts = blockView(replicas, topology)
-      .mapPartitions(rows => perBlock(rows)(verifyFold(avail)))
-      .toDF("block_id", "any_violation", "root_total", "ips")
+    val (bid, req) = (blocks.schema("block_id"), blocks.schema("require_replica"))
+    val marked = replicaView(replicas, topology)
+      .select(col("*"), lit(null).cast(bid.dataType).as("bid"),
+        lit(null).cast(req.dataType).as("req"), lit(false).as("marker"))
+      .union(blocks.select(col("block_id").cast("long"),
+        lit(null).cast("string"), lit(null).cast("string"),
+        lit(null).cast("string"), lit(null).cast("string"),
+        col("block_id"), col("require_replica"), lit(true)))
+    val verdicts = blockView(marked)
+      .mapPartitions(rows => perBlock(rows)(verifyFold(avail)))(Encoders.row(
+        StructType(Seq(bid, req,
+          StructField("any_violation", IntegerType),
+          StructField("root_total", LongType),
+          StructField("ips", ArrayType(StringType, containsNull = false))))))
 
     val notEnough: Column =
       col("root_total").isNull || col("root_total") < col("require_replica")
@@ -214,7 +235,7 @@ object Verification {
       transform(sort_array(coalesce(col("ips"), array().cast("array<string>"))),
         x => concat(lit("("), x, lit(")"))))
 
-    blocks.join(verdicts, Seq("block_id"), "left")
+    verdicts
       .select(col("block_id"),
         when(notEnough, false)
           .when(col("any_violation") === 1, false)
@@ -231,19 +252,28 @@ object Verification {
           .otherwise(lit(null).cast("string")).as("reason"))
   }
 
-  private def verifyFold(avail: Map[String, Map[String, Long]])(id: Long,
-      rs: collection.IndexedSeq[Row]): Iterable[(Long, Int, Long, Seq[String])] = {
-    val ips = ArrayBuffer.empty[String]
-    var violated = false
-    val root = walk(rs)(
-      (dc, rack, from, until, hosts) => avail.get(dc).flatMap(_.get(rack)).exists { n =>
-        violated |= hosts.violated(n)
-        (from until until).foreach { k => Option(rs(k).getString(Ip)).foreach(ips += _) }
-        true
-      },
-      (dc, racks) => violated |= racks.violated(avail(dc).size))
-    if (root.groups == 0) Nil
-    else Seq((id, if (violated || root.violated(avail.size)) 1 else 0, root.leaf, ips.toSeq))
+  /** One block's verdict rows, one per marker in `run`: its `block_id` and
+    * `require_replica`, then `(any_violation, root_total, ips)` from the
+    * walk over the block's replicas, or NULLs when none is located. */
+  private def verifyFold(avail: Map[String, Map[String, Long]])(
+      run: collection.IndexedSeq[Row]): Iterable[Row] = {
+    val (marks, rs) = run.partition(_.getBoolean(Marker))
+    if (marks.isEmpty) Nil
+    else {
+      val ips = ArrayBuffer.empty[String]
+      var violated = false
+      val root = walk(rs)(
+        (dc, rack, from, until, hosts) => avail.get(dc).flatMap(_.get(rack)).exists { n =>
+          violated |= hosts.violated(n)
+          (from until until).foreach { k => Option(rs(k).getString(Ip)).foreach(ips += _) }
+          true
+        },
+        (dc, racks) => violated |= racks.violated(avail(dc).size))
+      val verdict: Seq[Any] =
+        if (root.groups == 0) Seq(null, null, null)
+        else Seq(if (violated || root.violated(avail.size)) 1 else 0, root.leaf, ips.toSeq)
+      marks.map(m => Row.fromSeq(Seq(m.get(Bid), m.get(Req)) ++ verdict))
+    }
   }
 
   /** P11 fast verification (ref `:373-383`): replica count >= required. */

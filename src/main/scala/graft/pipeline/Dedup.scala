@@ -3,8 +3,10 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.LongAccumulator
+
+import graft.operators.DriverGraph
 
 /** Deduplication operators: exact (fingerprint groupBy), n-gram Jaccard
   * (rare-shingle candidate generation), MinHash+LSH (banded), and SimHash.
@@ -1102,10 +1104,6 @@ object Dedup {
     result
   }
 
-  /** Pair-count ceiling for the [[resolveClusters]] driver path: 2^20
-    * pairs are 16 MB packed on the driver (see the scaladoc there). */
-  val DriverMaxEdges: Long = 1L << 20
-
   /** Near-dup *cluster resolution*: connected components over pair edges,
     * labeling every document with the smallest doc_id of its component —
     * the canonical-representative step that turns pair lists (from
@@ -1114,18 +1112,14 @@ object Dedup {
     * persisted and counted first; the count picks one of two paths.
     *
     * Driver path: at or under `driverMaxEdges` pairs (default
-    * [[DriverMaxEdges]]) with integral ids, the pairs are collected as
-    * packed longs and resolved by one union-by-min union-find on the
-    * driver. The counting pass already packs every partition within an
-    * even share of the bound, so a small input is counted and collected in
-    * one job. The bound is sized for driver memory, not for any input: at
-    * 2^20 pairs the packed edges are 16 MB and the working set (edges,
-    * sorted distinct ids, int parents) stays under ~40 MB. The returned
-    * relation is built from driver-held arrays, so it holds no executor
-    * blocks: an executor loss recomputes it from the driver, which is why
-    * this path needs no checkpoint in either mode. It is decided before
-    * `checkpointDir` is touched — a reliable-mode call that takes it writes
-    * no files and leaves the session's checkpoint dir as it was.
+    * [[graft.operators.DriverGraph.MaxEdges]]) with integral ids, the pairs
+    * are collected by [[graft.operators.DriverGraph.collect]] (count and
+    * pack in one job) and resolved by one union-by-min union-find on the
+    * driver; the result is a [[graft.operators.DriverGraph.relation]] of
+    * its arrays, so it holds no executor blocks and needs no checkpoint in
+    * either mode (see [[graft.operators.DriverGraph]]). It is decided
+    * before `checkpointDir` is touched — a reliable-mode call that takes it
+    * writes no files and leaves the session's checkpoint dir as it was.
     *
     * Star path: above the bound (or for other id types), alternating
     * large-star / small-star contraction over the same cache (see
@@ -1168,31 +1162,22 @@ object Dedup {
     * least one pair; unpaired documents are their own singleton clusters by
     * definition and are left to the caller (they need no join to decide). */
   def resolveClusters(pairs: DataFrame, checkpointDir: Option[String] = None,
-                      driverMaxEdges: Long = DriverMaxEdges): DataFrame = {
+                      driverMaxEdges: Long = DriverGraph.MaxEdges): DataFrame = {
     val spark = pairs.sparkSession
     val sc = spark.sparkContext
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
     // the one scan of the (possibly expensive) pair relation both paths
-    // read; `proj.rdd` fills the cache (its own stage under AQE)
+    // read; the collect job fills the cache (its own stage under AQE)
     val proj = pairs.select("doc_a", "doc_b").persist()
     try {
       // the result's schema on both paths: both columns take the
       // endpoints' common type and nullability
       val schema = docIds(proj)
         .select(col("doc_id"), col("doc_id").as("cluster_id")).schema
-      val idType = schema("doc_id").dataType
-      val driverOk = driverMaxEdges > 0 &&
-        (idType == LongType || idType == IntegerType)
-      val rows = proj.rdd
-      // one job counts every partition and already packs each one within
-      // an even share of the bound: a small input is counted and collected
-      // in one pass, and no input ships more than the bound to the driver
-      val share =
-        if (driverOk) driverMaxEdges / math.max(1, rows.getNumPartitions) else 0L
-      val parts = sc.runJob(rows, packPairs(share) _)
-      val nPairs = parts.map(_.rows).sum
-      if (driverOk && nPairs <= driverMaxEdges) {
-        val out = driverClusters(proj, parts, schema)
+      val (nPairs, collected) =
+        DriverGraph.collect(proj, schema("doc_id").dataType, driverMaxEdges)
+      if (collected.isDefined) {
+        val out = driverClusters(spark, collected.get, schema)
         log.info("resolveClusters path=driver edges={}", nPairs)
         out
       } else {
@@ -1223,66 +1208,15 @@ object Dedup {
   private def docIds(pairs: DataFrame): DataFrame =
     pairs.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
 
-  /** One partition of a (doc_a, doc_b) relation: its row count and, if
-    * that is at most `cap`, its pairs packed as longs — both endpoints of
-    * every pair with no NULL, `(x, x)` for the non-NULL endpoint of a
-    * half-NULL pair (still a node of its own) — and whether any endpoint
-    * was NULL. `packed` is null when the partition was over `cap`. */
-  private final case class PackedPairs(rows: Long, packed: Array[Long],
-                                       sawNull: Boolean)
-
-  private def packPairs(cap: Long)(it: Iterator[Row]): PackedPairs = {
-    val b = Array.newBuilder[Long]
-    var n = 0L
-    var sawNull = false
-    it.foreach { r =>
-      n += 1
-      if (n <= cap) {
-        val na = r.isNullAt(0)
-        val nb = r.isNullAt(1)
-        if (na || nb) sawNull = true
-        if (!na || !nb) {
-          b += (if (na) r.get(1) else r.get(0)).asInstanceOf[Number].longValue
-          b += (if (nb) r.get(0) else r.get(1)).asInstanceOf[Number].longValue
-        }
-      }
-    }
-    if (n <= cap) PackedPairs(n, b.result(), sawNull) else PackedPairs(n, null, false)
-  }
-
-  /** The [[resolveClusters]] driver path: the packed partitions (packing
-    * the ones the counting pass withheld now that the total is known to
-    * fit), union-find on the driver, and a result relation parallelized
-    * from driver arrays with `schema`. */
-  private def driverClusters(proj: DataFrame, counted: Array[PackedPairs],
+  /** The [[resolveClusters]] driver path: union-find over the collected
+    * pairs, and the result relation built from its arrays with `schema`. */
+  private def driverClusters(spark: SparkSession, edges: DriverGraph.Edges,
                              schema: StructType): DataFrame = {
-    val sc = proj.sparkSession.sparkContext
-    val withheld = counted.indices.filter(counted(_).packed == null)
-    val parts = counted.filter(_.packed != null) ++ (
-      if (withheld.isEmpty) Array.empty[PackedPairs]
-      else sc.runJob(proj.rdd, packPairs(Long.MaxValue) _, withheld))
-    val (ids, root) = unionFindMin(Array.concat(parts.map(_.packed).toSeq: _*))
+    val (ids, root) = unionFindMin(edges.packed)
     // the star path gives a NULL endpoint one (NULL, NULL) row: NULL
     // never equi-joins, so its label is never set
-    val nullRow = parts.exists(_.sawNull)
-    val isInt = schema("doc_id").dataType == IntegerType
-    val n = ids.length
-    // interleaved (doc_id, cluster_id) per slice
-    val slices = math.min(math.max(n, 1), sc.defaultParallelism)
-    val chunks = (0 until slices).map { s =>
-      val (lo, hi) = ((n.toLong * s / slices).toInt, (n.toLong * (s + 1) / slices).toInt)
-      val c = new Array[Long](2 * (hi - lo))
-      var i = lo
-      while (i < hi) { c(2 * (i - lo)) = ids(i); c(2 * (i - lo) + 1) = ids(root(i)); i += 1 }
-      (c, nullRow && s == 0)
-    }
-    val labeled = sc.parallelize(chunks, slices).flatMap { cw =>
-      val (c, withNull) = cw
-      val it = Iterator.range(0, c.length, 2).map(j =>
-        if (isInt) Row(c(j).toInt, c(j + 1).toInt) else Row(c(j), c(j + 1)))
-      if (withNull) it ++ Iterator.single(Row(null, null)) else it
-    }
-    proj.sparkSession.createDataFrame(labeled, schema)
+    DriverGraph.relation(spark, schema,
+      Seq(ids, Array.tabulate(ids.length)(i => ids(root(i)))), nullRow = edges.sawNull)
   }
 
   /** Connected components of packed `(a, b)` pairs (`packed(2k)`,
@@ -1292,22 +1226,15 @@ object Dedup {
     * halving; `parent(i) <= i` throughout, so one ascending pass finishes
     * every path. */
   private def unionFindMin(packed: Array[Long]): (Array[Long], Array[Int]) = {
-    val sorted = packed.clone()
-    java.util.Arrays.sort(sorted)
-    var n = 0
-    var k = 0
-    while (k < sorted.length) {
-      if (n == 0 || sorted(n - 1) != sorted(k)) { sorted(n) = sorted(k); n += 1 }
-      k += 1
-    }
-    val ids = java.util.Arrays.copyOf(sorted, n)
+    val ids = DriverGraph.sortedDistinct(packed)
+    val n = ids.length
     val parent = Array.range(0, n)
     def find(x: Int): Int = {
       var i = x
       while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
       i
     }
-    k = 0
+    var k = 0
     while (k < packed.length) {
       val ra = find(java.util.Arrays.binarySearch(ids, packed(k)))
       val rb = find(java.util.Arrays.binarySearch(ids, packed(k + 1)))

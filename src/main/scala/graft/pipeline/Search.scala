@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Keyword retrieval over a document corpus: inverted-index statistics +
   * BM25-style ranking, exact BIGINT arithmetic end to end.
@@ -173,6 +174,23 @@ object Search {
   // Persistent inverted index (build once, query many)
   // ================================================================
 
+  /** The persisted index relations' schemas, as [[buildIndex]] writes them
+    * (parquet reads every column back nullable). Reading with a known
+    * schema skips the one-task footer-inference job `spark.read.parquet`
+    * runs per relation and call. */
+  private val IndexSchemas: Map[String, StructType] = Map(
+    "postings" -> StructType(Seq(StructField("doc_id", LongType),
+      StructField("term", StringType), StructField("tf", LongType),
+      StructField("dl", LongType))),
+    "termdf" -> StructType(Seq(StructField("term", StringType),
+      StructField("df", LongType))),
+    "stats" -> StructType(Seq(StructField("n", LongType),
+      StructField("sum_dl", LongType))))
+
+  /** Index relation `rel` of the generation directory `gen`. */
+  private def readIndex(spark: SparkSession, gen: String, rel: String): DataFrame =
+    spark.read.schema(IndexSchemas(rel)).parquet(s"$gen/$rel")
+
   /** Materialize the inverted index under `dir` for repeated retrieval:
     * `postings/` (term, doc_id, tf, dl — the document length is
     * DENORMALIZED into every posting, Lucene-norms style, so a query
@@ -288,7 +306,7 @@ object Search {
       .sortWithinPartitions("term", "doc_id")
       .write.mode("append").parquet(s"$genPath/postings")
     val bdf = bp.groupBy("term").agg(count(lit(1)).as("df_new"))
-    spark.read.parquet(s"$cur/termdf")
+    readIndex(spark, cur, "termdf")
       .withColumnRenamed("df", "df_old")
       .join(bdf, Seq("term"), "full_outer")
       .select(col("term"),
@@ -302,7 +320,7 @@ object Search {
     // token-free, matching what a from-scratch build would write
     val bStats = batch.agg(count(lit(1)).as("bn"))
       .crossJoin(bp.agg(sum("tf").cast("long").as("bsum")))
-    spark.read.parquet(s"$cur/stats")
+    readIndex(spark, cur, "stats")
       .crossJoin(bStats)
       .select((col("n") + col("bn")).as("n"),
         when(col("sum_dl").isNull && col("bsum").isNull, lit(null))
@@ -345,15 +363,15 @@ object Search {
     require(new java.io.File(s"$cur/postings").isDirectory,
       s"compactIndex: no index generation under $dir")
     val (gen, genPath) = IndexGen.newGen(dir)
-    spark.read.parquet(s"$cur/postings")
+    readIndex(spark, cur, "postings")
       .repartitionByRange(nFiles, col("term"), col("doc_id"))
       .sortWithinPartitions("term", "doc_id")
       .write.mode("overwrite").parquet(s"$genPath/postings")
-    spark.read.parquet(s"$cur/termdf")
+    readIndex(spark, cur, "termdf")
       .repartitionByRange(math.max(1, nFiles / 4), col("term"))
       .sortWithinPartitions("term")
       .write.mode("overwrite").parquet(s"$genPath/termdf")
-    spark.read.parquet(s"$cur/stats")
+    readIndex(spark, cur, "stats")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$genPath/stats")
     IndexGen.flip(dir, gen)
@@ -374,11 +392,11 @@ object Search {
     val q = queries.flatMap { case (qid, terms) => terms.map(t => (qid, t)) }
       .toDF("query_id", "term")
     val terms = queries.flatMap(_._2).distinct
-    val qp = spark.read.parquet(s"$cur/postings")
+    val qp = readIndex(spark, cur, "postings")
       .where(col("term").isin(terms: _*))
-    val dft = spark.read.parquet(s"$cur/termdf")
+    val dft = readIndex(spark, cur, "termdf")
       .where(col("term").isin(terms: _*))
-    val stats = spark.read.parquet(s"$cur/stats")
+    val stats = readIndex(spark, cur, "stats")
     rankTopK(q, qp, dft, stats, k, k1Micros, bMicros, excludeSelf = false)
   }
 
@@ -408,7 +426,7 @@ object Search {
       maxQueryTerms: Int = 1 << 16): DataFrame = {
     require(nTerms > 0 && k > 0)
     val cur = IndexGen.resolve(dir) // ONE generation serves this query
-    val postings = spark.read.parquet(s"$cur/postings")
+    val postings = readIndex(spark, cur, "postings")
     val qw = Window.partitionBy("query_id")
       .orderBy(col("tf").desc, col("term"))
     val queryTerms = postings.where(isQueryDoc)
@@ -424,9 +442,9 @@ object Search {
         "query workload is not workload-sized; raise maxQueryTerms " +
         "deliberately or shrink the query set")
     val qp = postings.where(col("term").isin(terms: _*))
-    val dft = spark.read.parquet(s"$cur/termdf")
+    val dft = readIndex(spark, cur, "termdf")
       .where(col("term").isin(terms: _*))
-    val stats = spark.read.parquet(s"$cur/stats")
+    val stats = readIndex(spark, cur, "stats")
     val ranked = rankTopK(queryTerms, qp, dft, stats, k, k1Micros, bMicros,
       excludeSelf = true)
     val out = ranked.localCheckpoint(true)

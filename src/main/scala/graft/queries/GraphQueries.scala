@@ -57,7 +57,7 @@ object GraphQueries {
     * coalescing and defaultParallelism tracks the cluster, so the
     * expansion width scales with executors; the moved bytes are the
     * order-compact relation, not the exploded pairs. */
-  private def coPurchaseEdges(li: DataFrame): DataFrame =
+  private[graft] def coPurchaseEdges(li: DataFrame): DataFrame =
     li.groupBy("l_orderkey")
       .agg(array_sort(collect_set(col("l_partkey"))).as("ps"))
       .repartition(li.sparkSession.sparkContext.defaultParallelism)

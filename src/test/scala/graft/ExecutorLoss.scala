@@ -15,13 +15,19 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
   * one JVM; ClusterSmoke pins row equality across healthy worker JVMs.
   * Neither ever loses a whole executor — the fault class that drops every
   * cached/shuffle block the process held at once and forces stage
-  * recomputation over the survivors. The four scenarios cover the repo's
+  * recomputation over the survivors. The six batch scenarios cover the repo's
   * recovery-relevant storage modes:
   *
   *   - `placement_verify` — stateless shuffle DAG (pure recompute).
-  *   - `q_part_triangles` — broadcast bloom + heavy shuffle, final-output
-  *     localCheckpoint only.
-  *   - `q_part_pagerank` — iterative with `persist()`ed edge/node caches
+  *   - `q_part_triangles` / `q_part_pagerank` — the registry queries; at
+  *     sf0.01 their co-purchase graph is under `DriverGraph.MaxEdges`, so
+  *     both collect the edges to the driver and return a relation built
+  *     from driver arrays (recomputed from the driver on loss).
+  *   - `triangles_spark_plan` — the same edges through Triangles' Spark
+  *     plan (`driverMaxEdges = 0`): broadcast bloom + heavy shuffle,
+  *     final-output localCheckpoint only.
+  *   - `pagerank_spark_plan` — the same edges through PageRank's Spark
+  *     plan: iterative with `persist()`ed edge/node caches
   *     (recompute-able lineage; lost blocks must rebuild mid-iteration).
   *   - connected components (`Dedup.resolveClusters`) in RELIABLE
   *     checkpoint mode — `checkpointDir` exists precisely to survive
@@ -139,7 +145,9 @@ object ExecutorLoss {
 
     var failed = 0
     var notMidFlight = 0
+    var scenarios = 1 // the streaming one below
     def scenario(name: String)(mk: () => DataFrame): Unit = {
+      scenarios += 1
       val (clean, faulted, mid) = withLoss(name)(mk)
       val ok = clean == faulted
       if (!ok) failed += 1
@@ -154,6 +162,15 @@ object ExecutorLoss {
       SparkEntry.queries("q_part_triangles")(spark, sfDir))
     scenario("q_part_pagerank")(() =>
       SparkEntry.queries("q_part_pagerank")(spark, sfDir))
+    // the same co-purchase edges through the Spark plans, so the bloom
+    // broadcast and the persisted iteration caches stay under the fault
+    def coPurchase() = queries.GraphQueries.coPurchaseEdges(
+      Tables.lineitem(spark, sfDir).select("l_orderkey", "l_partkey"))
+    scenario("triangles_spark_plan")(() =>
+      operators.Triangles.perNode(coPurchase(), "u", "v", driverMaxEdges = 0))
+    scenario("pagerank_spark_plan")(() =>
+      operators.PageRank.ranksUndirected(coPurchase().distinct(), "u", "v",
+        iters = 3, driverMaxEdges = 0))
     // CC in reliable-checkpoint mode over the registered near-dup pair
     // relation: the one storage mode whose whole purpose is this fault.
     // driverMaxEdges = 0 keeps it on the checkpointed star path (the small
@@ -229,7 +246,7 @@ object ExecutorLoss {
     // a kill that never lands mid-flight is a no-op scenario, not a pass
     val ok = failed == 0 && notMidFlight == 0
     println(s"[executor-loss] ${if (ok) "PASS" else "FAIL"} " +
-      s"scenarios=5 failed=$failed notMidFlight=$notMidFlight sf=$sfDir")
+      s"scenarios=$scenarios failed=$failed notMidFlight=$notMidFlight sf=$sfDir")
     spark.stop()
     if (!ok) sys.exit(1)
   }

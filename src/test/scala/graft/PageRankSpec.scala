@@ -2,12 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.PageRank
+import graft.operators.{DriverGraph, PageRank}
 
 /** Gates for the exact-integer PageRank: value agreement with an
   * independent driver-side model (BigInt arithmetic, own adjacency
   * representation), structural properties, determinism under
-  * repartitioning, and the per-iteration plan shape.
+  * repartitioning, and the per-iteration plan shape. The model tests run
+  * the driver path and the Spark plan alike.
   */
 class PageRankSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -31,9 +32,16 @@ class PageRankSpec extends AnyFunSuite {
     r
   }
 
-  private def run(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] =
-    PageRank.ranks(edges.toDF("src", "dst"), "src", "dst", iters)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  /** Ranks on the driver path, after checking the Spark plan agrees. */
+  private def run(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
+    def ranks(bound: Long) =
+      PageRank.ranks(edges.toDF("src", "dst"), "src", "dst", iters,
+          driverMaxEdges = bound)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val driver = ranks(DriverGraph.MaxEdges)
+    assert(driver == ranks(0), "driver path != Spark plan")
+    driver
+  }
 
   test("ranks match the independent model on a mixed graph") {
     // hub (1 <- 2,3,4), chain 4->5->6, dangling sink 6, source-only 7->1
@@ -58,10 +66,10 @@ class PageRankSpec extends AnyFunSuite {
     val edges = Seq((2L, 1L), (3L, 1L), (4L, 1L), (4L, 5L), (5L, 6L),
       (7L, 1L), (1L, 2L), (2L, 3L))
     val df = edges.toDF("src", "dst")
-    val bc = PageRank.ranks(df, "src", "dst", iters = 3)
+    val bc = PageRank.ranks(df, "src", "dst", iters = 3, driverMaxEdges = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val sh = PageRank.ranks(df, "src", "dst", iters = 3,
-        broadcastMaxNodes = 0L)
+        broadcastMaxNodes = 0L, driverMaxEdges = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(bc == sh)
     assert(bc == model(edges, 3))
@@ -95,7 +103,7 @@ class PageRankSpec extends AnyFunSuite {
       spark.listenerManager.register(listener)
       try {
         val r = PageRank.ranks(edges.toDF("src", "dst"), "src", "dst", iters,
-            broadcastMaxNodes = ceiling)
+            broadcastMaxNodes = ceiling, driverMaxEdges = 0)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         // listener delivery is async; the final ranks checkpoint reads the
         // edge cache, so its plan names the cache's repartition if any
@@ -113,7 +121,7 @@ class PageRankSpec extends AnyFunSuite {
     assert(r3 == model(edges, 3))
     assert(r10 == model(edges, 10))
     val forced = PageRank.ranks(edges.toDF("src", "dst"), "src", "dst", 10,
-        broadcastMaxNodes = 0L)
+        broadcastMaxNodes = 0L, driverMaxEdges = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(r10 == forced)
   }

@@ -130,7 +130,7 @@ class ResolveClustersSpec extends AnyFunSuite {
       (for (a <- 5000L until 5030L; b <- a + 1 until 5030L) yield (a, b))
     val pairs = edges.toDF("doc_a", "doc_b")
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-star")
-    val (star, logged) = dedupInfo(rows(Dedup.resolveClusters(pairs,
+    val (star, logged) = LogCapture.info(Dedup.getClass)(rows(Dedup.resolveClusters(pairs,
       checkpointDir = Some(dir.toString), driverMaxEdges = 0)))
     assert(star == modelRows(edges))
     assert(star == rows(Dedup.resolveClusters(pairs)), "driver path")
@@ -142,28 +142,5 @@ class ResolveClustersSpec extends AnyFunSuite {
     val rdds = java.nio.file.Files.walk(dir).iterator().asScala
       .filter(_.getFileName.toString.startsWith("rdd-")).toList
     assert(rdds.size == 1, s"expected only the result's checkpoint: $rdds")
-  }
-
-  /** `f`'s value and the INFO messages `Dedup` logged while it ran. */
-  private def dedupInfo[T](f: => T): (T, Seq[String]) = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    import scala.jdk.CollectionConverters._
-    val logger = LogManager.getLogger(Dedup.getClass.getName).asInstanceOf[Logger]
-    val msgs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val app = new AbstractAppender("resolve-clusters-spec", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        msgs.add(e.getMessage.getFormattedMessage)
-    }
-    app.start()
-    // addAppender refreshes the logger's config, so the level goes after it
-    logger.addAppender(app)
-    val level = logger.getLevel
-    logger.setLevel(Level.INFO)
-    try { val v = f; (v, msgs.asScala.toSeq) }
-    finally { logger.removeAppender(app); logger.setLevel(level); app.stop() }
   }
 }

@@ -2,18 +2,25 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Triangles
+import graft.operators.{DriverGraph, Triangles}
 
-/** Triangle-counting semantics + agreement with the naive triple join. */
+/** Triangle-counting semantics + agreement with the naive triple join, on
+  * the driver path and the Spark plan alike. */
 class TrianglesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def run(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    Triangles.perNode(edges.toDF("u", "v"), "u", "v")
-      .collect()
-      .map(r => r.getAs[Long]("node") -> r.getAs[Long]("n_triangles"))
-      .toMap
+  /** Counts on the driver path, after checking the Spark plan agrees. */
+  private def run(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    def counts(bound: Long) =
+      Triangles.perNode(edges.toDF("u", "v"), "u", "v", driverMaxEdges = bound)
+        .collect()
+        .map(r => r.getAs[Long]("node") -> r.getAs[Long]("n_triangles"))
+        .toMap
+    val driver = counts(DriverGraph.MaxEdges)
+    assert(driver == counts(0), "driver path != Spark plan")
+    driver
+  }
 
   test("two triangles sharing an edge") {
     val got = run(Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (2L, 4L)))
@@ -46,9 +53,10 @@ class TrianglesSpec extends AnyFunSuite {
     } ++ (for (a <- 100L to 104L; b <- 100L to 104L) yield (a, b)))
       .filter { case (a, b) => a != b }
     val df = edges.toDF("u", "v")
-    val pruned = Triangles.perNode(df, "u", "v")
+    val pruned = Triangles.perNode(df, "u", "v", driverMaxEdges = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val plain = Triangles.perNode(df, "u", "v", bloomBits = 0)
+    val plain = Triangles.perNode(df, "u", "v", bloomBits = 0,
+        driverMaxEdges = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pruned == plain && pruned.nonEmpty)
   }
@@ -60,9 +68,11 @@ class TrianglesSpec extends AnyFunSuite {
     } ++ (for (a <- 200L to 205L; b <- 200L to 205L) yield (a, b)))
       .filter { case (a, b) => a != b }
     val df = edges.toDF("u", "v")
-    val wide = Triangles.perNode(df, "u", "v", wedgeParts = 8)
+    val wide = Triangles.perNode(df, "u", "v", wedgeParts = 8,
+        driverMaxEdges = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val default = Triangles.perNode(df, "u", "v", wedgeParts = 0)
+    val default = Triangles.perNode(df, "u", "v", wedgeParts = 0,
+        driverMaxEdges = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(wide == default && wide.nonEmpty)
   }
