@@ -27,7 +27,9 @@ object DriverGraph {
   /** Edge-count ceiling for the driver path, sized for driver memory and
     * not for any input: 2^20 edges are 16 MB packed, and every kernel's
     * working set (the packed edges, sorted distinct ids, int-indexed edge
-    * and node arrays) stays under ~80 MB. */
+    * and node arrays) stays under ~80 MB. `PageRank.ranksUndirected`'s
+    * bound counts pairs, so its kernel holds up to 2^21 directed edges
+    * (32 MB packed). */
   val MaxEdges: Long = 1L << 20
 
   /** Collected edges: endpoint pairs packed as longs (`packed(2k)`,

@@ -18,8 +18,8 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   * micros (a node would need ~10^13 full-rank in-neighbors to overflow).
   *
   * Three paths, one INFO line per call naming it and the input edge count
-  * (`PageRank path=driver|broadcast|shuffled edges=N`); all return the same
-  * rows and schema:
+  * (`PageRank path=driver|broadcast|shuffled edges=N`, or `pairs=N` for
+  * [[ranksUndirected]]); all return the same rows and schema:
   *
   *  - driver, at or under `driverMaxEdges` edge rows (default
   *    [[DriverGraph.MaxEdges]]) with integral, non-NULL ids: the edges are
@@ -90,30 +90,55 @@ object PageRank {
   def ranks(edges: DataFrame, srcCol: String, dstCol: String,
             iters: Int = BroadcastIters, dampMicros: Long = 850000L,
             broadcastMaxNodes: Long = BroadcastMaxNodes,
-            driverMaxEdges: Long = DriverGraph.MaxEdges): DataFrame = {
+            driverMaxEdges: Long = DriverGraph.MaxEdges): DataFrame =
+    rankEdges(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")),
+      undirected = false, iters, dampMicros, broadcastMaxNodes, driverMaxEdges)
+
+  /** [[ranks]] over the `(src, dst)` relation `e`, or over `e` and its
+    * reverse when `undirected`: the driver path collects `e` once and adds
+    * both directions of each pair itself, the Spark plans symmetrize over
+    * the collect job's executed RDD. The driver bound and the INFO line
+    * count the rows of `e` (`edges=N`, or `pairs=N` when undirected). */
+  private def rankEdges(e: DataFrame, undirected: Boolean, iters: Int,
+      dampMicros: Long, broadcastMaxNodes: Long,
+      driverMaxEdges: Long): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     require(dampMicros >= 0 && dampMicros <= 1000000L,
       "dampMicros must be in [0, 1e6]")
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    def directed(d: DataFrame): DataFrame =
+      if (undirected) d.union(d.select(col("dst").as("src"), col("src").as("dst")))
+      else d
+    val what = if (undirected) "pairs" else "edges"
     // the result's schema on every path: the final ranking over the node
     // set and a contribution relation, as the Spark plans build it
-    val schema = ranked(nodesOf(e),
-      contributions(e.withColumn("outdeg", lit(1L)), "1000000 div outdeg"),
+    val schema = ranked(nodesOf(directed(e)),
+      contributions(directed(e).withColumn("outdeg", lit(1L)), "1000000 div outdeg"),
       rankExpr(dampMicros)).schema
     val (n, collected) =
       DriverGraph.collect(e, schema("node").dataType, driverMaxEdges)
     collected.filter(!_.sawNull) match {
       case Some(c) =>
-        val (nodes, rs) = driverRanks(c.packed, iters, dampMicros)
-        log.info("PageRank path=driver edges={}", n)
-        DriverGraph.relation(edges.sparkSession, schema, Seq(nodes, rs))
+        val packed = if (undirected) withReversed(c.packed) else c.packed
+        val (nodes, rs) = driverRanks(packed, iters, dampMicros)
+        log.info(s"PageRank path=driver $what={}", n)
+        DriverGraph.relation(e.sparkSession, schema, Seq(nodes, rs))
       case None =>
         // over the collect job's executed RDD: the plans reuse the input's
         // computed shuffle outputs instead of evaluating its lineage again
-        sparkRanks(PlanBridge.overExecuted(e), iters, dampMicros,
-          broadcastMaxNodes, n)
+        sparkRanks(directed(PlanBridge.overExecuted(e)), iters, dampMicros,
+          broadcastMaxNodes, s"$what=$n")
     }
+  }
+
+  /** Packed pairs followed by each pair reversed: a pair listed twice
+    * yields two edges each way, a self-loop `(a, a)` two `a -> a` edges. */
+  private def withReversed(packed: Array[Long]): Array[Long] = {
+    val m = packed.length
+    val out = java.util.Arrays.copyOf(packed, 2 * m)
+    var k = 0
+    while (k < m) { out(m + k) = packed(k + 1); out(m + k + 1) = packed(k); k += 2 }
+    out
   }
 
   /** The distinct endpoints of `(src, dst)` as one `node` column. */
@@ -179,10 +204,10 @@ object PageRank {
     (ids, s.map(rank))
   }
 
-  /** The broadcast and shuffled plans over the `(src, dst)` relation `e0`
-    * of `nEdges` rows. */
+  /** The broadcast and shuffled plans over the `(src, dst)` relation `e0`;
+    * `size` is the INFO line's input count, `edges=N` or `pairs=N`. */
   private def sparkRanks(e0: DataFrame, iters: Int, dampMicros: Long,
-                         broadcastMaxNodes: Long, nEdges: Long): DataFrame = {
+                         broadcastMaxNodes: Long, size: String): DataFrame = {
     // The incoming edge relation may be arbitrarily expensive (a distinct
     // over a self-join, an LSH candidate build); it feeds THREE consumers
     // here (degrees, the join relation, the node set), so persist it or
@@ -194,8 +219,8 @@ object PageRank {
     // one scheduling round, not an extra pipeline run
     val nNodes = nodes.count()
     val useBc = broadcastPlan(nNodes, iters, broadcastMaxNodes)
-    org.slf4j.LoggerFactory.getLogger(getClass).info("PageRank path={} edges={}",
-      if (useBc) "broadcast" else "shuffled", nEdges)
+    org.slf4j.LoggerFactory.getLogger(getClass).info("PageRank path={} {}",
+      if (useBc) "broadcast" else "shuffled", size)
     val deg0 = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val deg = if (useBc) broadcast(deg0) else deg0
     // (src, dst, outdeg): the relation every iteration joins against.
@@ -239,7 +264,10 @@ object PageRank {
     out
   }
 
-  /** Undirected convenience: symmetrize `u—v` pairs then rank.
+  /** Undirected convenience: rank the graph holding both directions of
+    * each `u—v` pair. The pairs are collected once and the driver path adds
+    * the reverse edges itself, so `driverMaxEdges` counts pairs: a graph of
+    * up to 2^20 pairs (2^21 directed edges) takes the driver path.
     *
     * PRECONDITION: `pairs` must hold DISTINCT UNORDERED pairs — one row per
     * undirected edge (e.g. normalized `least/greatest` + distinct, as the
@@ -251,10 +279,7 @@ object PageRank {
     * caller with clean input would waste — so the contract lives here. */
   def ranksUndirected(pairs: DataFrame, aCol: String, bCol: String,
                       iters: Int = 3, dampMicros: Long = 850000L,
-                      driverMaxEdges: Long = DriverGraph.MaxEdges): DataFrame = {
-    val fwd = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-    val rev = pairs.select(col(bCol).as("src"), col(aCol).as("dst"))
-    ranks(fwd.union(rev), "src", "dst", iters, dampMicros,
-      driverMaxEdges = driverMaxEdges)
-  }
+                      driverMaxEdges: Long = DriverGraph.MaxEdges): DataFrame =
+    rankEdges(pairs.select(col(aCol).as("src"), col(bCol).as("dst")),
+      undirected = true, iters, dampMicros, BroadcastMaxNodes, driverMaxEdges)
 }

@@ -50,6 +50,8 @@ object Triangles {
     * the per-reduce-partition wedge budget the auto width targets. */
   val WedgeRowBytes = 32L
   val WedgeTargetPartitionBytes = 64L << 20
+  /** Hash functions per edge in the wedge-pruning bloom sketch. */
+  private val BloomHashes = 5
 
   /** @param edges undirected edge list; self-loops dropped, duplicates and
     *               orientation normalized away
@@ -71,30 +73,6 @@ object Triangles {
     *               re-checked by the exact join; false negatives are
     *               impossible, so results are bit-identical (TrianglesSpec
     *               asserts both paths agree).
-    * @param edgeCountHint known (or well-estimated) DISTINCT undirected
-    *               edge count, used only to auto-size the bloom sketch
-    *               and gate the wedge-exchange sizing below.
-    *               Pass it when the caller already knows the graph size
-    *               (an ingest count, table statistics) to skip the sizing
-    *               count job entirely. NOTE: since the r14 auto
-    *               wedge-widening, the size gates the closing-exchange
-    *               plan too, so an explicit `bloomBits` alone no longer
-    *               avoids the count — pass `edgeCountHint` (or an explicit
-    *               `wedgeParts`) as well to skip every sizing job.
-    *               <= 0 means unknown, and the count
-    *               is taken from the PERSISTED oriented relation
-    *               (|oriented| == |e| by construction) — the count action
-    *               materializes the cache every downstream consumer then
-    *               reuses, so it costs one pipeline run, not two. (The r8
-    *               spelling instead persisted the normalized edge
-    *               relation `e` and counted that; a same-JVM interleaved
-    *               A/B (r9, recorded in PLANS.md "Round-9 q_part_triangles
-    *               attribution") attributed a ~20% wall regression to
-    *               exactly that cache: building the columnar InMemoryRelation
-    *               for the full edge set costs more than the ReusedExchange
-    *               sharing it replaced. `e` stays UNpersisted; its distinct
-    *               exchange is shared across the degree/orientation
-    *               subtrees by plan-level exchange reuse.)
     * @param wedgeParts closing-exchange width for the wedge relation.
     *               -1 (default): auto — on a big graph (>= ~8M oriented
     *               edges) size the exchange from the exact wedge upper
@@ -115,13 +93,12 @@ object Triangles {
     *               explicit width (test hook — pins plan equivalence).
     * @param driverMaxEdges input-row ceiling for the driver path; 0 forces
     *               the Spark plan (test hook — the equivalence specs pin
-    *               both paths). `bloomBits`, `edgeCountHint` and
-    *               `wedgeParts` apply to the Spark plan only.
+    *               both paths). `bloomBits` and `wedgeParts` apply to
+    *               the Spark plan only.
     * @return (node, n_triangles), one row per node in >= 1 triangle
     */
   def perNode(edges: DataFrame, uCol: String, vCol: String,
-      bloomBits: Int = -1, bloomHashes: Int = 5,
-      edgeCountHint: Long = -1L, wedgeParts: Int = -1,
+      bloomBits: Int = -1, wedgeParts: Int = -1,
       driverMaxEdges: Long = DriverGraph.MaxEdges): DataFrame = {
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
     val pairs = edges.select(col(uCol).as("u"), col(vCol).as("v"))
@@ -145,7 +122,7 @@ object Triangles {
       // computed shuffle outputs instead of evaluating its lineage again
       // (persisting the edge projection instead measured slower than both)
       sparkPerNode(normalized(PlanBridge.overExecuted(pairs)),
-        bloomBits, bloomHashes, edgeCountHint, wedgeParts)
+        bloomBits, wedgeParts)
     }
   }
 
@@ -228,8 +205,8 @@ object Triangles {
   }
 
   /** The distributed plan over the normalized edge relation `e`. */
-  private def sparkPerNode(e: DataFrame, bloomBits: Int, bloomHashes: Int,
-      edgeCountHint: Long, wedgeParts: Int): DataFrame = {
+  private def sparkPerNode(e: DataFrame, bloomBits: Int,
+      wedgeParts: Int): DataFrame = {
     val deg = e.select(col("u").as("node"))
       .unionAll(e.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -280,10 +257,11 @@ object Triangles {
     // measured as a 1000x regression before this transport).
     val maxBits = 1L << 30
     // shared by the bloom auto-sizer and the wedge-exchange gate; the
-    // count action materializes the persisted oriented relation, which
-    // every consumer below reuses
-    lazy val edgesN: Long =
-      if (edgeCountHint > 0) edgeCountHint else oriented.count()
+    // count action materializes the persisted oriented relation
+    // (|oriented| == |e|), which every consumer below reuses. `e` itself
+    // stays unpersisted: caching the full edge set measured ~20% slower
+    // than the exchange reuse it replaces (PLANS.md, round 9)
+    lazy val edgesN: Long = oriented.count()
     val (bits: Long, pruneOn: Boolean) =
       if (bloomBits > 0) (bloomBits.toLong, true)
       else if (bloomBits == 0) (0L, false)
@@ -304,7 +282,7 @@ object Triangles {
       if (pruneOn && spark.catalog.functionExists("graft_bloom_agg")) {
         val blob = oriented
           .agg(call_function("graft_bloom_agg",
-            xxhash64(col("src"), col("dst")), lit(bits.toInt), lit(bloomHashes)))
+            xxhash64(col("src"), col("dst")), lit(bits.toInt), lit(BloomHashes)))
           .head().getAs[Array[Byte]](0)
         val bc = spark.sparkContext.broadcast(blob)
         import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -324,9 +302,8 @@ object Triangles {
         // exact pre-prune wedge count: sum over sources of outdeg-choose-2
         // (one aggregate over the cached oriented relation — seconds at
         // 100x against a ~190 s operator wall, and only on big graphs)
-        // coalesce: sum over ZERO groups is NULL — a stale edgeCountHint
-        // >= the gate on an actually-empty graph must degrade to the
-        // default width, not NPE
+        // coalesce: sum over ZERO groups is NULL; no empty relation passes
+        // the gate above, but the aggregate stays total
         val ub = oriented.groupBy("src").agg(count(lit(1)).as("k"))
           .agg(coalesce(sum(expr("(k * (k - 1)) div 2")), lit(0L))
             .cast("long").as("w"))

@@ -446,11 +446,10 @@ object Dedup {
   /** The MinHash-LSH band keyer: maps one shingle-hash array to its
     * `bands` fused bucket keys `"<band>:<k1>_<k2>_…"`, band `b` joining
     * the `r = numPerms / bands` [[minhashMins]] from slot `b * r`. The
-    * only spelling of a MinHash bucket key: [[minhashLshPairs]], the
-    * [[NearDupIndex]] build, refresh and probe, and
-    * [[graft.streaming.StreamingNearDup.verdicts]] all key through it. It
-    * closes over the permutation constants only, so it ships to executors
-    * and runs inside their row loops. */
+    * only spelling of a MinHash bucket key: [[minhashLshPairs]] and the
+    * [[NearDupIndex]] build, refresh and probe (batch or streaming) all
+    * key through it. It closes over the permutation constants only, so it
+    * ships to executors and runs inside their row loops. */
   private[graft] def minhashBandKeys(numPerms: Int, bands: Int)
       : Array[Long] => Array[String] = {
     val as = Array.tabulate(numPerms)(permA)
@@ -671,7 +670,7 @@ object Dedup {
     * `buckets` = capped `(bkey, ids)` postings and `dropped` = the `bkey`
     * tombstones of capped-out buckets ([[postings]]), keyed by the one
     * fused spelling `"<band>:<k1>_<k2>_…"` of [[minhashBandKeys]], so a
-    * probe — batch or stream-static — is a single-column equi-join;
+    * probe is a single-column equi-join;
     * `shingles` = `(doc_id, hs)` for exact-Jaccard verification. The
     * relations are persisted at build time (they are reused per admission
     * batch / micro-batch); call [[release]] when done. At fleet scale this
@@ -766,12 +765,12 @@ object Dedup {
       dropped)
   }
 
-  /** Batch near-dup admission against a standing [[NearDupIndex]] — the
-    * batch twin of [[graft.streaming.StreamingNearDup.verdicts]], emitting
-    * [[incrementalNearDup]]-shaped verdicts. Candidates come from the
-    * index's pre-capped postings (one equi-join on `bkey`), verification
-    * from its shingle relation; admission cost tracks the batch, never the
-    * corpus. */
+  /** Near-dup admission against a standing [[NearDupIndex]], emitting
+    * [[incrementalNearDup]]-shaped verdicts; streaming admission
+    * ([[graft.streaming.StreamingNearDup]]) runs it on every micro-batch.
+    * Candidates come from the index's pre-capped postings (one equi-join
+    * on `bkey`), verification from its shingle relation; admission cost
+    * tracks the batch, never the corpus. */
   def indexNearDup(batch: DataFrame, index: NearDupIndex): DataFrame = {
     val bh = hashedShingleDf(batch).persist()
     val out = probeNearDup(batch, bh,
@@ -948,14 +947,13 @@ object Dedup {
 
   /** Prebuilt banded hamming ledger index for repeated signature
     * admission — the [[NearDupIndex]] analogue for bit signatures
-    * ([[incrementalHammingDedup]]'s standing side, and the static
-    * relation `streaming.StreamingMediaDedup` joins every
-    * micro-batch). `buckets` holds capped `(bkey, ids: [(doc_id, sig)])`
-    * postings and `dropped` the `bkey` tombstones ([[postings]]), with the
-    * partition columns and band index FUSED into one string key
-    * (`kind:band:key`), so the stream-static join is a single-column
-    * equi-join. `partitionCols` records the columns fused into the key at
-    * build time, and [[fusedBandKeys]] (exposed as
+    * ([[incrementalHammingDedup]]'s standing side, and the index
+    * `streaming.StreamingMediaDedup` serves). `buckets` holds capped
+    * `(bkey, ids: [(doc_id, sig)])` postings and `dropped` the `bkey`
+    * tombstones ([[postings]]), with the partition columns and band index
+    * FUSED into one string key (`kind:band:key`), so a probe is a
+    * single-column equi-join. `partitionCols` records the columns fused
+    * into the key at build time, and [[fusedBandKeys]] (exposed as
     * [[HammingIndex.probeKeys]]) is the one place that fuses it: a probe
     * keyed on different columns would silently match zero postings and
     * admit everything. Persisted at build (reused per admission batch);
@@ -1056,10 +1054,11 @@ object Dedup {
       meta.getAs[Int]("max_bucket"), dropped)
   }
 
-  /** Batch hamming admission against a standing [[HammingIndex]] — the
-    * batch twin of [[graft.streaming.StreamingMediaDedup.verdicts]]'s
-    * dedup arm, emitting [[incrementalHammingDedup]]-shaped verdicts.
-    * `batch` is `(partitionCols..., doc_id, sig)`; probe keys are fused
+  /** Hamming admission against a standing [[HammingIndex]], emitting
+    * [[incrementalHammingDedup]]-shaped verdicts; streaming media
+    * admission ([[graft.streaming.StreamingMediaDedup.admit]]) runs it on
+    * the decodable rows of every micro-batch. `batch` is
+    * `(partitionCols..., doc_id, sig)`; probe keys are fused
     * from the index's recorded partition columns, so a mismatched probe
     * shape fails at analysis instead of silently admitting everything. */
   def indexHammingDedup(batch: DataFrame, index: HammingIndex): DataFrame =

@@ -516,12 +516,11 @@ object Multimodal {
   /** [[decodeVerdict]] fused with the perceptual hash: `Left(reasonClass)`
     * for a payload the real decoders reject, `Right(phash)` otherwise —
     * ONE decode per row (decodeVerdict-then-perceptualHashes would decode
-    * twice). This is the streaming admission primitive
-    * (`streaming.StreamingMediaDedup`): a corrupt payload mid-stream
-    * becomes a per-row quarantine verdict instead of an executor
-    * exception that kills the whole query — the streaming twin of
-    * [[quarantineSplit]], with the identical [[classifyDecodeFailure]]
-    * boundary. */
+    * twice). Streaming media admission (`streaming.StreamingMediaDedup`)
+    * runs it once per row of each micro-batch: a corrupt payload
+    * mid-stream becomes a per-row quarantine verdict instead of an
+    * executor exception that kills the whole query, with the
+    * [[quarantineSplit]] boundary ([[classifyDecodeFailure]]). */
   def checkedPHash(kind: String, payload: Array[Byte]): Either[String, Long] =
     try {
       if (payload == null) Left("bad_magic")
@@ -557,10 +556,6 @@ object Multimodal {
     quarantineSplit(spark, media).toDF()
       .where(!col("quarantined"))
       .select("doc_id", "kind", "payload", "source", "lang")
-
-  /** The quarantine side: verdict + offending payload verbatim. */
-  def badMedia(spark: SparkSession, media: DataFrame): DataFrame =
-    quarantineSplit(spark, media).toDF().where(col("quarantined"))
 
   /** Deterministic corruption families over a media table, for the
     * quarantine gate: `doc_id % 4` picks intact (0) / magic overwritten

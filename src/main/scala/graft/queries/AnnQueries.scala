@@ -288,9 +288,9 @@ object AnnQueries {
     * cross-engine). The oracle re-derives ledger-only centroids AND a
     * ledger-only inverted file (`duckIvfSearch(centWhere, invWhere)`),
     * out-of-index queries, rank-1 candidate, threshold and the admitted
-    * left join. The streaming twin
-    * ([[graft.streaming.StreamingVectorDedup]]) is equivalence-gated
-    * against the same batch operator in StreamingSpec. */
+    * left join. Streaming vector admission
+    * ([[graft.streaming.StreamingVectorDedup]]) runs the same operator on
+    * every micro-batch. */
   private def embeddingAdmitIndexed(s: SparkSession, dir: String): DataFrame = {
     val embs = Tables.embeddings(s, dir)
     val idx = pipeline.Ivf.buildIndex(embs.where(col("vec_id") % 10 < 5))

@@ -1,47 +1,27 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.GroupState
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.pipeline.Ivf
-import graft.pipeline.Similarity.{cosDouble, dot}
 
 /** Streaming embedding-dedup admission: each vector of an ingest stream
-  * is checked for high-cosine near-duplicates against a STATIC standing
-  * IVF index ([[Ivf.buildIndex]] / [[Ivf.refreshIndex]]) — the vector-
-  * modality twin of [[StreamingNearDup]], emitting
-  * [[Ivf.indexAdmit]]-shaped `(vec_id, verdict, near_dup_of, cos_micros)`
-  * verdicts.
-  *
-  * The pipeline is stateless per vector, the [[StreamingNearDup]]
-  * discipline: preparation (integer-micros scaling + exact norm) and
-  * probe ranking against the broadcast frozen centroids are one narrow
-  * per-row pass; candidates come from a stream-static left join against
-  * the index's persisted inverted file on centroid_id (only the probed
-  * `nprobe` buckets' vectors are ever touched per input row); and the
-  * best-candidate reduction runs in a `flatMapGroupsWithState` that
-  * never stores state — every candidate row derives from its vector's
-  * single input row, so the group always completes within its
-  * micro-batch. Zero state growth, no watermark, and streaming == batch
-  * verdicts on ANY replay split (StreamingSpec gates equivalence against
-  * [[Ivf.indexAdmit]] on the same fixture). Zero-norm vectors keep an
-  * empty probe array and surface as 'admitted' through the outer joins,
-  * like the batch left join does.
+  * of `(vec_id, embedding)` rows is checked for high-cosine
+  * near-duplicates against a standing IVF index ([[Ivf.buildIndex]] /
+  * [[Ivf.refreshIndex]]), emitting [[Ivf.indexAdmit]]'s
+  * `(vec_id, verdict, near_dup_of, cos_micros)` verdicts. Both tiers run
+  * that batch operator per micro-batch inside `foreachBatch` and hold no
+  * state: [[admission]] against a served index ([[StreamingAdmission]]),
+  * [[Maintained]] against an index the stream itself keeps folding into.
   */
 object StreamingVectorDedup {
-
-  final case class Verdict(vec_id: Long, verdict: String,
-                           near_dup_of: Option[Long], cos_micros: Option[Long])
 
   /** Streaming-DRIVEN standing-index lifecycle — the streaming twin of
     * the batch [[Ivf.maintainIndex]] arc: every micro-batch is (1) judged
     * against the CURRENT index generation ([[Ivf.indexAdmit]] verdicts to
     * `sink`), then (2) FOLDED INTO the index, with the drift trigger
     * retraining + hot-swapping mid-stream when it fires — the index
-    * evolves with the stream instead of serving a frozen snapshot (the
-    * [[verdicts]] path) or waiting for an operator-driven restart (the
-    * [[StreamingNearDup.Refreshable]] path). Because the generation is
+    * evolves with the stream instead of serving an index an operator
+    * swaps in (the [[admission]] path). Because the generation is
     * resolved per micro-batch inside `foreachBatch`, a swap is one
     * reference write at a batch boundary: no query restart, no state
     * migration (the admission pipeline is stateless), and serve
@@ -150,75 +130,12 @@ object StreamingVectorDedup {
     }
   }
 
-  /** Streaming verdicts for a stream of (vec_id, embedding) rows. */
-  def verdicts(spark: SparkSession, stream: DataFrame, index: Ivf.IvfIndex,
-               tauPct: Int = 90, nprobe: Int = 4): Dataset[Verdict] = {
-    import spark.implicits._
-    val bcCents = spark.sparkContext.broadcast(index.cents)
-    // One narrow pass per vector: micros scaling + exact norm (the
-    // Similarity.prepared arithmetic — float->double cast, *1e6, floor —
-    // so values are identical to the batch path's), then probe ranking
-    // against the broadcast centroids exactly as Ivf.indexAdmit ranks.
-    val keyed = stream
-      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      .as[(Long, Option[Seq[Float]])]
-      .mapPartitions { it =>
-        it.map { case (id, embOpt) =>
-          val emb = embOpt.getOrElse(Seq.empty)
-          val xs = new Array[Long](emb.length)
-          var i = 0
-          var n2 = 0L
-          while (i < emb.length) {
-            xs(i) = math.floor(emb(i).toDouble * 1000000).toLong
-            n2 += xs(i) * xs(i)
-            i += 1
-          }
-          val cs = bcCents.value
-          val probes =
-            if (n2 <= 0) Array.empty[Int]
-            else cs.indices
-              .sortBy(ci => (-cosDouble(dot(xs, cs(ci).xs), n2, cs(ci).norm2), ci))
-              .take(nprobe).toArray
-          (id, xs, n2, probes)
-        }
-      }.toDF("vec_id", "xs", "norm2", "probes")
-    val inv = index.inv.select(col("centroid_id"),
-      col("vec_id").as("nb_id"), col("xs").as("nb_xs"),
-      col("norm2").as("nb_norm2"))
-    val scored = keyed
-      .select(col("vec_id"), col("xs"), col("norm2"),
-        explode_outer(col("probes")).as("centroid_id"))
-      .join(inv, Seq("centroid_id"), "left_outer")
-      .select(col("vec_id"), col("xs"), col("norm2"),
-        col("nb_id"), col("nb_xs"), col("nb_norm2"))
-    scored
-      .as[(Long, Array[Long], Long, Option[Long], Option[Array[Long]], Option[Long])]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean, Verdict](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()) {
-        (id: Long,
-         rows: Iterator[(Long, Array[Long], Long, Option[Long], Option[Array[Long]], Option[Long])],
-         _: GroupState[Boolean]) =>
-          // no state is ever stored: the group is complete in-batch.
-          // Best by (double cosine desc, id asc), threshold on floored
-          // micros — the Ivf.indexAdmit rule, value for value.
-          var bestCos = Double.NegativeInfinity
-          var bestId = Long.MaxValue
-          var any = false
-          rows.foreach {
-            case (_, xs, n2, Some(nb), Some(nbXs), Some(nbN2)) =>
-              val c = cosDouble(dot(xs, nbXs), n2, nbN2)
-              if (c > bestCos || (c == bestCos && nb < bestId)) {
-                bestCos = c; bestId = nb
-              }
-              any = true
-            case _ => ()
-          }
-          val cm = math.floor(bestCos * 1000000).toLong
-          if (any && cm >= tauPct * 10000L)
-            Iterator.single(Verdict(id, "near_dup", Some(bestId), Some(cm)))
-          else Iterator.single(Verdict(id, "admitted", None, None))
-      }
-  }
+  /** A runner serving [[Ivf.indexAdmit]] over a stream of
+    * `(vec_id, embedding)` rows ([[StreamingAdmission]]). */
+  def admission(stream: DataFrame, checkpointDir: String,
+                sink: (DataFrame, Long) => Unit,
+                tauPct: Int = 90, nprobe: Int = 4)
+      : StreamingAdmission[Ivf.IvfIndex] =
+    new StreamingAdmission[Ivf.IvfIndex](stream, checkpointDir,
+      Ivf.indexAdmit(_, _, tauPct, nprobe), _.release(), sink)
 }

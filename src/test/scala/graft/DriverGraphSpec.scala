@@ -120,4 +120,41 @@ class DriverGraphSpec extends AnyFunSuite {
     assert(pAboveLog == Seq("PageRank path=broadcast edges=5"))
     assert(pAt == pAbove)
   }
+
+  test("ranksUndirected collects pairs once: the driver path equals the " +
+      "Spark plan and ranks over both directions, bound counted in pairs") {
+    import org.apache.spark.sql.functions.col
+    def undirected(df: DataFrame, what: String): Seq[String] = {
+      val d = PageRank.ranksUndirected(df, "u", "v")
+      same(d, PageRank.ranksUndirected(df, "u", "v", driverMaxEdges = 0),
+        s"undirected plan $what")
+      // a duplicate pair counts twice each way, a self-loop gives two edges
+      val both = df.select(col("u").as("src"), col("v").as("dst"))
+        .union(df.select(col("v").as("src"), col("u").as("dst")))
+      same(d, PageRank.ranks(both, "src", "dst"), s"undirected union $what")
+    }
+    for (seed <- 1 to 3) {
+      val es = randomGraph(seed)
+      val long = undirected(es.toDF("u", "v"), s"long seed=$seed")
+      assert(undirected(es.map { case (a, b) => (a.toInt, b.toInt) }
+        .toDF("u", "v"), s"int seed=$seed") == long)
+      assert(undirected(es.map { case (a, b) => (a.toInt, b) }
+        .toDF("u", "v"), s"mixed seed=$seed") == long)
+    }
+    def pr(df: DataFrame, bound: Long): (Seq[String], Seq[String]) = {
+      val (r, logged) = LogCapture.info(PageRank.getClass) {
+        rows(PageRank.ranksUndirected(df, "u", "v", driverMaxEdges = bound))
+      }
+      (r, logged.filter(_.startsWith("PageRank path=")))
+    }
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (1L, 2L)).toDF("u", "v")
+    val (at, atLog) = pr(pairs, 5)
+    val (above, aboveLog) = pr(pairs, 4)
+    assert(atLog == Seq("PageRank path=driver pairs=5"))
+    assert(aboveLog == Seq("PageRank path=broadcast pairs=5"))
+    assert(at == above)
+    val halfNull = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, null))
+      .toDF("u", "v")
+    assert(pr(halfNull, 5)._2 == Seq("PageRank path=broadcast pairs=2"))
+  }
 }

@@ -133,25 +133,35 @@ class StreamingSpec extends AnyFunSuite {
       (r.getLong(0), r.getString(1), Option(r.get(2)), Option(r.get(3)))
     val expected = Dedup.incrementalNearDup(
         batchRows.toDF("doc_id", "text"), ledger).collect().map(key).toSet
-    val index = Dedup.buildNearDupIndex(ledger)
     val mem = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingNearDup.verdicts(spark,
-        mem.toDF().toDF("doc_id", "text"), index)
-      .writeStream.format("memory").queryName("neardup_stream")
-      .outputMode("append").start()
+    val out = new Collected
+    val rq = new graft.streaming.StreamingNearDup.Refreshable(spark,
+      mem.toDF().toDF("doc_id", "text"), checkpoint("graft_neardup_split"),
+      (ds, batchId) => out.sink(ds.toDF(), batchId))
+    rq.start(Dedup.buildNearDupIndex(ledger))
     try {
       // split across micro-batches: verdicts are per-doc stateless, so any
       // replay split must produce exactly the batch operator's output
-      mem.addData(batchRows.take(2)); q.processAllAvailable()
-      mem.addData(batchRows.drop(2)); q.processAllAvailable()
-      val got = spark.table("neardup_stream").collect().map(key).toSet
+      mem.addData(batchRows.take(2)); rq.processAllAvailable()
+      mem.addData(batchRows.drop(2)); rq.processAllAvailable()
+      val got = out.rows.map(key).toSet
       assert(got == expected)
       assert(got.map(_._1) == Set(101L, 102L, 103L, 104L))
-      // the "stateless per document" claim, measured: the state store
-      // holds ZERO rows after both batches (the group completes in-batch)
-      assert(lastStateRows(q).contains(0L),
-        s"stateless admission must store no state rows: ${lastStateRows(q)}")
-    } finally { q.stop(); index.release() }
+      assertStateless(rq.query)
+    } finally rq.stop()
+  }
+
+  /** A foreachBatch sink keeping each micro-batch's rows by batch id, so
+    * a replayed batch overwrites its first delivery (idempotent). */
+  private final class Collected {
+    val byBatch = new java.util.concurrent.ConcurrentHashMap[Long,
+      Array[org.apache.spark.sql.Row]]()
+    def sink(df: org.apache.spark.sql.DataFrame, batchId: Long): Unit =
+      byBatch.put(batchId, df.collect())
+    def rows: Seq[org.apache.spark.sql.Row] = {
+      import scala.jdk.CollectionConverters._
+      byBatch.values.asScala.flatten.toSeq
+    }
   }
 
   /** Total state-store rows as of the latest progress that reports a
@@ -160,6 +170,19 @@ class StreamingSpec extends AnyFunSuite {
       : Option[Long] =
     q.recentProgress.toSeq.flatMap(_.stateOperators.map(_.numRowsTotal))
       .lastOption
+
+  private def checkpoint(prefix: String): String =
+    Files.createTempDirectory(prefix).toString
+
+  /** The "stateless per row" claim, measured: the query ran batches and
+    * no progress report names a state operator at all. */
+  private def assertStateless(q: org.apache.spark.sql.streaming.StreamingQuery)
+      : Unit = {
+    val progress = q.recentProgress.toSeq
+    assert(progress.nonEmpty && progress.forall(_.stateOperators.isEmpty),
+      s"admission must run no stateful operator: " +
+        progress.flatMap(_.stateOperators.map(_.operatorName)))
+  }
 
   test("streaming vector admission equals the batch IVF indexAdmit on " +
       "split replay") {
@@ -184,23 +207,21 @@ class StreamingSpec extends AnyFunSuite {
     assert(expected.exists(_._2 == "near_dup") &&
       expected.exists(_._2 == "admitted"), s"degenerate fixture: $expected")
     val mem = MemoryStream[(Long, Array[Float])]
-    val q = graft.streaming.StreamingVectorDedup.verdicts(spark,
-        mem.toDF().toDF("vec_id", "embedding"), index,
-        tauPct = 95, nprobe = 2)
-      .writeStream.format("memory").queryName("vecdedup_stream")
-      .outputMode("append").start()
+    val out = new Collected
+    val rq = graft.streaming.StreamingVectorDedup.admission(
+      mem.toDF().toDF("vec_id", "embedding"), checkpoint("graft_vec_split"),
+      out.sink, tauPct = 95, nprobe = 2)
+    rq.start(index)
     try {
       // split across micro-batches: verdicts are per-vector stateless, so
       // any replay split must produce exactly the batch operator's output
-      mem.addData(batchRows.take(2)); q.processAllAvailable()
-      mem.addData(batchRows.drop(2)); q.processAllAvailable()
-      val got = spark.table("vecdedup_stream").collect().map(key).toSet
+      mem.addData(batchRows.take(2)); rq.processAllAvailable()
+      mem.addData(batchRows.drop(2)); rq.processAllAvailable()
+      val got = out.rows.map(key).toSet
       assert(got == expected)
       assert(got.map(_._1) == Set(101L, 102L, 103L, 104L))
-      // stateless: the state store holds zero rows after both batches
-      assert(lastStateRows(q).contains(0L),
-        s"stateless admission must store no state rows: ${lastStateRows(q)}")
-    } finally { q.stop(); index.release() }
+      assertStateless(rq.query)
+    } finally rq.stop()
   }
 
   test("streaming-driven index lifecycle: mid-stream drift retrain " +
@@ -315,23 +336,24 @@ class StreamingSpec extends AnyFunSuite {
     val index = Dedup.buildHammingIndex(sigs(originals),
       partitionCols = Seq("kind"))
     val mem = MemoryStream[Multimodal.MediaRow]
-    val q = graft.streaming.StreamingMediaDedup.verdicts(spark,
-        mem.toDF(), index)
-      .writeStream.format("memory").queryName("media_admission")
-      .outputMode("append").start()
+    val out = new Collected
+    val rq = graft.streaming.StreamingMediaDedup.admission(mem.toDF(),
+      checkpoint("graft_media_split"), out.sink)
+    rq.start(index)
     try {
       val rows = Multimodal.mediaTable(recrawl)
         .as[Multimodal.MediaRow].collect().sortBy(_.doc_id)
-      mem.addData(rows.take(1).toSeq: _*); q.processAllAvailable()
-      mem.addData(rows.drop(1).toSeq: _*); q.processAllAvailable()
-      val got = spark.table("media_admission").collect()
+      mem.addData(rows.take(1).toSeq: _*); rq.processAllAvailable()
+      mem.addData(rows.drop(1).toSeq: _*); rq.processAllAvailable()
+      val got = out.rows
         .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("kind"),
           r.getAs[String]("verdict"),
           Option(r.getAs[Any]("near_dup_of")).map(_.asInstanceOf[Long]),
           Option(r.getAs[Any]("hamming")).map(_.asInstanceOf[Long])))
         .toSet
       assert(got == expected, s"stream=$got batch=$expected")
-    } finally { q.stop(); index.release() }
+      assertStateless(rq.query)
+    } finally rq.stop()
   }
 
   test("streaming media admission quarantines corrupt payloads mid-stream " +
@@ -398,19 +420,19 @@ class StreamingSpec extends AnyFunSuite {
     val index = Dedup.buildHammingIndex(
       sigsOf(Multimodal.mediaTable(originals)), partitionCols = Seq("kind"))
     val mem = MemoryStream[Multimodal.MediaRow]
-    val q = graft.streaming.StreamingMediaDedup.verdicts(spark,
-        mem.toDF(), index)
-      .writeStream.format("memory").queryName("media_quarantine_stream")
-      .outputMode("append").start()
+    val out = new Collected
+    val rq = graft.streaming.StreamingMediaDedup.admission(mem.toDF(),
+      checkpoint("graft_media_quarantine"), out.sink)
+    rq.start(index)
     try {
       val rows = recrawlMedia.as[Multimodal.MediaRow].collect().sortBy(_.doc_id)
       // corrupt payloads land in the FIRST micro-batch (901, 902): the
       // stream must survive them and keep serving the later batch
-      mem.addData(rows.take(3).toSeq: _*); q.processAllAvailable()
-      mem.addData(rows.drop(3).toSeq: _*); q.processAllAvailable()
-      assert(q.exception.isEmpty,
-        s"stream died on corrupt payload: ${q.exception}")
-      val got = spark.table("media_quarantine_stream").collect()
+      mem.addData(rows.take(3).toSeq: _*); rq.processAllAvailable()
+      mem.addData(rows.drop(3).toSeq: _*); rq.processAllAvailable()
+      assert(rq.query.exception.isEmpty,
+        s"stream died on corrupt payload: ${rq.query.exception}")
+      val got = out.rows
         .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("kind"),
           r.getAs[String]("verdict"),
           Option(r.getAs[Any]("near_dup_of")).map(_.asInstanceOf[Long]),
@@ -418,7 +440,7 @@ class StreamingSpec extends AnyFunSuite {
           Option(r.getAs[String]("reason"))))
         .toSet
       assert(got == expected, s"stream=$got batch=$expected")
-    } finally { q.stop(); index.release() }
+    } finally rq.stop()
   }
 
   test("streaming near-dup verdicts stay continuous across a mid-stream " +
@@ -517,6 +539,45 @@ class StreamingSpec extends AnyFunSuite {
       assert(got == want)
       // the refreshed posting is live: 201 near-dups against delta doc 4
       assert(got.exists(v => v._1 == 201L && v._2 == "near_dup" && v._3 == Some(4L)))
+    } finally rq.stop()
+  }
+
+  test("refresh swaps the served index inside the running query: same " +
+      "runId, old index released, next batch judged by the new index") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.pipeline.Dedup
+    import org.apache.spark.storage.StorageLevel
+    def words(n: Int) = (1 to n).map(i => s"w$i").mkString(" ")
+    def uwords(n: Int) = (1 to n).map(i => s"u$i").mkString(" ")
+    val ledger1 = Seq((1L, words(20)),
+      (3L, "totally unrelated ledger doc content here")).toDF("doc_id", "text")
+    val ledger2 = ledger1.union(Seq((4L, uwords(10))).toDF("doc_id", "text"))
+    val mem = MemoryStream[(Long, String)]
+    val out = new Collected
+    val rq = new graft.streaming.StreamingNearDup.Refreshable(spark,
+      mem.toDF().toDF("doc_id", "text"), checkpoint("graft_neardup_swap"),
+      (ds, batchId) => out.sink(ds.toDF(), batchId))
+    val idx1 = Dedup.buildNearDupIndex(ledger1)
+    rq.start(idx1)
+    try {
+      mem.addData((101L, words(20))); rq.processAllAvailable()
+      val runId = rq.query.runId
+      val idx2 = Dedup.buildNearDupIndex(ledger2)
+      rq.refresh(idx2)
+      assert(rq.query.isActive && rq.query.runId == runId,
+        "refresh must not stop or restart the query")
+      assert(Seq(idx1.buckets, idx1.shingles, idx1.dropped)
+        .forall(_.storageLevel == StorageLevel.NONE), "old index not released")
+      val phase2 = Seq((201L, uwords(9) + " z"), (202L, "something else"))
+      mem.addData(phase2: _*); rq.processAllAvailable()
+      def key(r: org.apache.spark.sql.Row) =
+        (r.getLong(0), r.getString(1), Option(r.get(2)), Option(r.get(3)))
+      val want = Dedup.indexNearDup(phase2.toDF("doc_id", "text"), idx2)
+        .collect().map(key).toSet
+      assert(out.byBatch.get(1L).map(key).toSet == want)
+      assert(want.exists(v => v._1 == 201L && v._3 == Some(4L)),
+        s"degenerate fixture: $want")
+      assert(rq.query.runId == runId)
     } finally rq.stop()
   }
 
