@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
+import graft.util.BoundedCollect
+
 /** The small-graph path the graph operators share: `Dedup.resolveClusters`,
   * [[Triangles.perNode]] and [[PageRank.ranks]]. At or under [[MaxEdges]]
   * edges a single thread finishes any of them in milliseconds to seconds,
@@ -39,10 +41,6 @@ object DriverGraph {
     * endpoint was NULL. */
   final case class Edges(packed: Array[Long], sawNull: Boolean)
 
-  /** One partition's row count and, if that is at most the cap, its
-    * packed edges; `packed` is null when the partition was over the cap. */
-  private final case class Part(rows: Long, packed: Array[Long], sawNull: Boolean)
-
   private def integral(t: DataType): Boolean = t match {
     case LongType | IntegerType | ShortType | ByteType => true
     case _ => false
@@ -56,52 +54,37 @@ object DriverGraph {
     case _ => r.getByte(i)
   }
 
-  private def pack(cap: Long, t0: DataType, t1: DataType)(it: Iterator[InternalRow]): Part = {
+  /** One partition's rows as [[Edges]]. */
+  private def pack(t0: DataType, t1: DataType)(it: Iterator[InternalRow]): Edges = {
     val b = Array.newBuilder[Long]
-    var n = 0L
     var sawNull = false
     it.foreach { r =>
-      n += 1
-      if (n <= cap) {
-        val na = r.isNullAt(0)
-        val nb = r.isNullAt(1)
-        if (na || nb) sawNull = true
-        if (!na || !nb) {
-          val a = if (na) longAt(r, 1, t1) else longAt(r, 0, t0)
-          b += a
-          b += (if (nb) a else longAt(r, 1, t1))
-        }
+      val na = r.isNullAt(0)
+      val nb = r.isNullAt(1)
+      if (na || nb) sawNull = true
+      if (!na || !nb) {
+        val a = if (na) longAt(r, 1, t1) else longAt(r, 0, t0)
+        b += a
+        b += (if (nb) a else longAt(r, 1, t1))
       }
     }
-    if (n <= cap) Part(n, b.result(), sawNull) else Part(n, null, false)
+    Edges(b.result(), sawNull)
   }
 
   /** The row count of the two-column edge relation `pairs` and, when it is
     * at most `maxEdges`, both columns are integral and the result's node
-    * type `idType` is INT or BIGINT, its [[Edges]]. One job counts every
-    * partition and already packs each one within an even share of the
-    * bound, so a small input is counted and collected in one pass, and no
-    * input ships more than the bound to the driver; partitions over their
-    * share are packed by a second job over just those partitions, once the
-    * total is known to fit. `maxEdges = 0` only counts. */
+    * type `idType` is INT or BIGINT, its [[Edges]], brought to the driver
+    * by [[BoundedCollect]]: a small input is counted and packed in one
+    * job, and no input ships more than the bound. `maxEdges = 0` only
+    * counts. */
   def collect(pairs: DataFrame, idType: DataType, maxEdges: Long): (Long, Option[Edges]) = {
-    val sc = pairs.sparkSession.sparkContext
     val Seq(t0, t1) = pairs.schema.fields.toSeq.map(_.dataType)
     val ok = maxEdges > 0 && (idType == LongType || idType == IntegerType) &&
       integral(t0) && integral(t1)
-    val rows = pairs.queryExecution.toRdd
-    val share = if (ok) maxEdges / math.max(1, rows.getNumPartitions) else 0L
-    val counted = sc.runJob(rows, pack(share, t0, t1) _)
-    val n = counted.map(_.rows).sum
-    if (!ok || n > maxEdges) (n, None)
-    else {
-      val withheld = counted.indices.filter(counted(_).packed == null)
-      val parts = counted.filter(_.packed != null) ++ (
-        if (withheld.isEmpty) Array.empty[Part]
-        else sc.runJob(rows, pack(Long.MaxValue, t0, t1) _, withheld))
-      (n, Some(Edges(Array.concat(parts.map(_.packed).toSeq: _*),
-        parts.exists(_.sawNull))))
-    }
+    val (n, parts) = BoundedCollect(pairs.queryExecution.toRdd,
+      if (ok) maxEdges else 0L)(pack(t0, t1))
+    (n, parts.filter(_ => ok).map(ps =>
+      Edges(Array.concat(ps.map(_.packed).toSeq: _*), ps.exists(_.sawNull))))
   }
 
   /** The sorted distinct values of `xs`. */

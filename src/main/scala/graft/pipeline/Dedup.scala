@@ -564,8 +564,9 @@ object Dedup {
 
   /** Write one generation of a banded index under `dir`, the
     * [[Ivf.saveIndex]] discipline: a generation OUTLIVES the process that
-    * built it, and one atomic [[IndexGen]] pointer rename publishes every
-    * relation together. `buckets/` and `dropped/` (the tombstones — losing
+    * built it; its relations are written concurrently and one atomic
+    * [[IndexGen.publish]] pointer rename publishes them together.
+    * `buckets/` and `dropped/` (the tombstones — losing
     * them would resurrect capped-out buckets on the next refresh) are
     * range-clustered on `bkey`, so a probe batch's bucket lookup prunes;
     * `meta/` is one row of build hyperparameters; each `extra`
@@ -573,15 +574,14 @@ object Dedup {
   private def savePostings(dir: String, nFiles: Int, buckets: DataFrame,
                            dropped: DataFrame, meta: DataFrame,
                            extra: (String, DataFrame, String)*): Unit = {
-    val (gen, genPath) = IndexGen.newGen(dir)
-    def clustered(name: String, df: DataFrame, key: String, n: Int): Unit =
+    def clustered(name: String, df: DataFrame, key: String, n: Int)(gen: String): Unit =
       df.repartitionByRange(n, col(key)).sortWithinPartitions(key)
-        .write.mode("overwrite").parquet(s"$genPath/$name")
-    clustered("buckets", buckets, "bkey", nFiles)
-    clustered("dropped", dropped, "bkey", math.max(1, nFiles / 4))
-    extra.foreach { case (name, df, key) => clustered(name, df, key, nFiles) }
-    meta.coalesce(1).write.mode("overwrite").parquet(s"$genPath/meta")
-    IndexGen.flip(dir, gen)
+        .write.mode("overwrite").parquet(s"$gen/$name")
+    IndexGen.publish(buckets.sparkSession, dir)(Seq[String => Unit](
+      clustered("buckets", buckets, "bkey", nFiles),
+      clustered("dropped", dropped, "bkey", math.max(1, nFiles / 4)),
+      gen => meta.coalesce(1).write.mode("overwrite").parquet(s"$gen/meta")) ++
+      extra.map { case (name, df, key) => clustered(name, df, key, nFiles) _ }: _*)
   }
 
   /** Read the generation [[savePostings]] last published under `dir`:

@@ -3,6 +3,12 @@ package graft.pipeline
 import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, StandardCopyOption}
+import java.util.concurrent.{ExecutionException, Executors}
+
+import scala.collection.mutable
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ExecutionBridge
 
 /** Generation-versioned directory layout shared by every directory-backed
   * standing index (the BM25 inverted index, the IVF inverted file, the PQ
@@ -25,10 +31,23 @@ import java.nio.file.{Files, StandardCopyOption}
   * an orphan directory the next successful flip prunes; a crash after
   * the flip has already published a complete index.
   *
+  * [[publish]] is the one writer primitive: it allocates the generation,
+  * runs the index's relation writers as concurrent Spark jobs (each on a
+  * pool thread that carries the caller's active session and local
+  * properties: job group, description, execution id), and flips once,
+  * only if every writer succeeded. A failed writer's error propagates
+  * and nothing is published; its orphan directory is pruned by the next
+  * flip.
+  *
   * The superseded generation is retained for ONE cycle (pruned when the
-  * NEXT flip lands), so a reader that resolved just before a flip
-  * finishes its query against intact files; readers must complete within
-  * one full rebuild cycle, which is the standing grace contract.
+  * NEXT flip lands), so a reader in another process that resolved just
+  * before a flip finishes its query against intact files; such readers
+  * must complete within one full rebuild cycle, which is the standing
+  * grace contract. Readers in this JVM can do better: [[withPinned]]
+  * resolves and pins the serving generation under the same lock
+  * [[flip]] prunes under, and no flip prunes a pinned generation, however
+  * many flips land while the reader runs. An unpinned generation outside
+  * the grace window is pruned by the next flip.
   *
   * Pointer atomicity is same-directory `ATOMIC_MOVE` — guaranteed on a
   * local/POSIX filesystem (the harness + same-host cluster gate); an
@@ -38,6 +57,13 @@ import java.nio.file.{Files, StandardCopyOption}
 object IndexGen {
   private val PointerName = "CURRENT"
   private val GenPattern = "^gen_\\d{6}$".r
+
+  /** Open [[withPinned]] readers per generation directory (canonical
+    * path); guarded by the `IndexGen` monitor, like every resolve-and-pin
+    * and every flip. */
+  private val pins = mutable.Map.empty[String, Int]
+
+  private def key(dir: String): String = new File(dir).getCanonicalPath
 
   /** The serving generation's name, if `root` uses the versioned layout. */
   def current(root: String): Option[String] = readPointer(root, PointerName)
@@ -50,7 +76,7 @@ object IndexGen {
 
   /** Allocate the next generation (name, path) under `root` — one past
     * the highest existing generation number, directory created. */
-  def newGen(root: String): (String, String) = {
+  private def newGen(root: String): (String, String) = synchronized {
     val rootF = new File(root)
     rootF.mkdirs()
     val existing = Option(rootF.list()).getOrElse(Array.empty[String])
@@ -84,16 +110,62 @@ object IndexGen {
     }
   }
 
+  /** Run `body` on the serving generation's directory ([[resolve]]),
+    * pinned: no [[flip]] prunes it until `body` returns. Resolve and pin
+    * happen under the lock flips prune under, so the directory `body`
+    * gets is intact for its whole run. */
+  def withPinned[T](root: String)(body: String => T): T = {
+    val (dir, k) = synchronized {
+      val d = resolve(root)
+      val k = key(d)
+      pins(k) = pins.getOrElse(k, 0) + 1
+      (d, k)
+    }
+    try body(dir)
+    finally synchronized {
+      if (pins(k) == 1) pins -= k else pins(k) -= 1
+    }
+  }
+
   /** Publish `gen` as the serving generation (atomic pointer rename),
-    * then prune every generation directory other than `gen` and the one
-    * it superseded — the one-cycle reader grace window. */
-  def flip(root: String, gen: String): Unit = {
+    * then prune every generation directory other than `gen`, the one it
+    * superseded (the one-cycle reader grace window) and any a reader in
+    * this JVM has pinned ([[withPinned]]). */
+  private def flip(root: String, gen: String): Unit = synchronized {
     val prev = current(root)
     publishPointer(root, PointerName, gen)
     val keep = Set(gen) ++ prev
     Option(new File(root).list()).getOrElse(Array.empty[String])
-      .filter(n => GenPattern.findFirstIn(n).isDefined && !keep.contains(n))
+      .filter(n => GenPattern.findFirstIn(n).isDefined && !keep.contains(n) &&
+        !pins.contains(key(s"$root/$n")))
       .foreach(n => deleteRec(new File(root, n)))
+  }
+
+  /** Write a new generation under `root` and publish it: allocate it
+    * ([[newGen]]), run every writer on the generation's path as its own
+    * concurrent Spark job, wait for all of them, then [[flip]] once. If
+    * any writer throws, nothing is published and its error propagates
+    * (the others' as suppressed), once every writer has returned. */
+  def publish(spark: SparkSession, root: String)(writers: (String => Unit)*): Unit = {
+    val (gen, genPath) = newGen(root)
+    val pool = Executors.newFixedThreadPool(math.max(1, writers.size), (r: Runnable) => {
+      val t = new Thread(r, "graft-index-writer")
+      t.setDaemon(true)
+      t
+    })
+    val errors =
+      try {
+        writers.map(w => ExecutionBridge.submitCaptured(spark, pool)(w(genPath)))
+          .flatMap { f =>
+            try { f.get(); None }
+            catch { case e: ExecutionException => Some(e.getCause) }
+          }
+      } finally pool.shutdown()
+    errors.headOption.foreach { e =>
+      errors.tail.foreach(e.addSuppressed)
+      throw e
+    }
+    flip(root, gen)
   }
 
   /** Hard-link every DATA file of relation directory `src` into `dst`

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Similarity.{PreparedVec, cosDouble, dot}
+import graft.util.BoundedCollect
 
 /** IVF-style approximate nearest-neighbor search: a coarse quantizer
   * partitions vectors into centroid buckets; a query probes only its
@@ -192,9 +193,9 @@ object Ivf {
 
   /** Top-k per query probing the `nprobe` nearest centroid buckets.
     * The *query* set is collected and broadcast — correct for the
-    * few-queries/huge-corpus shape this models — and guarded by
+    * few-queries/huge-corpus shape this models — and bounded by
     * `maxQueryRows`: a predicate that matches a corpus-sized slice fails
-    * fast instead of OOM-ing the driver mid-collect.
+    * fast, never shipping more than the bound to the driver.
     *
     * `nCentroids = 0` selects [[autoCentroids]] (sqrt-of-corpus sizing —
     * the production configuration); a positive value pins the bucket
@@ -215,39 +216,47 @@ object Ivf {
   }
 
   /** Shared probe-and-rank tail of the one-shot and standing-index search
-    * paths: rank the `nprobe` nearest buckets per query, join the probed
-    * buckets' vectors, exact-cosine rerank to top-k. */
+    * paths: rank the `nprobe` nearest buckets per query, pair each probed
+    * bucket's vectors with the queries that probe it, exact-cosine rerank
+    * to top-k.
+    *
+    * Probe ranking runs IN THE CLUSTER against broadcast centroids (with
+    * sqrt(n) buckets, ranking on the driver would be an
+    * O(|q| * sqrt(n) * dim) single-threaded loop), inside the one bounded
+    * job that also counts the query set and brings each query and its
+    * probed bucket ids to the driver ([[BoundedCollect]]); the queries
+    * then reach the bucket scan as a broadcast variable, so guard, probe
+    * and candidate pairing take one job before the rank. */
   private def probeSearch(inv: DataFrame, cents: Array[PreparedVec],
       querySet: DataFrame, k: Int, nprobe: Int,
       maxQueryRows: Long): DataFrame = {
     val spark = inv.sparkSession
     import spark.implicits._
-    val nQueries = querySet.count()
-    require(nQueries <= maxQueryRows,
+    val sc = spark.sparkContext
+    val bcCents = sc.broadcast(cents)
+    val (nQueries, probed) = BoundedCollect(
+        querySet.select("vec_id", "xs", "norm2").as[PreparedVec].rdd,
+        maxQueryRows)(_.map { q =>
+      val cs = bcCents.value
+      (q, cs.indices
+        .sortBy(i => (-cosDouble(dot(q.xs, cs(i).xs), q.norm2, cs(i).norm2), i))
+        .take(nprobe).toArray)
+    }.toArray)
+    require(probed.isDefined,
       s"IVF search broadcasts the query set: predicate matched $nQueries " +
         s"rows > maxQueryRows=$maxQueryRows; batch the queries or raise the " +
         "bound explicitly for a corpus-scale join")
-    // (query, probed centroid) pairs. Probe ranking runs IN THE CLUSTER
-    // against broadcast centroids: with sqrt(n) buckets and a
-    // corpus-proportional query set, ranking on the driver would be an
-    // O(|q| * sqrt(n) * dim) single-threaded loop — queries never leave
-    // the executors until the broadcast exchange of the (tiny) pair
-    // relation itself.
-    val bcCents = spark.sparkContext.broadcast(cents)
-    val probes = querySet.select("vec_id", "xs", "norm2").as[PreparedVec]
-      .flatMap { q =>
-        val cs = bcCents.value
-        cs.indices
-          .sortBy(i => (-cosDouble(dot(q.xs, cs(i).xs), q.norm2, cs(i).norm2), i))
-          .take(nprobe)
-          .map(ci => (q.vec_id, ci, q.xs, q.norm2))
-      }.toDF("query_id", "centroid_id", "xs_q", "n_q")
+    // probed bucket -> the queries probing it
+    val byCent = probed.get.toSeq.flatten
+      .flatMap { case (q, cis) => cis.map(_ -> q) }
+      .groupBy(_._1).map { case (ci, qs) => ci -> qs.map(_._2).toArray }
+    val bcProbes = sc.broadcast(byCent)
     inv.select("centroid_id", "vec_id", "xs", "norm2")
-      .join(broadcast(probes), "centroid_id")
-      .where(col("vec_id") =!= col("query_id"))
-      .as[(Int, Long, Array[Long], Long, Long, Array[Long], Long)]
-      .map { case (_, vid, xs, n, qid, xsQ, nQ) =>
-        (qid, vid, cosDouble(dot(xsQ, xs), nQ, n))
+      .where(col("centroid_id").isin(byCent.keys.toSeq: _*))
+      .as[(Int, Long, Array[Long], Long)]
+      .flatMap { case (ci, vid, xs, n) =>
+        bcProbes.value(ci).iterator.filter(_.vec_id != vid)
+          .map(q => (q.vec_id, vid, cosDouble(dot(q.xs, xs), q.norm2, n)))
       }
       .toDF("query_id", "neighbor_id", "cos")
       .withColumn("rank", row_number().over(
@@ -388,23 +397,23 @@ object Ivf {
                 lastBatchId: Long = -1L): Unit = {
     val spark = index.inv.sparkSession
     import spark.implicits._
-    // generation-versioned ([[IndexGen]]): the three relations land in a
-    // fresh gen dir and ONE atomic pointer rename publishes them, so
-    // retrain + persist compose — saving over a served directory swaps
-    // whole generations, never mixes an old inv with new cents
-    val (gen, genPath) = IndexGen.newGen(dir)
-    index.inv
-      .repartitionByRange(nFiles, col("centroid_id"), col("vec_id"))
-      .sortWithinPartitions("centroid_id", "vec_id")
-      .write.mode("overwrite").parquet(s"$genPath/inv")
-    index.cents.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.vec_id, c.xs.toSeq, c.norm2) }
-      .toDF("idx", "vec_id", "xs", "norm2")
-      .coalesce(1).write.mode("overwrite").parquet(s"$genPath/cents")
-    Seq((index.nTotal, index.nSinceTrain, lastBatchId, Seq.empty[Long]))
-      .toDF("n_total", "n_since_train", "last_batch_id", "folded_ids")
-      .coalesce(1).write.mode("overwrite").parquet(s"$genPath/meta")
-    IndexGen.flip(dir, gen)
+    // generation-versioned ([[IndexGen.publish]]): the three relations
+    // land in a fresh gen dir as concurrent writes and ONE atomic pointer
+    // rename publishes them, so retrain + persist compose — saving over a
+    // served directory swaps whole generations, never mixes an old inv
+    // with new cents
+    IndexGen.publish(spark, dir)(
+      gen => index.inv
+        .repartitionByRange(nFiles, col("centroid_id"), col("vec_id"))
+        .sortWithinPartitions("centroid_id", "vec_id")
+        .write.mode("overwrite").parquet(s"$gen/inv"),
+      gen => index.cents.zipWithIndex.toSeq
+        .map { case (c, i) => (i, c.vec_id, c.xs.toSeq, c.norm2) }
+        .toDF("idx", "vec_id", "xs", "norm2")
+        .coalesce(1).write.mode("overwrite").parquet(s"$gen/cents"),
+      gen => Seq((index.nTotal, index.nSinceTrain, lastBatchId, Seq.empty[Long]))
+        .toDF("n_total", "n_since_train", "last_batch_id", "folded_ids")
+        .coalesce(1).write.mode("overwrite").parquet(s"$gen/meta"))
   }
 
   /** The meta relation a generation currently serves: `meta_<id>/`

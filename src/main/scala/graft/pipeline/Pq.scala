@@ -212,22 +212,22 @@ object Pq extends Serializable {
   def saveCodeIndex(index: PqIndex, dir: String, nFiles: Int = 16): Unit = {
     val spark = index.codes.sparkSession
     import spark.implicits._
-    // generation-versioned ([[IndexGen]]): one atomic pointer rename
-    // publishes codes/books/meta together — retrain + persist compose
-    val (gen, genPath) = IndexGen.newGen(dir)
-    index.codes
-      .repartitionByRange(nFiles, col("vec_id"), col("sub"))
-      .sortWithinPartitions("vec_id", "sub")
-      .write.mode("overwrite").parquet(s"$genPath/codes")
-    (for (s <- index.books.indices; ci <- index.books(s).indices;
-          j <- index.books(s)(ci).indices)
-      yield (s, ci, j, index.books(s)(ci)(j)))
-      .toDF("s", "cid", "j", "v")
-      .coalesce(1).write.mode("overwrite").parquet(s"$genPath/books")
-    Seq((index.m, index.nTotal, index.nSinceTrain))
-      .toDF("m", "n_total", "n_since_train")
-      .coalesce(1).write.mode("overwrite").parquet(s"$genPath/meta")
-    IndexGen.flip(dir, gen)
+    // generation-versioned ([[IndexGen.publish]]): concurrent writes,
+    // then one atomic pointer rename publishes codes/books/meta together
+    // — retrain + persist compose
+    IndexGen.publish(spark, dir)(
+      gen => index.codes
+        .repartitionByRange(nFiles, col("vec_id"), col("sub"))
+        .sortWithinPartitions("vec_id", "sub")
+        .write.mode("overwrite").parquet(s"$gen/codes"),
+      gen => (for (s <- index.books.indices; ci <- index.books(s).indices;
+            j <- index.books(s)(ci).indices)
+          yield (s, ci, j, index.books(s)(ci)(j)))
+        .toDF("s", "cid", "j", "v")
+        .coalesce(1).write.mode("overwrite").parquet(s"$gen/books"),
+      gen => Seq((index.m, index.nTotal, index.nSinceTrain))
+        .toDF("m", "n_total", "n_since_train")
+        .coalesce(1).write.mode("overwrite").parquet(s"$gen/meta"))
   }
 
   /** Load a [[saveCodeIndex]] directory: `loadCodeIndex(save(idx)) == idx`

@@ -1,9 +1,16 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.MathUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.graftbridge.{ExecutionBridge, PlanBridge}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+
+import graft.operators.DriverGraph
+import graft.util.BoundedCollect
 
 /** Keyword retrieval over a document corpus: inverted-index statistics +
   * BM25-style ranking, exact BIGINT arithmetic end to end.
@@ -203,6 +210,10 @@ object Search {
     * Build cost is [[bm25TopKTerms]]'s one explode + one (doc, term)
     * aggregate — paid ONCE and amortized over every query that follows,
     * where the per-query form re-tokenizes the corpus each invocation.
+    * The aggregate is cached by one job that also sums the corpus token
+    * count (`sum_dl`, held on the driver); the three relations are then
+    * written from that cache as concurrent jobs ([[IndexGen.publish]]),
+    * so the build's wall is its longest writer, not the sum of three.
     * `nFiles` sizes the postings layout: at fleet scale pick
     * index-bytes / target-file-size.
     *
@@ -210,12 +221,39 @@ object Search {
     * relations land in a fresh `gen_NNNNNN/` directory and one atomic
     * pointer rename publishes them — building over a live index is a hot
     * swap, with in-flight readers finishing against the superseded
-    * generation (retained one cycle). */
+    * generation (retained one cycle, or for as long as a reader in this
+    * JVM pins it). */
   def buildIndex(docs: DataFrame, idCol: String, textCol: String,
       dir: String, nFiles: Int = 32): Unit = {
-    val (gen, genPath) = IndexGen.newGen(dir)
-    buildRelations(docs, idCol, textCol, genPath, nFiles)
-    IndexGen.flip(dir, gen)
+    val spark = docs.sparkSession
+    val postings = tokenizedPostings(docs, idCol, textCol).persist()
+    // fills the cache; sum(tf) over the postings == the per-doc dl
+    // rollup's sum (and NULL over an all-token-less corpus, where
+    // postings is empty)
+    val sumDl = postings.agg(sum("tf").cast("long")).head().get(0)
+    try IndexGen.publish(spark, dir)(
+      gen => termSorted(postings, nFiles, "term", "doc_id")
+        .write.parquet(s"$gen/postings"),
+      gen => termSorted(postings.groupBy("term").agg(count(lit(1)).as("df")),
+        math.max(1, nFiles / 4), "term").write.parquet(s"$gen/termdf"),
+      gen => docs.agg(count(lit(1)).as("n"))
+        .select(col("n"), lit(sumDl).cast("long").as("sum_dl"))
+        .write.parquet(s"$gen/stats"))
+    finally postings.unpersist()
+  }
+
+  /** Batch postings rows per written file: [[refreshIndex]] sizes its
+    * file set from the batch's row count, so a small batch lands as ONE
+    * term-sorted file with no range-sampling job. */
+  private val RowsPerFile = 1L << 20
+
+  /** `df` laid out as `files` files sorted on `keys`: range-partitioned on
+    * them when more than one file (which costs a sampling job), else one
+    * sorted partition with no exchange. */
+  private def termSorted(df: DataFrame, files: Int, keys: String*): DataFrame = {
+    val cs = keys.map(col)
+    (if (files <= 1) df.coalesce(1) else df.repartitionByRange(files, cs: _*))
+      .sortWithinPartitions(cs: _*)
   }
 
   /** The tokenize + (doc, term) aggregate both index paths share, with the
@@ -235,111 +273,92 @@ object Search {
       .select("doc_id", "term", "tf", "dl")
   }
 
-  private def buildRelations(docs: DataFrame, idCol: String,
-      textCol: String, genPath: String, nFiles: Int): Unit = {
-    val postings = tokenizedPostings(docs, idCol, textCol).persist()
-    postings
-      .repartitionByRange(nFiles, col("term"), col("doc_id"))
-      .sortWithinPartitions("term", "doc_id")
-      .write.mode("overwrite").parquet(s"$genPath/postings")
-    postings.groupBy("term").agg(count(lit(1)).as("df"))
-      .repartitionByRange(math.max(1, nFiles / 4), col("term"))
-      .sortWithinPartitions("term")
-      .write.mode("overwrite").parquet(s"$genPath/termdf")
-    // sum(tf) over the cached postings == the old per-doc dl rollup's sum
-    // (and NULL over an all-token-less corpus, where postings is empty)
-    docs.agg(count(lit(1)).as("n"))
-      .crossJoin(postings.agg(sum("tf").cast("long").as("sum_dl")))
-      .write.mode("overwrite").parquet(s"$genPath/stats")
-    postings.unpersist()
-  }
-
   /** Incremental maintenance of a [[buildIndex]] directory: fold an
     * admitted batch of NEW documents into the standing index without
     * re-tokenizing the ledger corpus —
-    * `refreshIndex(buildIndex(L), B) == buildIndex(L ∪ B)`
-    * relation-for-relation (SearchSpec pins postings/termdf/stats
-    * equality; the `q_bm25_index_refresh` oracle gate replays the
-    * build-then-refresh pipeline against a from-scratch full-corpus
-    * DuckDB rederivation, so any drift in the df merge or stats
-    * arithmetic fails the hash end-to-end).
+    * `refreshIndex(buildIndex(L), B) == buildIndex(L ∪ B)` as a reader
+    * sees it (SearchSpec pins postings and stats equality and termdf
+    * equality summed per term; the `q_bm25_index_refresh` oracle gate
+    * replays the build-then-refresh pipeline against a from-scratch
+    * full-corpus DuckDB rederivation, so any drift in the df deltas or
+    * stats arithmetic fails the hash end-to-end).
     *
-    * Everything is batch-sized except two metadata-tier rewrites:
-    * - `postings/`: the batch's (term, doc_id, tf, dl) rows are APPENDED
-    *   as their own term-sorted files — ledger postings are never read or
-    *   rewritten. Document length is per-document and documents are
-    *   immutable, so the denormalized `dl` of standing postings is
-    *   refresh-invariant by construction. Each refresh adds one small
-    *   term-sorted file set whose min/max footers still prune lookups;
-    *   long refresh chains should compact (rebuild) periodically, the
-    *   [[Dedup.refreshNearDupIndex]] discipline.
-    * - `termdf/` and `stats/`: term dfs merge by one full-outer join of
-    *   the vocabulary relation with the batch's dfs (vocabulary-tier, no
-    *   tokenization), and the 1-row stats add the batch's counts. Both
-    *   are materialized (localCheckpoint cuts the file lineage) before
-    *   overwriting the directory they were read from.
+    * Every relation is batch-sized. The batch is tokenized once into a
+    * cache, by one job that also counts its postings rows and sums its
+    * tokens; then the three relations are written as concurrent jobs:
+    * - `postings/`: the standing part files are hard-linked and the
+    *   batch's (term, doc_id, tf, dl) rows are APPENDED as ONE term-sorted
+    *   file set, one file per [[RowsPerFile]] rows — ledger postings are
+    *   never read or rewritten. Document length is per-document and
+    *   documents are immutable, so the denormalized `dl` of standing
+    *   postings is refresh-invariant by construction. Each refresh adds
+    *   one small file set whose min/max footers still prune lookups; long
+    *   refresh chains should compact periodically ([[compactIndex]]).
+    * - `termdf/`: the standing files (earlier deltas included) are
+    *   hard-linked and the batch's (term, df) rows are appended beside
+    *   them as a DELTA file set, so a term has one row per file set that
+    *   saw it and its df is the SUM of those rows. [[compactIndex]] folds
+    *   the deltas; queries do not read `termdf` at all (they count the
+    *   term-pruned postings they read anyway).
+    * - `stats/`: one row from driver-held values — the standing row plus
+    *   the batch's document count and token sum. `n` counts ALL batch
+    *   docs (token-less ones weigh on idf, the buildIndex rule); `sum_dl`
+    *   stays NULL only while BOTH sides are token-free, matching what a
+    *   from-scratch build would write.
     *
     * Contract: batch doc_ids must be NEW (the admission discipline every
     * standing index here assumes) — replayed ids would duplicate
     * postings rows, exactly as re-inserting into the rebuild would.
     *
-    * Refresh publishes a NEW generation ([[IndexGen]]), like build and
-    * compaction: standing postings part files are hard-linked into it
-    * (immutable once published — the carry-forward costs directory
-    * entries, not index-sized I/O), the batch's term-sorted file set and
-    * the merged vocabulary-tier termdf/stats are written beside them,
-    * and one atomic pointer rename publishes all three relations
-    * together. A reader racing a refresh serves entirely from the old or
-    * entirely from the new generation — never a cross-batch pairing (the
-    * in-place termdf/stats overwrite window the r16 spelling documented
-    * and SearchSpec now drives concurrently). A crash mid-refresh leaves
-    * the old generation serving and an orphan directory the next flip
-    * prunes. */
+    * Refresh publishes a NEW generation ([[IndexGen.publish]]), like build
+    * and compaction: the carry-forward costs directory entries, not
+    * index-sized I/O, and one atomic pointer rename publishes all three
+    * relations together. A reader racing a refresh serves entirely from
+    * the old or entirely from the new generation — never a cross-batch
+    * pairing (SearchSpec drives this concurrently). A failed or crashed
+    * refresh leaves the old generation serving and an orphan directory
+    * the next flip prunes. */
   def refreshIndex(spark: SparkSession, dir: String, batch: DataFrame,
-      idCol: String, textCol: String, batchFiles: Int = 4): Unit = {
-    val cur = IndexGen.resolve(dir)
-    val (gen, genPath) = IndexGen.newGen(dir)
+      idCol: String, textCol: String): Unit = IndexGen.withPinned(dir) { cur =>
     val bp = tokenizedPostings(batch, idCol, textCol).persist()
-    IndexGen.linkDataFiles(s"$cur/postings", s"$genPath/postings")
-    bp
-      .repartitionByRange(batchFiles, col("term"), col("doc_id"))
-      .sortWithinPartitions("term", "doc_id")
-      .write.mode("append").parquet(s"$genPath/postings")
-    val bdf = bp.groupBy("term").agg(count(lit(1)).as("df_new"))
-    readIndex(spark, cur, "termdf")
-      .withColumnRenamed("df", "df_old")
-      .join(bdf, Seq("term"), "full_outer")
-      .select(col("term"),
-        (coalesce(col("df_old"), lit(0L)) +
-          coalesce(col("df_new"), lit(0L))).as("df"))
-      .repartitionByRange(math.max(1, batchFiles), col("term"))
-      .sortWithinPartitions("term")
-      .write.mode("overwrite").parquet(s"$genPath/termdf")
-    // stats: n counts ALL batch docs (token-less ones weigh on idf, the
-    // buildIndex rule); sum_dl stays NULL only while BOTH sides are
-    // token-free, matching what a from-scratch build would write
-    val bStats = batch.agg(count(lit(1)).as("bn"))
-      .crossJoin(bp.agg(sum("tf").cast("long").as("bsum")))
-    readIndex(spark, cur, "stats")
-      .crossJoin(bStats)
-      .select((col("n") + col("bn")).as("n"),
-        when(col("sum_dl").isNull && col("bsum").isNull, lit(null))
-          .otherwise(coalesce(col("sum_dl"), lit(0L)) +
-            coalesce(col("bsum"), lit(0L))).cast("long").as("sum_dl"))
-      .write.mode("overwrite").parquet(s"$genPath/stats")
-    bp.unpersist()
-    IndexGen.flip(dir, gen)
+    try {
+      val filled = bp.agg(count(lit(1)), sum("tf").cast("long")).head()
+      val files = math.max(1L, (filled.getLong(0) + RowsPerFile - 1) / RowsPerFile).toInt
+      val bSum = filled.get(1)
+      IndexGen.publish(spark, dir)(
+        { gen =>
+          IndexGen.linkDataFiles(s"$cur/postings", s"$gen/postings")
+          termSorted(bp, files, "term", "doc_id")
+            .write.mode("append").parquet(s"$gen/postings")
+        },
+        { gen =>
+          IndexGen.linkDataFiles(s"$cur/termdf", s"$gen/termdf")
+          termSorted(bp.groupBy("term").agg(count(lit(1)).as("df")), files, "term")
+            .write.mode("append").parquet(s"$gen/termdf")
+        },
+        { gen =>
+          val old = readIndex(spark, cur, "stats").head()
+          val sumDl = Seq(old.get(1), bSum)
+            .collect { case v: java.lang.Long => v.longValue }
+            .reduceOption(MathUtils.addExact(_: Long, _: Long))
+          batch.agg(count(lit(1)).as("bn"))
+            .select((lit(old.getLong(0)) + col("bn")).as("n"),
+              lit(sumDl.map(Long.box).orNull).cast("long").as("sum_dl"))
+            .write.parquet(s"$gen/stats")
+        })
+    } finally bp.unpersist()
   }
 
   /** Periodic COMPACTION of a refresh-chained [[buildIndex]] directory —
     * the BM25 analog of the drift-triggered retrain ([[Ivf.retrainIndex]]):
     * BM25 has no trained state, so what long refresh chains degrade is the
-    * FILE layout (each refresh appends a small term-sorted file set;
-    * min/max pruning weakens as sets pile up), and compaction re-clusters
-    * the whole index into `nFiles` range-sorted files. Query results are
-    * unchanged by contract — refresh == rebuild relation-for-relation
-    * already, so compaction is a pure re-layout: SearchSpec pins the
-    * compacted generation content-equal to a fresh [[buildIndex]], and the
+    * FILE layout (each refresh appends a small term-sorted postings file
+    * set and a `termdf` delta; min/max pruning weakens as sets pile up),
+    * and compaction re-clusters the postings into `nFiles` range-sorted
+    * files and folds the `termdf` deltas into one row per term. Query
+    * results are unchanged by contract — refresh == rebuild already, so
+    * compaction is a pure re-layout: SearchSpec pins the compacted
+    * generation content-equal to a fresh [[buildIndex]], and the
     * `q_bm25_retrain` oracle gate replays refresh → compact → further
     * refresh against the full-corpus DuckDB rederivation.
     *
@@ -347,34 +366,25 @@ object Search {
     * entirely from the standing relations (postings carry everything a
     * rebuild needs — BM25 has no trained state to re-learn, and `stats`
     * preserves the token-less-document count postings alone cannot see),
-    * so nothing re-tokenizes raw text. The r15 form took the full raw
-    * corpus and paid the tokenize+aggregate build again per compaction —
-    * the reason the retrain gate was the registry's most expensive row.
+    * so nothing re-tokenizes raw text. The two term-keyed relations are
+    * written as concurrent jobs and the one-row `stats` is hard-linked.
     *
     * Hot swap ([[IndexGen]]): the re-layout lands in a fresh generation
     * directory and ONE atomic pointer rename publishes all three
     * relations together — a racing reader serves entirely from the old
     * or entirely from the new generation, never a mix (SearchSpec drives
-    * queries concurrently with compactions to pin this). The superseded
-    * generation is retained one cycle for in-flight readers. */
+    * queries concurrently with compactions to pin this). */
   def compactIndex(spark: SparkSession, dir: String,
-      nFiles: Int = 32): Unit = {
-    val cur = IndexGen.resolve(dir)
+      nFiles: Int = 32): Unit = IndexGen.withPinned(dir) { cur =>
     require(new java.io.File(s"$cur/postings").isDirectory,
       s"compactIndex: no index generation under $dir")
-    val (gen, genPath) = IndexGen.newGen(dir)
-    readIndex(spark, cur, "postings")
-      .repartitionByRange(nFiles, col("term"), col("doc_id"))
-      .sortWithinPartitions("term", "doc_id")
-      .write.mode("overwrite").parquet(s"$genPath/postings")
-    readIndex(spark, cur, "termdf")
-      .repartitionByRange(math.max(1, nFiles / 4), col("term"))
-      .sortWithinPartitions("term")
-      .write.mode("overwrite").parquet(s"$genPath/termdf")
-    readIndex(spark, cur, "stats")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$genPath/stats")
-    IndexGen.flip(dir, gen)
+    IndexGen.publish(spark, dir)(
+      gen => termSorted(readIndex(spark, cur, "postings"), nFiles, "term", "doc_id")
+        .write.parquet(s"$gen/postings"),
+      gen => termSorted(readIndex(spark, cur, "termdf").groupBy("term")
+          .agg(sum("df").cast("long").as("df")), math.max(1, nFiles / 4), "term")
+        .write.parquet(s"$gen/termdf"),
+      gen => IndexGen.linkDataFiles(s"$cur/stats", s"$gen/stats"))
   }
 
   /** BM25 top-k answered from a [[buildIndex]] directory: scores are
@@ -382,22 +392,192 @@ object Search {
     * corpus-sized work is the term-pruned postings read — `term IN (...)`
     * pushes into the parquet scan, and the term-sorted layout turns the
     * lookup into a row-group seek. Everything downstream is
-    * workload-sized (|query terms| postings rows per matching doc). */
+    * workload-sized, and a term's df is the count of its pruned postings
+    * rows (one per document), so `termdf` is not read.
+    *
+    * One bounded job ([[BoundedCollect]]) scans the pruned postings once,
+    * keeping the scan's rows in a cache. At or under
+    * `DriverGraph.MaxEdges` rows they reach the driver as primitive
+    * columns and the query is scored there ([[driverTopK]]: the same
+    * integer formula, ANSI errors included), with `stats` read as two
+    * values; the result is a local relation and the query runs in two
+    * small jobs. Above the bound the Spark ranking plan runs over the
+    * cached scan and is checkpointed before the cache is dropped. Either
+    * way every read runs inside the call, with the generation pinned
+    * ([[IndexGen.withPinned]]). */
   def bm25TopKIndexed(spark: SparkSession, dir: String,
       queries: Seq[(Long, Seq[String])], k: Int,
-      k1Micros: Long = 1200000L, bMicros: Long = 750000L): DataFrame = {
+      k1Micros: Long = 1200000L, bMicros: Long = 750000L): DataFrame =
+    topKIndexed(spark, dir, queries, k, k1Micros, bMicros, DriverGraph.MaxEdges)
+
+  /** [[bm25TopKIndexed]] with the driver path's row bound as a parameter:
+    * `driverMaxRows = 0` forces the Spark plan. */
+  private[graft] def topKIndexed(spark: SparkSession, dir: String,
+      queries: Seq[(Long, Seq[String])], k: Int, k1Micros: Long, bMicros: Long,
+      driverMaxRows: Long): DataFrame = {
     require(queries.nonEmpty && k > 0)
+    val terms = queries.flatMap(_._2).distinct
+    val termIdx = terms.zipWithIndex.toMap
+    IndexGen.withPinned(dir) { cur => // ONE generation serves this query
+      val qp = prunedPostings(spark, cur, terms)
+      // the one scan both paths read: the bounded job fills the cache and
+      // the Spark plan reads it back (copied: `toRdd` rows are reused)
+      val rows = qp.queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+      def plan = sparkTopK(PlanBridge.overRows(qp, rows), queries, k, k1Micros, bMicros, cur)
+      try {
+        val (_, collected) = BoundedCollect(rows, driverMaxRows)(packPostings(termIdx))
+        collected.map(Postings.concat).filterNot(_.sawNull) match {
+          case Some(ps) =>
+            val st = readIndex(spark, cur, "stats").head()
+            if (st.isNullAt(1)) plan
+            else spark.createDataFrame(java.util.Arrays.asList(driverTopK(queries,
+              termIdx, ps, st.getLong(0), st.getLong(1), k, k1Micros, bMicros): _*),
+              TopKSchema)
+          case None => plan
+        }
+      } finally rows.unpersist(blocking = false)
+    }
+  }
+
+  /** Generation `gen`'s postings rows holding one of `terms`, as
+    * (term, doc_id, tf, dl): the `term IN (...)` filter reaches the parquet
+    * scan. Both [[topKIndexed]] paths read this relation. */
+  private[graft] def prunedPostings(spark: SparkSession, gen: String,
+      terms: Seq[String]): DataFrame =
+    readIndex(spark, gen, "postings").where(col("term").isin(terms: _*))
+      .select("term", "doc_id", "tf", "dl")
+
+  /** [[bm25TopKIndexed]]'s Spark plan: [[rankTopK]] over the pruned
+    * postings `qp` (the cached scan), df counted from them, checkpointed so
+    * the cache can go. */
+  private def sparkTopK(qp: DataFrame, queries: Seq[(Long, Seq[String])],
+      k: Int, k1Micros: Long, bMicros: Long, cur: String): DataFrame = {
+    val spark = qp.sparkSession
     import spark.implicits._
-    val cur = IndexGen.resolve(dir) // ONE generation serves this query
     val q = queries.flatMap { case (qid, terms) => terms.map(t => (qid, t)) }
       .toDF("query_id", "term")
-    val terms = queries.flatMap(_._2).distinct
-    val qp = readIndex(spark, cur, "postings")
-      .where(col("term").isin(terms: _*))
-    val dft = readIndex(spark, cur, "termdf")
-      .where(col("term").isin(terms: _*))
-    val stats = readIndex(spark, cur, "stats")
-    rankTopK(q, qp, dft, stats, k, k1Micros, bMicros, excludeSelf = false)
+    rankTopK(q, qp, postingsDf(qp), readIndex(spark, cur, "stats"),
+      k, k1Micros, bMicros, excludeSelf = false).localCheckpoint(true)
+  }
+
+  /** (term, df) from term-pruned postings: one row per document holding
+    * the term, so df is the row count. */
+  private def postingsDf(qp: DataFrame): DataFrame =
+    qp.groupBy("term").agg(count(lit(1)).as("df"))
+
+  /** Pruned postings rows on the driver, as columns: `term` indexes the
+    * query's distinct terms; `sawNull` says a row with a NULL column was
+    * left out. 28 bytes a row: 2^20 rows are 28 MB. */
+  private final case class Postings(term: Array[Int], doc: Array[Long],
+      tf: Array[Long], dl: Array[Long], sawNull: Boolean)
+
+  private object Postings {
+    def concat(ps: Array[Postings]): Postings = Postings(
+      Array.concat(ps.map(_.term).toSeq: _*), Array.concat(ps.map(_.doc).toSeq: _*),
+      Array.concat(ps.map(_.tf).toSeq: _*), Array.concat(ps.map(_.dl).toSeq: _*),
+      ps.exists(_.sawNull))
+  }
+
+  /** One partition of [[prunedPostings]] as [[Postings]]. */
+  private def packPostings(termIdx: Map[String, Int])(it: Iterator[InternalRow]): Postings = {
+    val (t, d, tf, dl) = (Array.newBuilder[Int], Array.newBuilder[Long],
+      Array.newBuilder[Long], Array.newBuilder[Long])
+    var sawNull = false
+    it.foreach { r =>
+      if (r.anyNull) sawNull = true
+      else {
+        t += termIdx(r.getUTF8String(0).toString)
+        d += r.getLong(1); tf += r.getLong(2); dl += r.getLong(3)
+      }
+    }
+    Postings(t.result(), d.result(), tf.result(), dl.result(), sawNull)
+  }
+
+  /** [[rankTopK]]'s schema, as its plan types it. */
+  private val TopKSchema = StructType(Seq(
+    StructField("query_id", LongType, nullable = false),
+    StructField("rk", IntegerType, nullable = false),
+    StructField("doc_id", LongType), StructField("score_micros", LongType)))
+
+  /** [[rankTopK]] on the driver, over collected pruned postings with no
+    * NULL column and a non-NULL `sumDl`: every (query term, posting) pair
+    * contributes [[rankTopK]]'s integer formula, evaluated in the same
+    * order and types with the same ANSI overflow and divide-by-zero errors
+    * (a term repeated in a query contributes once per occurrence, as the
+    * plan's join does; queries sharing an id score as one); scores sum per
+    * (query_id, doc_id) and rank by score desc then doc_id, `rk` 1..k.
+    *
+    * Working set over m postings and d distinct documents, all primitive:
+    * the columns (28m bytes), each posting's contribution, dense document
+    * index and term-grouped position (16m), the sorted distinct documents
+    * and one query's score and seen arrays (17d, reused across queries),
+    * plus a k-row heap. At m = d = 2^20 (eight partitions' columns, their
+    * concatenation and this kernel, four queries) it runs in a 112 MB JVM
+    * heap and not in 104 MB; the per-posting object version it replaced
+    * needed 768 MB. */
+  private def driverTopK(queries: Seq[(Long, Seq[String])],
+      termIdx: Map[String, Int], ps: Postings, n: Long, sumDl: Long,
+      k: Int, k1Micros: Long, bMicros: Long): Seq[Row] = {
+    import MathUtils.{addExact => add, multiplyExact => mul, subtractExact => sub}
+    import ExecutionBridge.div
+    val M = 1000000L
+    // `1000000 + k1` and `1000000 - b` are INT arithmetic when the knob
+    // is an INT literal in the plan's expression text
+    def litOp(v: Long, int: (Int, Int) => Int, long: (Long, Long) => Long): Long =
+      if (v >= -Int.MaxValue && v <= Int.MaxValue) int(1000000, v.toInt).toLong
+      else long(M, v)
+    val m = ps.term.length
+    // postings grouped by term (a counting sort): term t's postings are
+    // byTerm(from(t) until from(t + 1)), so its df is the group's size
+    val from = new Array[Int](termIdx.size + 1)
+    ps.term.foreach(t => from(t + 1) += 1)
+    for (t <- 1 to termIdx.size) from(t) += from(t - 1)
+    val byTerm = new Array[Int](m)
+    val next = from.clone()
+    for (i <- 0 until m) { byTerm(next(ps.term(i))) = i; next(ps.term(i)) += 1 }
+    val contrib = if (m == 0) Array.empty[Long] else {
+      lazy val onePlusK1 = litOp(k1Micros, add, add)
+      lazy val oneMinusB = litOp(bMicros, sub, sub)
+      val idf = Array.tabulate(termIdx.size) { t =>
+        val df = (from(t + 1) - from(t)).toLong
+        if (df == 0) 0L
+        else div(mul(add(mul(2L, sub(n, df)), 1L), M), add(mul(2L, df), 1L))
+      }
+      Array.tabulate(m) { i =>
+        val tf = ps.tf(i)
+        val lRatio = div(mul(mul(ps.dl(i), n), M), sumDl)
+        val denom = add(mul(tf, M),
+          div(mul(k1Micros, add(oneMinusB, div(mul(bMicros, lRatio), M))), M))
+        div(mul(idf(ps.term(i)), div(mul(mul(tf, onePlusK1), M), denom)), M)
+      }
+    }
+    // documents as dense indices, ascending: index order is doc_id order
+    val docs = DriverGraph.sortedDistinct(ps.doc)
+    val dense = ps.doc.map(java.util.Arrays.binarySearch(docs, _))
+    val score = new Array[Long](docs.length)
+    val seen = new Array[Boolean](docs.length)
+    // the worse of two scored documents first: lower score, then higher doc
+    val worseFirst: java.util.Comparator[Int] = (a, b) =>
+      if (score(a) != score(b)) java.lang.Long.compare(score(a), score(b))
+      else Integer.compare(b, a)
+    queries.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (qid, qs) =>
+      val hit = Array.newBuilder[Int]
+      for ((_, ts) <- qs; t <- ts; ti <- termIdx.get(t); j <- from(ti) until from(ti + 1)) {
+        val i = byTerm(j)
+        val d = dense(i)
+        if (seen(d)) score(d) = add(score(d), contrib(i))
+        else { seen(d) = true; score(d) = contrib(i); hit += d }
+      }
+      val top = new java.util.PriorityQueue[Int](worseFirst)
+      hit.result().foreach { d =>
+        seen(d) = false
+        if (top.size < k) top.add(d)
+        else if (worseFirst.compare(d, top.peek()) > 0) { top.poll(); top.add(d) }
+      }
+      val best = new Array[Int](top.size)
+      for (r <- best.indices.reverse) best(r) = top.poll()
+      best.toSeq.zipWithIndex.map { case (d, r) => Row(qid, r + 1, docs(d), score(d)) }
+    }
   }
 
   /** [[moreLikeThis]] answered from a [[buildIndex]] directory — the
@@ -414,6 +594,9 @@ object Search {
     * (...)` literals pushed into the parquet scan — the distinct term list
     * is workload-sized by contract (<= |queries| * nTerms) and collected
     * under a fail-fast guard, following the repo's guarded-collect rule.
+    * Term dfs are counted from that pruned read, as in
+    * [[bm25TopKIndexed]]; `termdf` is not read. Every read runs inside the
+    * call (the result is checkpointed), with the generation pinned.
     * Scores are identical to [[moreLikeThis]] over the indexed corpus:
     * the index's tf values come from the same tokenizer.
     *
@@ -425,31 +608,31 @@ object Search {
       k1Micros: Long = 1200000L, bMicros: Long = 750000L,
       maxQueryTerms: Int = 1 << 16): DataFrame = {
     require(nTerms > 0 && k > 0)
-    val cur = IndexGen.resolve(dir) // ONE generation serves this query
-    val postings = readIndex(spark, cur, "postings")
-    val qw = Window.partitionBy("query_id")
-      .orderBy(col("tf").desc, col("term"))
-    val queryTerms = postings.where(isQueryDoc)
-      .select(col("doc_id").as("query_id"), col("term"), col("tf"))
-      .withColumn("trk", row_number().over(qw))
-      .where(col("trk") <= nTerms)
-      .select("query_id", "term")
-      .persist()
-    val terms = queryTerms.select("term").distinct()
-      .limit(maxQueryTerms + 1).collect().map(_.getString(0)).toSeq
-    require(terms.length <= maxQueryTerms,
-      s"moreLikeThisIndexed: > $maxQueryTerms distinct query terms — the " +
-        "query workload is not workload-sized; raise maxQueryTerms " +
-        "deliberately or shrink the query set")
-    val qp = postings.where(col("term").isin(terms: _*))
-    val dft = readIndex(spark, cur, "termdf")
-      .where(col("term").isin(terms: _*))
-    val stats = readIndex(spark, cur, "stats")
-    val ranked = rankTopK(queryTerms, qp, dft, stats, k, k1Micros, bMicros,
-      excludeSelf = true)
-    val out = ranked.localCheckpoint(true)
-    queryTerms.unpersist()
-    out
+    // ONE generation serves this query, pinned for all of its reads
+    IndexGen.withPinned(dir) { cur =>
+      val postings = readIndex(spark, cur, "postings")
+      val qw = Window.partitionBy("query_id")
+        .orderBy(col("tf").desc, col("term"))
+      val queryTerms = postings.where(isQueryDoc)
+        .select(col("doc_id").as("query_id"), col("term"), col("tf"))
+        .withColumn("trk", row_number().over(qw))
+        .where(col("trk") <= nTerms)
+        .select("query_id", "term")
+        .persist()
+      val terms = queryTerms.select("term").distinct()
+        .limit(maxQueryTerms + 1).collect().map(_.getString(0)).toSeq
+      require(terms.length <= maxQueryTerms,
+        s"moreLikeThisIndexed: > $maxQueryTerms distinct query terms — the " +
+          "query workload is not workload-sized; raise maxQueryTerms " +
+          "deliberately or shrink the query set")
+      val qp = prunedPostings(spark, cur, terms)
+      val stats = readIndex(spark, cur, "stats")
+      val ranked = rankTopK(queryTerms, qp, postingsDf(qp), stats, k, k1Micros,
+        bMicros, excludeSelf = true)
+      val out = ranked.localCheckpoint(true)
+      queryTerms.unpersist()
+      out
+    }
   }
 
   /** "More like this": for each query document (rows matching `isQuery`),

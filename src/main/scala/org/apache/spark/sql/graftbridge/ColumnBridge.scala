@@ -13,8 +13,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * `classic.ExpressionUtils` is `private[sql]`, so the accessors live in a
   * subpackage of `org.apache.spark.sql` — the established pattern for
   * libraries extending Catalyst (the same access path Spark's own
-  * connectors use). This and [[PlanBridge]] are the only members of that
-  * namespace in this repo; everything else is under `graft`.
+  * connectors use). This, [[PlanBridge]] and [[ExecutionBridge]] are the
+  * only members of that namespace in this repo; everything else is under
+  * `graft`.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

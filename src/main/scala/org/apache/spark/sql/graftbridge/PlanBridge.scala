@@ -1,6 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, classic}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Plan access `classic.Dataset.ofRows` is `private[sql]` for; see
@@ -11,9 +13,13 @@ object PlanBridge {
     * (`df.queryExecution.toRdd`), the way `Dataset.checkpoint` rebuilds a
     * relation: a later query over it reuses that RDD's computed shuffle
     * outputs instead of planning and running `df`'s lineage again. */
-  def overExecuted(df: DataFrame): DataFrame = {
+  def overExecuted(df: DataFrame): DataFrame = overRows(df, df.queryExecution.toRdd)
+
+  /** `df` as a relation over `rows`: its output rows, partitioned as its
+    * executed RDD (that RDD itself, or a persisted copy of it). */
+  def overRows(df: DataFrame, rows: RDD[InternalRow]): DataFrame = {
     val ds = df.asInstanceOf[classic.Dataset[_]]
     classic.Dataset.ofRows(ds.sparkSession,
-      LogicalRDD.fromDataset(ds.queryExecution.toRdd, ds, isStreaming = false))
+      LogicalRDD.fromDataset(rows, ds, isStreaming = false))
   }
 }

@@ -1,13 +1,50 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.DriverGraph
 import graft.pipeline.{IndexGen, Search}
 
 /** BM25 ranking semantics (rational-idf variant, exact BIGINT scoring). */
 class SearchSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  /** Input rows the scans of `body`'s jobs read: `body` runs under a fresh
+    * job group, and a marker job run after it tells when the listener bus
+    * has delivered every task end of those jobs. */
+  private def rowsRead(body: => Any): Long = {
+    val sc = spark.sparkContext
+    val group = s"rows-read-${java.util.UUID.randomUUID()}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val delivered = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => e.stageIds.foreach(stages.add)
+          case Some(g) if g == s"$group-marker" => delivered.countDown()
+          case _ =>
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "rowsRead")
+      body
+      sc.setJobGroup(s"$group-marker", "rowsRead marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(delivered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      read.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
 
   private def topk(docs: Seq[(Long, String)], terms: Seq[String], k: Int = 10) =
     Search.bm25TopK(docs.toDF("doc_id", "text"), "doc_id", "text",
@@ -92,14 +129,28 @@ class SearchSpec extends AnyFunSuite {
     assert(viaIndex == direct)
     // the build-once/query-many scale property: the query-term list reaches
     // the postings parquet scan as a pushed In filter (with the term-sorted
-    // layout that is a row-group seek, not an index scan)
-    val plan = Search.bm25TopKIndexed(spark, dir, qs, k = 10)
+    // layout that is a row-group seek, not an index scan) in the relation
+    // both query paths read, and the served query reads fewer postings
+    // rows than the index holds ("window" sorts into one of the two files)
+    val plan = Search.prunedPostings(spark, IndexGen.resolve(dir), qs.flatMap(_._2))
       .queryExecution.executedPlan.toString
     assert(plan.contains("In(term"), s"no In(term, ...) pushdown:\n$plan")
+    val total = spark.read.parquet(s"${IndexGen.resolve(dir)}/postings").count()
+    val read = rowsRead(Search.bm25TopKIndexed(spark, dir, Seq(2L -> Seq("window")), k = 10))
+    assert(read > 0 && read < total, s"served query read $read of $total postings rows")
+    // the Spark plan (bound 0) ranks the bounded job's cached scan: beyond
+    // the driver path's reads it reads at most the cached pruned rows once
+    // per branch (postings join, df count); a second parquet scan would
+    // read the whole row group again ("window" is 1 row of its file's 7)
+    val pruned = Search.prunedPostings(spark, IndexGen.resolve(dir), Seq("window")).count()
+    val planRead = rowsRead(Search.topKIndexed(spark, dir, Seq(2L -> Seq("window")), 10,
+      1200000L, 750000L, 0L))
+    assert(planRead <= read + 2 * pruned,
+      s"Spark plan read $planRead rows, driver path $read, $pruned pruned")
   }
 
   test("refreshIndex equals a from-scratch rebuild relation-for-relation") {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, sum}
     // shared terms (spark, merge), batch-only terms (stream, batch), a
     // token-less batch doc (weighs on n but not on postings/sum_dl)
     val docs = Seq(
@@ -115,14 +166,17 @@ class SearchSpec extends AnyFunSuite {
     val refreshedDir =
       java.nio.file.Files.createTempDirectory("graft_bm25_refresh").toString
     Search.buildIndex(ledger, "doc_id", "text", refreshedDir, nFiles = 2)
-    Search.refreshIndex(spark, refreshedDir, batch, "doc_id", "text",
-      batchFiles = 2)
+    Search.refreshIndex(spark, refreshedDir, batch, "doc_id", "text")
     val rebuiltDir =
       java.nio.file.Files.createTempDirectory("graft_bm25_rebuild").toString
     Search.buildIndex(docs, "doc_id", "text", rebuiltDir, nFiles = 2)
-    def rel(dir: String, name: String): Set[String] =
-      spark.read.parquet(s"${IndexGen.resolve(dir)}/$name").collect()
-        .map(_.toSeq.mkString("|")).toSet
+    // termdf as a reader sees it: refresh appends per-batch df deltas,
+    // so a term's df is the sum of its rows
+    def rel(dir: String, name: String): Set[String] = {
+      val r = spark.read.parquet(s"${IndexGen.resolve(dir)}/$name")
+      (if (name == "termdf") r.groupBy("term").agg(sum("df").cast("long").as("df")) else r)
+        .collect().map(_.toSeq.mkString("|")).toSet
+    }
     for (name <- Seq("postings", "termdf", "stats"))
       assert(rel(refreshedDir, name) == rel(rebuiltDir, name),
         s"$name diverged between refresh and rebuild")
@@ -154,7 +208,7 @@ class SearchSpec extends AnyFunSuite {
       "doc_id", "text", dir, nFiles = 2)
     Search.refreshIndex(spark, dir,
       docs.where(col("doc_id") > 3 && col("doc_id") <= 6),
-      "doc_id", "text", batchFiles = 2)
+      "doc_id", "text")
     Search.compactIndex(spark, dir, nFiles = 2)
     def rel(d: String, name: String): Set[String] =
       spark.read.parquet(s"${IndexGen.resolve(d)}/$name").collect()
@@ -174,7 +228,7 @@ class SearchSpec extends AnyFunSuite {
     // a post-compaction refresh appends onto the new generation and the
     // served results still equal the direct full-corpus path
     Search.refreshIndex(spark, dir, docs.where(col("doc_id") > 6),
-      "doc_id", "text", batchFiles = 2)
+      "doc_id", "text")
     val qs = Seq(0L -> Seq("merge", "stream"), 1L -> Seq("spark", "dog"))
     val direct = Search.bm25TopK(docs, "doc_id", "text", qs, k = 10)
       .orderBy("query_id", "rk").collect().toSeq
@@ -259,7 +313,7 @@ class SearchSpec extends AnyFunSuite {
         "doc_id", "text", twin, nFiles = 2)
       for (b <- 6L to hi)
         Search.refreshIndex(spark, twin, docs.where(col("doc_id") === b),
-          "doc_id", "text", batchFiles = 2)
+          "doc_id", "text")
       legal += Search.bm25TopKIndexed(spark, twin, qs, k = 10)
         .orderBy("query_id", "rk").collect().toSeq
     }
@@ -278,9 +332,9 @@ class SearchSpec extends AnyFunSuite {
     reader.start()
     try {
       Search.refreshIndex(spark, dir, docs.where(col("doc_id") === 6),
-        "doc_id", "text", batchFiles = 2)
+        "doc_id", "text")
       Search.refreshIndex(spark, dir, docs.where(col("doc_id") === 7),
-        "doc_id", "text", batchFiles = 2)
+        "doc_id", "text")
     } finally { stop.set(true); reader.join() }
     assert(failure.isEmpty, s"concurrent reader failed: ${failure.map(_.toString)}")
     // the final chain serves exactly the full-corpus direct results
@@ -292,6 +346,118 @@ class SearchSpec extends AnyFunSuite {
     // steady state: serving generation + one-cycle grace predecessor
     assert(new java.io.File(dir).listFiles()
       .count(_.getName.startsWith("gen_")) == 2)
+  }
+
+  /** Top-k from the driver path and from the forced Spark plan, ordered;
+    * asserts both have the same schema and rows. */
+  private def bothPaths(dir: String, qs: Seq[(Long, Seq[String])], k: Int = 10,
+      k1Micros: Long = 1200000L, bMicros: Long = 750000L): Seq[Row] = {
+    def run(bound: Long) = Search.topKIndexed(spark, dir, qs, k, k1Micros, bMicros, bound)
+    val d = run(DriverGraph.MaxEdges)
+    val p = run(0L)
+    assert(d.schema == p.schema, "driver path and Spark plan schemas differ")
+    val dr = d.orderBy("query_id", "rk").collect().toSeq
+    assert(dr == p.orderBy("query_id", "rk").collect().toSeq,
+      "driver path and Spark plan rows differ")
+    // at the pruned row count (partitions past their share of the bound
+    // are packed by a second job) and one under it (the Spark plan)
+    val rows = Search.prunedPostings(spark, IndexGen.resolve(dir), qs.flatMap(_._2)).count()
+    for (bound <- Seq(rows, rows - 1) if bound > 0)
+      assert(run(bound).orderBy("query_id", "rk").collect().toSeq == dr,
+        s"bound $bound of $rows pruned rows")
+    dr
+  }
+
+  private def tmpDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(tag).toString
+
+  test("driver-path top-k equals the forced Spark plan and bm25TopK on seeded " +
+      "corpora: ties, repeated and absent terms, token-less docs, refresh deltas") {
+    import org.apache.spark.sql.functions.col
+    val vocab = Vector("spark", "merge", "join", "filter", "stream", "batch",
+      "window", "dog", "cat", "fox")
+    for (seed <- 1 to 3) {
+      val rng = new scala.util.Random(seed)
+      val base = (1L to 40L).map { id =>
+        val n = rng.nextInt(7) // 0 tokens: a token-less doc
+        id -> (if (n == 0) "... --" else Seq.fill(n)(vocab(rng.nextInt(vocab.size))).mkString(" "))
+      }
+      // exact copies of earlier docs: equal scores, ties broken by doc_id
+      val docs = (base ++ base.take(6).map { case (id, t) => (id + 100, t) }).toDF("doc_id", "text")
+      val qs = Seq(
+        0L -> Seq(vocab(rng.nextInt(vocab.size))),
+        1L -> Seq("merge", "merge", "join"), // a repeated term
+        2L -> Seq("absentterm", "spark"), // a term absent from the index
+        3L -> Seq("absentterm"),
+        4L -> Seq(vocab(rng.nextInt(vocab.size)), vocab(rng.nextInt(vocab.size))))
+      val direct = Search.bm25TopK(docs, "doc_id", "text", qs, k = 5)
+        .orderBy("query_id", "rk").collect().toSeq
+      val built = tmpDir("graft_bm25_paths")
+      Search.buildIndex(docs, "doc_id", "text", built, nFiles = 2)
+      assert(bothPaths(built, qs, k = 5) == direct, s"seed=$seed build")
+      // a refresh chain: two termdf deltas, postings file sets appended
+      val chained = tmpDir("graft_bm25_paths_chain")
+      Search.buildIndex(docs.where(col("doc_id") <= 20), "doc_id", "text", chained, nFiles = 2)
+      Search.refreshIndex(spark, chained,
+        docs.where(col("doc_id") > 20 && col("doc_id") <= 40), "doc_id", "text")
+      Search.refreshIndex(spark, chained, docs.where(col("doc_id") > 40), "doc_id", "text")
+      assert(bothPaths(chained, qs, k = 5) == direct, s"seed=$seed refresh chain")
+    }
+  }
+
+  test("driver path raises the Spark plan's ANSI overflow error") {
+    val dir = tmpDir("graft_bm25_ansi")
+    Search.buildIndex(Seq((1L, "spark merge"), (2L, "merge join")).toDF("doc_id", "text"),
+      "doc_id", "text", dir, nFiles = 2)
+    def overflowed(bound: Long): Boolean = {
+      val e = intercept[Exception] {
+        Search.topKIndexed(spark, dir, Seq(0L -> Seq("merge")), 5,
+          Long.MaxValue / 2, 750000L, bound).collect()
+      }
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("ARITHMETIC_OVERFLOW"))
+    }
+    assert(overflowed(DriverGraph.MaxEdges) && overflowed(0L))
+  }
+
+  test("a generation whose writer throws is not published and the next " +
+      "flip prunes its orphan") {
+    val docs = Seq((1L, "spark merge join"), (2L, "filter cat dog")).toDF("doc_id", "text")
+    val dir = tmpDir("graft_bm25_failed_gen")
+    Search.buildIndex(docs, "doc_id", "text", dir, nFiles = 2)
+    val qs = Seq(0L -> Seq("merge", "dog"))
+    val before = Search.bm25TopKIndexed(spark, dir, qs, 5).collect().toSeq
+    val serving = IndexGen.current(dir)
+    val e = intercept[IllegalStateException] {
+      IndexGen.publish(spark, dir)(
+        gen => spark.range(3).write.parquet(s"$gen/ok"),
+        _ => throw new IllegalStateException("writer failed"))
+    }
+    assert(e.getMessage == "writer failed")
+    assert(IndexGen.current(dir) == serving)
+    assert(Search.bm25TopKIndexed(spark, dir, qs, 5).collect().toSeq == before)
+    val gens = () => new java.io.File(dir).list().filter(_.startsWith("gen_")).sorted.toSeq
+    assert(gens() == Seq("gen_000000", "gen_000001")) // the orphan
+    Search.compactIndex(spark, dir, nFiles = 2)
+    assert(gens() == Seq("gen_000000", "gen_000002"))
+    assert(Search.bm25TopKIndexed(spark, dir, qs, 5).collect().toSeq == before)
+  }
+
+  test("a pinned generation survives two flips and is pruned once unpinned") {
+    val docs = Seq((1L, "spark merge join"), (2L, "filter cat dog")).toDF("doc_id", "text")
+    val dir = tmpDir("graft_bm25_pin")
+    Search.buildIndex(docs, "doc_id", "text", dir, nFiles = 2)
+    val pinned = IndexGen.withPinned(dir) { gen =>
+      Search.compactIndex(spark, dir, nFiles = 2)
+      Search.compactIndex(spark, dir, nFiles = 2)
+      // two flips later, outside the one-cycle grace window, still whole
+      assert(spark.read.parquet(s"$gen/postings").count() == 6L)
+      gen
+    }
+    assert(new java.io.File(pinned).isDirectory)
+    Search.compactIndex(spark, dir, nFiles = 2)
+    assert(!new java.io.File(pinned).exists())
+    assert(new java.io.File(dir).list().count(_.startsWith("gen_")) == 2)
   }
 
   test("rrfFuse sums reciprocal ranks, handles single-list docs, ranks top-k") {

@@ -115,6 +115,20 @@ class SimilaritySpec extends AnyFunSuite {
       nCentroids = 16, nprobe = 6)))
   }
 
+  test("IVF search guard: fails at maxQueryRows + 1 query rows, by name, " +
+      "and serves exactly maxQueryRows") {
+    val pred = col("vec_id") <= 3L
+    val m = Similarity.prepared(embs).where(pred).count()
+    assert(m == 3L)
+    def search(bound: Long) = graft.pipeline.Ivf.searchTopK(embs, pred, k = 2,
+      nCentroids = 2, maxQueryRows = bound)
+    val e = intercept[IllegalArgumentException](search(m - 1))
+    assert(e.getMessage == "requirement failed: IVF search broadcasts the query " +
+      s"set: predicate matched $m rows > maxQueryRows=${m - 1}; batch the " +
+      "queries or raise the bound explicitly for a corpus-scale join")
+    assert(search(m).collect().toSet == search(100000L).collect().toSet)
+  }
+
   test("IVF standing index: refresh == rebuild under frozen centroids, " +
       "drift bookkeeping drives the retrain trigger") {
     val real = Tables.embeddings(spark, "/root/testdata/sf0.001")
